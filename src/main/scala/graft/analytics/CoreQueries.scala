@@ -56,20 +56,12 @@ object CoreQueries {
     // column — engine-version robust where the percentile/quantile_cont
     // pairing is only empirically bitwise-equal. Two column-pruned passes
     // read DISJOINT column bytes in a columnar format, so they are not
-    // double I/O; the single-scan stacked alternative
-    // (Pct.relationStacked) measured 1.6x SLOWER warm at sf0.1
-    // (graft.TimePct: 2.6 s vs 1.6 s — the explode doubles the rows
-    // through the grid aggregation).
-    // r22 (VERDICT r21 item 5): the histogram-selection alternative for
-    // the near-unique p95 column (Pct.relationSelect — 3 bounded passes
-    // instead of the corpus-sized grid window) was built, proven
-    // BITWISE-equal (PropertiesSpec), oracle-verified hash-green at
-    // sf0.01+sf0.1, and MEASURED SLOWER at the driver's scale: same-
-    // session TimeQ warm 2.37 s vs 2.12 s, 25 vs 13 jobs — the window it
-    // removes costs ~0.6 s here while its extra passes add ~12
-    // driver-paced jobs. The relationStacked precedent applies: the
-    // selection form is kept property-tested for genuinely corpus-sized
-    // grids at cluster scale; the test-SF winner stays wired.
+    // double I/O. A single-scan stacked form measured 1.6x SLOWER warm at
+    // sf0.1 (2.6 s vs 1.6 s — the explode doubles the rows through the
+    // grid aggregation), and a histogram-selection form for the p95 column
+    // measured slower too (2.37 s vs 2.12 s warm, 25 vs 13 jobs); both were
+    // retired — numbers in PLANS.md "Retired measurement harnesses" and
+    // r22 "Rejected with numbers".
     val pcts = Pct.relation(banded, Seq("price_band"), "l_discount",
         Seq("mdisc" -> 0.5))
       .join(Pct.relation(banded, Seq("price_band"), "l_extendedprice",

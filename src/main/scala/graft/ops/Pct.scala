@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -69,216 +69,6 @@ object Pct {
         min(when(col("__cum") > lo, col(valueCol))).as(s"__a_$alias"),
         min(when(col("__cum") > lo + 1, col(valueCol))).as(s"__b_$alias"),
         max(g).as(s"__g_$alias")) // g is constant per key; max just picks it
-    }
-    val agged =
-      if (keys.isEmpty) vcc.agg(aggs.head, aggs.tail: _*)
-      else vcc.groupBy(keyCols: _*).agg(aggs.head, aggs.tail: _*)
-    qs.foldLeft(agged) { case (d, (alias, _)) =>
-      val a = col(s"__a_$alias").cast("double")
-      val b = coalesce(col(s"__b_$alias"), col(s"__a_$alias")).cast("double")
-      d.withColumn(alias, a + (b - a) * col(s"__g_$alias"))
-        .drop(s"__a_$alias", s"__b_$alias", s"__g_$alias")
-    }
-  }
-
-  /** Multi-column variant: exact percentiles of SEVERAL value columns in
-    * ONE scan of `df` — the grid pass stacks (column-tag, value) pairs via
-    * a generator, so profiling k columns costs one table read instead of
-    * k. Values ride as doubles (exact for double and integer sources), so
-    * the order statistics and interpolation are bitwise what [[relation]]
-    * produces per column; the SQL mirror therefore stays per-column
-    * [[ctes]] splices — the oracle recomputes the same grid CONTENT with
-    * the same rank/interp ops, and how the grid was produced cannot
-    * affect equality. Aliases must be unique across all columns.
-    *
-    * MEASURED LOSER on parquet (graft.TimePct, sf0.1 lineitem, warm:
-    * stacked 2.6 s vs two per-column passes 1.6 s): per-column passes
-    * read DISJOINT column bytes in a columnar format — k passes are not
-    * k× I/O — while the stack explode multiplies the rows flowing
-    * through the grid aggregation by k. Reach for this only when the
-    * source is row-oriented or a scan carries per-row cost independent
-    * of projection width; parquet callers should prefer k× [[relation]].
-    * Kept wired-nowhere but property-tested (bitwise equality with
-    * [[relation]], PropertiesSpec). */
-  def relationStacked(df: DataFrame, keys: Seq[String],
-      cols: Seq[(String, Seq[(String, Double)])]): DataFrame = {
-    require(cols.nonEmpty && cols.forall(_._2.nonEmpty))
-    // a duplicate alias would emit duplicate __a_/__b_/__g_ agg columns and
-    // only fail much later with an ambiguous-reference AnalysisException
-    require(cols.flatMap(_._2.map(_._1)).distinct.size == cols.map(_._2.size).sum,
-      s"aliases must be unique across all columns, got ${cols.flatMap(_._2.map(_._1))}")
-    val keyCols = keys.map(col)
-    val stacked = df.select(keyCols :+ explode(array(cols.map { case (c, _) =>
-        struct(lit(c).as("__which"), col(c).cast("double").as("__v"))
-      }: _*)).as("__sv"): _*)
-      .select(keyCols :+ col("__sv.__which").as("__which") :+
-        col("__sv.__v").as("__v"): _*)
-      .where(col("__v").isNotNull)
-    val vc = stacked.groupBy((keyCols :+ col("__which")) :+ col("__v"): _*)
-      .agg(count(lit(1)).as("__c"))
-    val part = keyCols :+ col("__which")
-    val cumW = Window.partitionBy(part: _*).orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val allW = Window.partitionBy(part: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val vcc = vc
-      .withColumn("__cum", sum(col("__c")).over(cumW))
-      .withColumn("__nn", sum(col("__c")).over(allW))
-    val aggs = cols.flatMap { case (c, qs) => qs.flatMap { case (alias, q) =>
-      val r = (col("__nn") - 1).cast("double") * lit(q)
-      val lo = floor(r)
-      val g = r - lo.cast("double")
-      val isC = col("__which") === c
-      Seq(
-        min(when(isC && col("__cum") > lo, col("__v"))).as(s"__a_$alias"),
-        min(when(isC && col("__cum") > lo + 1, col("__v"))).as(s"__b_$alias"),
-        max(when(isC, g)).as(s"__g_$alias"))
-    }}
-    val agged =
-      if (keys.isEmpty) vcc.agg(aggs.head, aggs.tail: _*)
-      else vcc.groupBy(keyCols: _*).agg(aggs.head, aggs.tail: _*)
-    cols.flatMap(_._2).foldLeft(agged) { case (d, (alias, _)) =>
-      val a = col(s"__a_$alias")
-      val b = coalesce(col(s"__b_$alias"), col(s"__a_$alias"))
-      d.withColumn(alias, a + (b - a) * col(s"__g_$alias"))
-        .drop(s"__a_$alias", s"__b_$alias", s"__g_$alias")
-    }
-  }
-
-  /** Exact interpolated percentiles via two-level BUCKET SELECTION — the
-    * same emitted doubles as [[relation]], a different (cheaper) way to
-    * locate the two order statistics when the value column is
-    * near-unique (r22, the q02 l_extendedprice case: the grid there is
-    * ~the row count, so [[relation]]'s cumulative window funnels the
-    * whole corpus through max(|keys|) sort partitions — measured as the
-    * dominant stage of the suite's slowest query).
-    *
-    * Three bounded passes instead of one corpus-sized sort:
-    *   1. per-key (count, min, max) — a plain hash aggregation;
-    *   2. a coarse histogram over `Buckets` equal-width bins of
-    *      [min, max] — hash aggregation, ≤ |keys|·Buckets rows; a tiny
-    *      per-key window over the histogram locates, for each quantile,
-    *      the bin holding order statistic a (first bin with cum > lo)
-    *      and b (first with cum > lo+1) plus the exact row count below
-    *      each bin — all integer;
-    *   3. re-scan filtered to the located bins (a few rows per key),
-    *      build [[relation]]'s distinct-value grid on that subset only,
-    *      and pick a = min(v: cum > lo), b = min(v: cum > lo+1) with the
-    *      global cum reconstructed as bin-offset + within-bin running
-    *      count.
-    *
-    * WHY THE ORACLE IS UNCHANGED: a and b are exact multiset order
-    * statistics — properties of the DATA, not of the algorithm that
-    * finds them (ties, duplicates and all: "min value whose cumulative
-    * multiplicity exceeds lo" is what both constructions compute, bin
-    * offsets being exact integers) — and every FLOATING-POINT step
-    * (r = (nn−1)::DOUBLE · q, g = r − floor(r), a + (b − a)·g with a/b
-    * promoted first) is the same expression sequence [[relation]] and
-    * the [[ctes]] SQL mirror run. Bin boundaries are Spark-side-only
-    * float arithmetic and only need monotonicity, never engine parity.
-    * PropertiesSpec pins bitwise equality with [[relation]] across ties,
-    * nulls, constant columns and key skew.
-    *
-    * Intended for LOW key cardinality (the per-key stats and bin map
-    * ride broadcast joins) with LARGE distinct-value counts; for small
-    * grids [[relation]] is already optimal.
-    *
-    * MEASURED LOSER at the driver's test scale (r22, q02's p95 pass,
-    * same-session TimeQ at sf0.1/32c: warm 2.37 s vs 2.12 s, 25 vs 13
-    * jobs): the corpus window it removes costs only ~0.6 s there while
-    * the extra passes add ~12 driver-paced jobs — at test SFs q02 is
-    * fixed-cost-bound, not sort-bound. Kept wired-nowhere but
-    * property-tested (bitwise equality with [[relation]],
-    * PropertiesSpec), the [[relationStacked]] precedent: reach for this
-    * when the per-key grid is genuinely corpus-sized on a real cluster,
-    * where one skewed sort partition is the wall and per-job overhead is
-    * noise. */
-  def relationSelect(df: DataFrame, keys: Seq[String], valueCol: String,
-                     qs: Seq[(String, Double)], buckets: Int = 8192)
-      : DataFrame = {
-    require(qs.nonEmpty, "at least one (alias, q) required")
-    require(qs.map(_._1).distinct.size == qs.size,
-      s"aliases must be unique, got ${qs.map(_._1)}")
-    require(buckets >= 2, s"need >= 2 buckets, got $buckets")
-    val keyCols = keys.map(col)
-    val base = df.where(col(valueCol).isNotNull)
-      .select((keys :+ valueCol).map(col): _*)
-    // pass 1: per-key count/min/max (min/max exact — order-free)
-    val stats0 = base.groupBy(keyCols: _*).agg(
-      count(lit(1)).as("__nn"),
-      min(col(valueCol)).as("__vmn"), max(col(valueCol)).as("__vmx"))
-    val stats = if (keys.isEmpty) stats0 else broadcast(stats0)
-    def joinStats(rel: DataFrame, st: DataFrame): DataFrame =
-      if (keys.isEmpty) rel.crossJoin(st) else rel.join(st, keys)
-    // the monotone bin of v: floor((v−min)/width) clamped into range —
-    // Spark-side only; needs monotonicity in v, never engine parity. A
-    // constant column (min = max) degenerates to one bin, which is just
-    // the unbucketed grid.
-    def binOf(v: Column): Column = {
-      val width = (col("__vmx") - col("__vmn")) / lit(buckets.toDouble)
-      when(col("__vmx") > col("__vmn"),
-        greatest(least(floor((v - col("__vmn")) / width),
-          lit(buckets - 1L)), lit(0L)))
-        .otherwise(lit(0L))
-    }
-    // pass 2: histogram + per-quantile bin location (all integer)
-    val hist = joinStats(base, stats)
-      .groupBy((keyCols :+ binOf(col(valueCol)).as("__bin")): _*)
-      .agg(count(lit(1)).as("__hc"))
-    val cumW = Window.partitionBy(keyCols: _*).orderBy(col("__bin"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val histC = joinStats(hist, stats)
-      .withColumn("__bcum", sum(col("__hc")).over(cumW))
-    // per (alias, q): the bins holding order statistics a and b — lo as
-    // in relation/ctes (the identical IEEE ops). The per-bin row offset
-    // is reconstructed row-wise in pass 3 (__boff), so only the located
-    // bin ids leave this aggregation.
-    val binAggs = qs.flatMap { case (alias, q) =>
-      val r = (col("__nn") - 1).cast("double") * lit(q)
-      val lo = floor(r)
-      Seq(
-        min(when(col("__bcum") > lo, col("__bin"))).as(s"__ba_$alias"),
-        min(when(col("__bcum") > lo + 1, col("__bin"))).as(s"__bb_$alias"))
-    }
-    val binTargets0 = histC.groupBy(keyCols: _*).agg(
-      binAggs.head, binAggs.tail: _*)
-    val binTargets = if (keys.isEmpty) binTargets0 else broadcast(binTargets0)
-    // every bin any quantile needs: rows of bins in [ba, bb] per alias
-    def wanted(bin: Column): Column = qs.map { case (alias, _) =>
-      bin >= col(s"__ba_$alias") &&
-        bin <= coalesce(col(s"__bb_$alias"), col(s"__ba_$alias"))
-    }.reduce(_ || _)
-    // per-bin global offset (rows in strictly smaller bins) — broadcast
-    // with the histogram-sized relation
-    val offs0 = histC.select((keyCols :+ col("__bin") :+
-      (col("__bcum") - col("__hc")).as("__boff")): _*)
-    val offs = if (keys.isEmpty) offs0 else broadcast(offs0)
-    // pass 3: the refinement subset's distinct-value grid with GLOBAL
-    // cum = bin offset + within-bin running count (each distinct v lives
-    // in exactly one bin, so this is relation's cum restricted to the
-    // subset)
-    val sub0 = joinStats(base, stats)
-      .withColumn("__bin", binOf(col(valueCol)))
-      .drop("__nn", "__vmn", "__vmx")
-    val sub = joinStats(sub0, binTargets).where(wanted(col("__bin")))
-    val grid = sub.groupBy((keyCols :+ col("__bin") :+ col(valueCol)): _*)
-      .agg(count(lit(1)).as("__c"))
-    val inBinW = Window.partitionBy((keyCols :+ col("__bin")): _*)
-      .orderBy(col(valueCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val gridOff =
-      (if (keys.isEmpty) grid.join(offs, Seq("__bin"))
-       else grid.join(offs, keys :+ "__bin"))
-      .withColumn("__cum", col("__boff") + sum(col("__c")).over(inBinW))
-    val vcc = joinStats(gridOff, stats)
-    val aggs = qs.flatMap { case (alias, q) =>
-      val r = (col("__nn") - 1).cast("double") * lit(q)
-      val lo = floor(r)
-      val g = r - lo.cast("double")
-      Seq(
-        min(when(col("__cum") > lo, col(valueCol))).as(s"__a_$alias"),
-        min(when(col("__cum") > lo + 1, col(valueCol))).as(s"__b_$alias"),
-        max(g).as(s"__g_$alias"))
     }
     val agged =
       if (keys.isEmpty) vcc.agg(aggs.head, aggs.tail: _*)

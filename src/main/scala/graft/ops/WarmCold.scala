@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
-/** q132: warm/cold execution profile as a relation — the TimeQ rep1/rep2
+/** q132: warm/cold execution profile as a relation — the cold/warm rep
   * split promoted from PLANS.md bookkeeping to a queryable output,
   * completing the self-observability family (q103 cost audit: which query
   * is expensive; q129 scan audit: why its scan is; q130 latency
@@ -103,7 +103,7 @@ object WarmCold {
     * arg-extrema, JSON-projection, pushdown time-range) so the relation's
     * own bench cost stays ~2s — each profiled query re-executes twice.
     * Regression triage on the expensive families calls [[warmColdProfile]]
-    * with those names directly — the TimeQ workflow as a relation. */
+    * with those names directly — [[graft.Profile]]'s reps as a relation. */
   def q132WarmColdProfile(spark: SparkSession, dir: String): DataFrame =
     warmColdProfile(spark, dir,
       Seq("q14_props_json", "q50_arg_extrema", "q53_realtime_metrics"))

@@ -96,7 +96,7 @@ object WarmLedger {
 
   /** Profile `names` at `dir` and write the round's partition. `source`
     * distinguishes profiler-measured rows from backfilled prose numbers
-    * (r10's rows carry the TimeQ warm times recorded in PLANS.md, with
+    * (r10's rows carry the warm times recorded in PLANS.md r10, with
     * nulls where only warm was written down). Anomalous readings
     * (warm > cold — see [[anomalousCond]]) are re-profiled up to
     * `retries` times before the partition is written. A retry runs in an

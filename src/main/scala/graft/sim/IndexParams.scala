@@ -55,8 +55,8 @@ object IndexParams {
     * (bit-identical to the retired ladder, spec-pinned), so assignment
     * cost is k·dims multiply-adds per row at
     * any k — measured warm on 200k×64 vectors: kernel 0.33/0.60/1.66 s at
-    * k=256/1024/4096 vs ladder 2.26/14.0/34.0 s (graft.TimeCentroids,
-    * PLANS.md r20). k now tracks √n to n ≈ 16.7M vectors per layout; the
+    * k=256/1024/4096 vs ladder 2.26/14.0/34.0 s (PLANS.md
+    * r20). k now tracks √n to n ≈ 16.7M vectors per layout; the
     * 4096 ceiling is the next genuine driver bound, not codegen:
     * [[Similarity.ivfCentroids]]' Lloyd step collects k×dim averaged
     * components per iteration (262k rows at k=4096 — fine; 4M at 65536 —
@@ -75,7 +75,8 @@ object IndexParams {
     * buckets×writer-tasks files; past the cap, widen targetRows instead).
     * At 10⁹ vectors × 4 tables this gives 4,000 buckets, so a 100-probe
     * batch touches ≤ 400/4000 = 10% of the files — the pruning fraction
-    * the r13 TimeIndex measurement shows is the whole game. */
+    * the r13 persisted-index measurement (PLANS.md) shows is the whole
+    * game. */
   def indexBuckets(n: Long, tables: Int, targetRows: Long = 1000000L,
                    minBuckets: Int = 64, maxBuckets: Int = 65536): Int = {
     val rows = math.max(1L, n * tables)

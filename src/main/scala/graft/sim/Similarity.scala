@@ -25,24 +25,14 @@ import graft.ops.Exprs
   */
 object Similarity {
 
-  /** Σ aᵢ·bᵢ in index order, double precision (composed-expression form —
-    * interpreted; kept for contexts without function registration). */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine similarity via the native codegen'd [[graft.functions.CosineSim]]
-    * kernel — same left-fold double semantics as the composed form and the
-    * DuckDB oracle, ~40× faster on pairwise scans (HOF lambdas run
-    * interpreted). Callers must have run [[ensureRegistered]] on the session
+    * kernel — the left-fold double semantics of the DuckDB oracle formula,
+    * ~40× faster on pairwise scans than the composed HOF form (whose
+    * lambdas run interpreted; the spec keeps it as the bit-identity
+    * reference). Callers must have run [[ensureRegistered]] on the session
     * (every query entry here does). */
   def cosine(a: Column, b: Column): Column =
     call_function("cosine_sim", a, b)
-
-  /** Composed-expression cosine (no registration needed). */
-  def cosineComposed(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
   /** Idempotent registration of the native similarity kernels on a session. */
   def ensureRegistered(spark: SparkSession): Unit = {
@@ -79,23 +69,12 @@ object Similarity {
     * plane index so independent hash tables draw disjoint hyperplanes.
     *
     * Runs on the native codegen'd [[graft.functions.HyperplaneSig]] kernel
-    * (callers must [[ensureRegistered]]); bit-identical to
-    * [[lshSignatureComposed]], which the kernel spec asserts. */
+    * (callers must [[ensureRegistered]]); bit-identical to the composed
+    * HOF form (three nested interpreted lambdas — made the signature stage
+    * dominate q100's plan at 8.6 s), which the kernel spec keeps as its
+    * reference. */
   def lshSignature(e: Column, planes: Int, offset: Column = lit(0)): Column =
     call_function("hyperplane_sig", e, lit(planes), offset)
-
-  /** Composed-HOF form of [[lshSignature]] — three nested lambdas, every
-    * one interpreted (~planes×dim expression-tree walks per row; made the
-    * signature stage dominate q100's plan at 8.6 s). Kept as the
-    * registration-free fallback and the kernel's equivalence witness. */
-  def lshSignatureComposed(e: Column, planes: Int, offset: Column = lit(0)): Column =
-    aggregate(
-      transform(sequence(offset, offset + lit(planes - 1)), p =>
-        when(aggregate(zip_with(e, sequence(lit(0), size(e) - 1),
-            (x, d) => x.cast("double") * sin(lit(131.0) * p.cast("double") +
-              (lit(17.0) + lit(0.731) * p.cast("double")) * d.cast("double"))),
-          lit(0.0), (acc, v) => acc + v) >= 0, lit(1L)).otherwise(lit(0L))),
-      lit(0L), (acc, bit) => acc * 2 + bit)
 
   /** q27: ANN via hyperplane LSH, 4 independent tables × 5 planes
     * (OR-amplified: candidate if any table's bucket matches) — per-probe
@@ -181,19 +160,20 @@ object Similarity {
     * window, no shuffle.
     *
     * History (r20, the withMaxSimToProbes r8 story repeating): through
-    * r19 this unrolled one literal cosine call per centroid
-    * ([[assignLadder]] — the q27/q100 sig-table rule), which capped
+    * r19 this unrolled one literal cosine call per centroid (the
+    * greatest-struct ladder — the q27/q100 sig-table rule), which capped
     * `IndexParams.ivfK` at 256 (Janino's 64 KB generated-method limit
     * bites in the low hundreds of calls). The kernel is bitwise-identical
     * to the ladder by construction — same per-centroid cosine arithmetic,
     * same (csim desc, cid asc) tiebreak, same NaN-largest and null-row
     * routing, spec-pinned at k=40 and k=300 including zero-vector and
     * null-embedding rows — and measured FASTER at every k
-    * (graft.TimeCentroids warm, 200k×64: kernel 0.33/0.60/1.66 s vs
-    * ladder 2.26/14.0/34.0 s at k=256/1024/4096; PLANS.md r20), so the
-    * flip guard had no failure mode left to guard and the kernel is the
-    * only wired path. Assignment stays a pure function of the embedding
-    * value (the q111 recall proof leans on this). */
+    * (warm, 200k×64: kernel 0.33/0.60/1.66 s vs ladder 2.26/14.0/34.0 s
+    * at k=256/1024/4096; PLANS.md r20 "assignToCentroid ladder->kernel
+    * flip"), so the flip guard had no failure mode left to guard and the
+    * kernel is the only wired path; the ladder lives on in test scope as
+    * the spec's reference. Assignment stays a pure function of the
+    * embedding value (the q111 recall proof leans on this). */
   def assignToCentroid(emb: DataFrame, centroids: DataFrame): DataFrame = {
     val cents = centroids.select(col("cid"), col("ce")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
@@ -202,22 +182,6 @@ object Similarity {
       "assignToCentroid: empty centroid relation — the corpus behind the " +
         "layout (or rebuild survivors) has no rows")
     assignKernel(emb, cents)
-  }
-
-  /** Ladder alternative: one literal cosine kernel call per centroid.
-    * Retired as a wired path in r20 (see [[assignToCentroid]]); kept as
-    * the measured alternative TimeCentroids compares and SimilaritySpec
-    * pins bit-equal to the kernel at any k — the same role
-    * [[maxSimChunkedLadder]] plays for the probe kernel. Output is
-    * independent of `cents` order (greatest is commutative). */
-  def assignLadder(emb: DataFrame,
-                   cents: Array[(Long, Array[Double])]): DataFrame = {
-    val best = greatest(cents.map { case (c, ce) =>
-      struct(cosine(col("embedding"), typedlit(ce)).as("csim"),
-        lit(-c).as("ncid"))
-    }.toIndexedSeq: _*)
-    emb.select(col("vec_id"), col("embedding"),
-      (-best.getField("ncid")).as("cid"))
   }
 
   /** Matrix-kernel path: the whole cid-sorted centroid matrix rides one
@@ -858,14 +822,26 @@ object Similarity {
     * (bounded: |batch|×tables longs), prune the scan to their buckets
     * (`sig IN (...)` → SelectedBucketsCount), the probe batch broadcasts,
     * exact cosine re-scores, and a per-probe window takes the argmax.
-    * `probes` must carry (qid, embedding). */
+    * `probes` must carry (qid, embedding).
+    *
+    * `live = true` serves the APPENDABLE index flavor with merge-on-read
+    * DELETION semantics: rows carried by the `batch_id = −3` tombstone
+    * partition ([[graft.streaming.Streaming.tombstoneIndexRows]]) are
+    * anti-joined out before scoring — (sig, vec_id)-keyed, both sides
+    * inside the SAME pruned bucket set, so the anti-join adds no scan
+    * and no extra pruning loss. Deleted rows stay invisible from the
+    * mark's landing until the next fold physically purges them; the
+    * answer is identical before and after the purge. */
   def probeIndex(spark: SparkSession, indexTable: String, probes: DataFrame,
-                 planes: Int, tables: Int): DataFrame = {
+                 planes: Int, tables: Int, live: Boolean = false): DataFrame = {
     ensureRegistered(spark)
     val (probesLocal, probeSigs) = localizeProbes(spark, probes, planes, tables)
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim_raw").desc, col("cid"))
-    spark.table(indexTable)
+    val pruned = spark.table(indexTable)
       .filter(col("sig").isin(probeSigs.map(Long.box): _*))
+    val w = Window.partitionBy(col("qid")).orderBy(col("sim_raw").desc, col("cid"))
+    // THE merge-on-read view, applied after pruning — both sides of its
+    // anti-join sit inside the same pruned bucket set
+    (if (live) liveIndexRelation(pruned) else pruned)
       .select(col("sig"), col("vec_id").as("cid"), col("embedding").as("ce"))
       .join(broadcast(probesLocal), Seq("sig"))
       .withColumn("sim_raw", cosine(col("qe"), col("ce")))
@@ -881,34 +857,10 @@ object Similarity {
     * append, fold, delete and serve sites cannot drift). */
   val TombstoneBatchId: Long = -3L
 
-  /** Serving against the APPENDABLE index flavor with merge-on-read
-    * DELETION semantics: same literal-`sig IN` bucket-pruned shape as
-    * [[probeIndex]], but rows carried by the `batch_id = −3` tombstone
-    * partition ([[graft.streaming.Streaming.tombstoneIndexRows]]) are
-    * anti-joined out before scoring — (sig, vec_id)-keyed, both sides
-    * inside the SAME pruned bucket set, so the anti-join adds no scan
-    * and no extra pruning loss. Deleted rows stay invisible from the
-    * mark's landing until the next fold physically purges them; the
-    * answer is identical before and after the purge. */
+  /** [[probeIndex]] with merge-on-read deletion (`live = true`). */
   def probeIndexLive(spark: SparkSession, indexTable: String,
-                     probes: DataFrame, planes: Int, tables: Int): DataFrame = {
-    ensureRegistered(spark)
-    val (probesLocal, probeSigs) = localizeProbes(spark, probes, planes, tables)
-    val pruned = spark.table(indexTable)
-      .filter(col("sig").isin(probeSigs.map(Long.box): _*))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim_raw").desc, col("cid"))
-    // THE merge-on-read view, applied after pruning — both sides of its
-    // anti-join sit inside the same pruned bucket set
-    liveIndexRelation(pruned)
-      .select(col("sig"), col("vec_id").as("cid"), col("embedding").as("ce"))
-      .join(broadcast(probesLocal), Seq("sig"))
-      .withColumn("sim_raw", cosine(col("qe"), col("ce")))
-      .select(col("qid"), col("cid"), col("sim_raw")).distinct()
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("qid"), col("cid").as("retrieved_id"),
-        Exprs.dround(col("sim_raw"), 6).as("sim"))
-  }
+                     probes: DataFrame, planes: Int, tables: Int): DataFrame =
+    probeIndex(spark, indexTable, probes, planes, tables, live = true)
 
   /** q157: DELETION from the persisted index — the lifecycle arm every
     * real training-data pipeline eventually needs (takedowns,
@@ -1041,8 +993,7 @@ object Similarity {
     val probes = eSlim.filter(col("vec_id") % 7 === 0)
       .select((col("vec_id") + offset).as("qid"), col("embedding"))
     val served =
-      if (live) probeIndexLive(spark, idx, probes, planes, tables)
-      else probeIndex(spark, idx, probes, planes, tables)
+      probeIndex(spark, idx, probes, planes, tables, live)
     served.withColumn("hit",
         col("retrieved_id") === col("qid") - (offset - copyShift))
       .orderBy(col("qid"))
@@ -1127,7 +1078,7 @@ object Similarity {
     * the fold+purge composition: a victim row left standing in the
     * folded generation retrieves the original at cosine 1 and flips the
     * id. Exactness is q157's planted argument over corpus-minus-deleted
-    * ∪ copies. Cost model is MEASURED, not asserted (TimePurge converging
+    * ∪ copies. Cost model is MEASURED, not asserted (the converging
     * arm, PLANS.md r20): flat across a 1×–100× base ladder at 1%
     * live-resident debt (11–14 s at 10k-row batches regardless of base
     * size) — the second pass pays a leveled fold of the committed head
@@ -2170,15 +2121,29 @@ object Similarity {
     * the wanted cluster ids (bounded: ≤ k ints — int literals so the
     * pruning predicate matches the int-inferred partition column with no
     * cast), read only those partitions (PartitionFilters), exact-cosine
-    * re-score, per-probe argmax. `probes` must carry (qid, embedding). */
+    * re-score, per-probe argmax. `probes` must carry (qid, embedding).
+    *
+    * `live = true` adds merge-on-read deletion: candidate rows matching a
+    * tombstone mark are anti-joined out before scoring — (cid,
+    * vec_id)-keyed, the mark side pruned to the SAME wanted partitions as
+    * the candidate scan, so deletion costs one bounded side-read and no
+    * extra corpus I/O. Answers are identical before and after the
+    * physical purge. */
   def probeIvf(spark: SparkSession, idxDir: String, probes: DataFrame,
-               nprobe: Int): DataFrame = {
+               nprobe: Int, live: Boolean = false): DataFrame = {
     ensureRegistered(spark)
     val centroidsDisk = spark.read.parquet(s"$idxDir/centroids")
     val (probeClusters, wantedCids) =
       localizeProbeClusters(spark, probes, centroidsDisk, nprobe)
-    val cand = spark.read.parquet(s"$idxDir/assigned")
+    val scoped = spark.read.parquet(s"$idxDir/assigned")
       .filter(col("cid").isin(wantedCids.map(Int.box): _*))
+    val alive = if (!live) scoped else ivfTombstones(spark, idxDir) match {
+      case Some(t) => scoped.join(
+        t.filter(col("cid").isin(wantedCids.map(Int.box): _*)),
+        Seq("cid", "vec_id"), "left_anti")
+      case None => scoped
+    }
+    val cand = alive
       .select(col("cid"), col("vec_id").as("cid_vec"), col("embedding").as("ce2"))
     val wS = Window.partitionBy(col("qid")).orderBy(col("sim_raw").desc, col("cid_vec"))
     broadcast(probeClusters).join(cand, "cid")
@@ -2225,47 +2190,16 @@ object Similarity {
         .select(col("cid"), col("vec_id")))
     else None
 
-  /** [[probeIvf]] with merge-on-read deletion semantics: candidate rows
-    * matching a tombstone mark are anti-joined out before scoring —
-    * (cid, vec_id)-keyed, the mark side pruned to the SAME wanted
-    * partitions as the candidate scan, so deletion costs one bounded
-    * side-read and no extra corpus I/O. Answers are identical before and
-    * after the physical purge. */
-  def probeIvfLive(spark: SparkSession, idxDir: String, probes: DataFrame,
-                   nprobe: Int): DataFrame = {
-    ensureRegistered(spark)
-    val centroidsDisk = spark.read.parquet(s"$idxDir/centroids")
-    val (probeClusters, wantedCids) =
-      localizeProbeClusters(spark, probes, centroidsDisk, nprobe)
-    val scoped = spark.read.parquet(s"$idxDir/assigned")
-      .filter(col("cid").isin(wantedCids.map(Int.box): _*))
-    val alive = ivfTombstones(spark, idxDir) match {
-      case Some(t) => scoped.join(
-        t.filter(col("cid").isin(wantedCids.map(Int.box): _*)),
-        Seq("cid", "vec_id"), "left_anti")
-      case None => scoped
-    }
-    val cand = alive
-      .select(col("cid"), col("vec_id").as("cid_vec"), col("embedding").as("ce2"))
-    val wS = Window.partitionBy(col("qid")).orderBy(col("sim_raw").desc, col("cid_vec"))
-    broadcast(probeClusters).join(cand, "cid")
-      .withColumn("sim_raw", cosine(col("qe"), col("ce2")))
-      .select(col("qid"), col("cid_vec"), col("sim_raw"))
-      .withColumn("rn", row_number().over(wS))
-      .filter(col("rn") === 1)
-      .select(col("qid"), col("cid_vec").as("retrieved_id"),
-        Exprs.dround(col("sim_raw"), 6).as("sim"))
-  }
-
   /** Physically purge an IVF layout's tombstoned rows — PARTITION-SCOPED:
     * only the cids carrying marks are read and rewritten (dynamic
     * overwrite touches just those partition dirs), partitions left EMPTY
     * are deleted explicitly (a dynamic overwrite of zero rows is a no-op
     * — the r8 stale-partition rule, directory flavor), and the marks
     * retire LAST so a crash anywhere in the window leaves
-    * [[probeIvfLive]] correct and a re-purge idempotent. Survivors stage
-    * through a `_`-prefixed dir (never read-your-own-partition inside an
-    * overwrite). Returns (partitions touched, rows purged). */
+    * [[probeIvf]]'s live view correct and a re-purge idempotent.
+    * Survivors stage through a `_`-prefixed dir (never
+    * read-your-own-partition inside an overwrite). Returns (partitions
+    * touched, rows purged). */
   def purgeIvfTombstones(spark: SparkSession, idxDir: String): (Long, Long) = {
     val hc = spark.sparkContext.hadoopConfiguration
     val tombPath = new org.apache.hadoop.fs.Path(s"$idxDir/tombstones")
@@ -2400,7 +2334,7 @@ object Similarity {
     }
     val probes = eSlim.filter(col("vec_id") % 7 === 0)
       .select((col("vec_id") + offset).as("qid"), col("embedding"))
-    probeIvfLive(spark, idxDir, probes, nprobe)
+    probeIvf(spark, idxDir, probes, nprobe, live = true)
       .withColumn("hit",
         col("retrieved_id") === col("qid") - (offset - copyShift))
       .orderBy(col("qid"))
@@ -2668,17 +2602,16 @@ object Similarity {
     * `max_cosine_probes` matrix kernel dissolves the trade: ONE plan node
     * at any probe count, whole-stage codegen survives, and the measured
     * ordering at 10k probes × 200k corpus is kernel 4.1 s ≪ chunked
-    * ladder 16.8 s ≪ broadcast 29.6 s warm (graft.TimeProbes, PLANS.md) —
-    * so the guard no longer has a failure mode to guard against. All
-    * three formulations are bitwise-equal (same accumulation orders;
-    * pinned per-vector in SimilaritySpec); the ladder and broadcast
-    * variants remain below as the measured alternatives, broadcast being
-    * the only option for probe relations too large to collect at all. */
+    * ladder 16.8 s ≪ broadcast 29.6 s warm (PLANS.md "Big-probe-set
+    * max-sim") — so the guard no longer has a failure mode to guard
+    * against. All three formulations are bitwise-equal (same
+    * accumulation orders; pinned per-vector in SimilaritySpec, which keeps
+    * the ladder and broadcast forms as its references). */
   def withMaxSimToProbes(corpus: DataFrame, embCol: String,
                          probes: DataFrame, probeEmbCol: String): DataFrame =
     maxSimProbesKernel(corpus, embCol, probes, probeEmbCol)
 
-  /** Big-probe-set variant C (the wired default): the whole probe matrix
+  /** The wired big-probe-set plan: the whole probe matrix
     * rides ONE native [[graft.functions.MaxCosineProbes]] expression as a
     * flattened reference object with precomputed norms — one plan node,
     * one fused loop per row, whole-stage codegen at any probe count. */
@@ -2702,43 +2635,9 @@ object Similarity {
       probes.select(col(probeEmbCol)).limit(MaxCollectProbes + 1).collect()
     require(rows.length <= MaxCollectProbes,
       s"probe relation exceeds $MaxCollectProbes rows — too large to collect " +
-        "into a plan-side kernel; use maxSimBroadcastAgg (variant B), the " +
-        "path for uncollectable probe relations")
+        "into a plan-side kernel; split the probes into batches of at most " +
+        s"$MaxCollectProbes rows and take the max of the per-batch max_sim_raw")
     rows.map(_.getSeq[Float](0).map(_.toDouble).toArray)
-  }
-
-  /** Big-probe-set variant A — `max_sim_raw` as a ladder of literal
-    * cosine-kernel calls NESTED in `maxLadderProbes`-wide `greatest`
-    * chunks (`greatest(greatest(256 calls), greatest(256 calls), …)`).
-    * Still one corpus scan, zero shuffle, zero row blow-up; the nesting
-    * keeps each generated codegen method under the JIT's limits where one
-    * flat 10k-arg greatest would not. Plan size stays O(probes × dims)
-    * literals — fine at 10k probes (measured), not at 1M. */
-  def maxSimChunkedLadder(corpus: DataFrame, embCol: String,
-                          probes: DataFrame, probeEmbCol: String,
-                          chunk: Int = 256): DataFrame = {
-    val pv = collectProbeVecs(probes, probeEmbCol)
-    val chunkMax = pv.grouped(chunk).toSeq.map { g =>
-      if (g.length == 1) cosine(col(embCol), typedlit(g.head))
-      else greatest(g.map(pe => cosine(col(embCol), typedlit(pe))).toIndexedSeq: _*)
-    }
-    corpus.withColumn("max_sim_raw",
-      if (chunkMax.length == 1) chunkMax.head else greatest(chunkMax: _*))
-  }
-
-  /** Big-probe-set variant B — broadcast the probe embeddings, fan out
-    * |corpus|×|probes| rows map-side, hash-aggregate max per key with
-    * map-side combine, join back. Plan is O(1) in the probe count — the
-    * path for probe relations too large to collect into plan literals.
-    * Bitwise-identical to the ladders: max over the same float set is
-    * accumulation-order-independent. */
-  def maxSimBroadcastAgg(corpus: DataFrame, keyCol: String, embCol: String,
-                         probes: DataFrame, probeEmbCol: String): DataFrame = {
-    val perKey = corpus.select(col(keyCol), col(embCol))
-      .crossJoin(broadcast(probes.select(col(probeEmbCol).as("__probe_emb"))))
-      .groupBy(col(keyCol))
-      .agg(max(cosine(col(embCol), col("__probe_emb"))).as("max_sim_raw"))
-    corpus.join(perKey, Seq(keyCol))
   }
 
   def q116EmbeddingDecontam(spark: SparkSession, dir: String,

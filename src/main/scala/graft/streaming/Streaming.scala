@@ -350,7 +350,7 @@ object Streaming {
     * index scan. That amortizes for steady probe traffic (the scan is
     * shared by every probe in the batch and the join is the only corpus
     * work), and the scan is `tables`× the corpus rows — measured
-    * (graft.TimeIndex, 200k corpus): unpruned 3.0–3.5 s/batch vs
+    * (PLANS.md r13, 200k corpus): unpruned 3.0–3.5 s/batch vs
     * bucket-pruned 0.7–1.8 s at batches of 2–32. For anything but heavy
     * steady traffic, run [[graft.sim.Similarity.probeIndex]] inside a
     * `foreachBatch` sink instead — it collects each batch's signatures
@@ -523,7 +523,7 @@ object Streaming {
     * [[foldIndexLeveled]] generation partitions fold in too — the base
     * fold is the one place marks retire and purged rows physically die,
     * so it must consume every consolidated tier. Because this fold
-    * rewrites the whole base (cost linear in base rows — graft.TimeFold),
+    * rewrites the whole base (cost linear in base rows — PLANS.md r17),
     * it is the PURGE/retirement cadence, not the per-batch one: steady
     * consolidation belongs to the leveled fold.
     *
@@ -677,8 +677,8 @@ object Streaming {
 
   /** LEVELED fold — the amortized sibling of [[foldIndexBase]], closing
     * the 100× question the full fold leaves open: the base fold rewrites
-    * EVERYTHING folded so far (measured linear in base rows, graft.TimeFold
-    * / PLANS.md), so a fixed fold cadence costs QUADRATIC total work over
+    * EVERYTHING folded so far (measured linear in base rows, PLANS.md
+    * r17), so a fixed fold cadence costs QUADRATIC total work over
     * a stream's lifetime — at a 100 TB base every 16th micro-batch would
     * pay a full-corpus rewrite. This fold instead consolidates the live
     * batches 0..`uptoBatch` into binary-counter GENERATION partitions:
@@ -811,7 +811,7 @@ object Streaming {
     * discovered by a bucket-aligned semi-join (marks and rows share the
     * sig/key bucketing), untouched generations keep their files, and the
     * cost is ∝ victim-bearing partition rows, not base size (measured:
-    * graft.TimePurge, PLANS.md r18). LIVE batch partitions are never
+    * PLANS.md r18). LIVE batch partitions are never
     * touched — they belong to the stream's replay contract; their
     * victims stay hidden by the serving anti-join until a fold
     * consolidates them — so marks whose rows still sit in live batches
@@ -1324,19 +1324,6 @@ object Streaming {
       }
       .start()
 
-  /** [[indexDeleteStream]]'s text twin: victims carry (doc_id, text);
-    * marks land via [[tombstoneBandRows]], same replay-idempotence
-    * argument. */
-  def bandDeleteStream(victims: DataFrame, indexTable: String,
-                       checkpointDir: String): StreamingQuery =
-    victims.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          tombstoneBandRows(batch.sparkSession, indexTable, batch)
-      }
-      .start()
-
   /** The shared mark-landing body for both index flavors: marks (in the
     * table's data-column order) union with the existing marks, dedup on
     * (bucket column, id column) — both read from the table's own
@@ -1564,12 +1551,12 @@ object Streaming {
     * hazard by carrying takedowns as an input to this stream's own
     * pipeline.)
     *
-    * The two cadences are the TimeFold economics: the base fold's cost is
-    * linear in base rows, so running it at a fixed cadence is quadratic
-    * total work over the stream's lifetime — it exists here only to bound
-    * mark-retirement latency (majorEvery · trigger interval) and can be
-    * pushed out (or delegated entirely to the q155 schedule's purge
-    * check) on deployments with little deletion traffic.
+    * The two cadences are the fold economics (PLANS.md r17): the base
+    * fold's cost is linear in base rows, so running it at a fixed cadence
+    * is quadratic total work over the stream's lifetime — it exists here
+    * only to bound mark-retirement latency (majorEvery · trigger
+    * interval) and can be pushed out (or delegated entirely to the q155
+    * schedule's purge check) on deployments with little deletion traffic.
     *
     * Replay semantics compose: a batch re-run after a crash-past-fold
     * gates against base + generations + live batches, which hold exactly

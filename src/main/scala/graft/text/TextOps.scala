@@ -639,13 +639,6 @@ object TextOps {
     transform(sequence(lit(0), lit(k - 1)),
       i => array_min(transform(shingles, s => xxhash64(s, i))))
 
-  /** LSH band keys: hash of each r-length signature slice. A pair of docs
-    * lands in the same (band, key) bucket iff that band's signature rows all
-    * match — the classic bandwise AND/bucket OR. */
-  def lshBandKeys(sig: Column, bands: Int, rows: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => xxhash64(concat_ws(",", slice(sig, b * rows + lit(1), lit(rows))), b))
-
   /** q25: MinHash+LSH dedup plumbing over documents — 16 minhashes, 4 bands ×
     * 4 rows; emits per-band bucket stats (buckets, docs, candidate pairs).
     * Rows-only (seeded xxhash64 is not reproducible in DuckDB SQL); the spec
@@ -791,8 +784,8 @@ object TextOps {
     // copies canonically different, so neither static ReuseExchange nor
     // AQE stage reuse ever deduped them: the shingle explode + 16-minhash
     // + digest aggregate over the batch ran FOUR times per gate call
-    // (stage-verified: four 3-task agg stages per run, TimeQ
-    // SPARK_GRAFT_JOBS=2; plans/r22/q153_before.txt). One bounded
+    // (stage-verified: four 3-task agg stages per run, PLANS.md
+    // r22; plans/r22/q153_before.txt). One bounded
     // localCheckpoint (|batch| rows × 16 longs + digest) ends that.
     val sig = docSignatures(batch).localCheckpoint()
     // matches feeds both the decision union and the clean anti-join —
@@ -1048,9 +1041,6 @@ object TextOps {
       when(bitSum >= 0, lit(1L) * lit(1L << j)).otherwise(lit(0L))
     }.reduce(_ + _) // disjoint powers of two: addition == bitwise OR
   }
-
-  /** Hamming distance between two 64-bit fingerprints. */
-  def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** Winnowing document fingerprints (rolling k-gram hashes, min per
     * w-window, distinct): robust selection of representative hashes — the
@@ -1562,7 +1552,7 @@ object TextOps {
     // r22 REJECTED WITH NUMBERS (VERDICT r21 item 4, don't retry): running
     // TWO contraction rounds per checkpoint + signature to halve the
     // driver-paced actions measured SLOWER, not faster — same-session
-    // TimeQ q104 at sf0.1/32c: batched 31 jobs / 5.4-7.1 s warm vs
+    // q104 at sf0.1/32c (PLANS.md r22): batched 31 jobs / 5.4-7.1 s warm vs
     // per-round 25 jobs / 3.1-4.2 s. Convergence is only detectable at a
     // pair boundary, so a fixpoint reached mid-pair costs a FULL extra
     // pair (a graph converging at round k runs ~2·ceil((k+1)/2) rounds),

@@ -678,7 +678,7 @@ class MaintenanceSpec extends SparkSpecBase {
     assert(marks.forall(_._1 !== 999L), marks.mkString(","))
     val probes = e40.filter(col("vec_id").isin(1L, 2L))
       .select((col("vec_id") + 5000L).as("qid"), col("embedding"))
-    graft.sim.Similarity.probeIvfLive(spark, idxDir, probes, nprobe = 4)
+    graft.sim.Similarity.probeIvf(spark, idxDir, probes, nprobe = 4, live = true)
       .collect().foreach { r =>
         assert(r.getAs[Long]("retrieved_id") !== r.getAs[Long]("qid") - 5000L,
           r.toString)

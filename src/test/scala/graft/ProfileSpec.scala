@@ -1,0 +1,43 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+class ProfileSpec extends SparkSpecBase {
+
+  test("Profile: one cold and one warm record per query, plan counts " +
+      "agree with the formatted AQE-final plan") {
+    val (recs, plan) = Profile.run(spark, Sf0001, "q53_realtime_metrics")
+    assert(recs.map(_.rep) === Seq(1, 2))
+    assert(recs.map(r => "\"(\\w+)\":".r.findAllMatchIn(r.line).map(_.group(1)).toSeq)
+      .distinct === Seq(Seq("query", "rep", "construct_ms", "construct_jobs",
+        "action_ms", "jobs", "stages", "tasks", "codegen_pct", "scans", "exchanges")))
+    val finalPlan = plan.split("== Initial Plan ==").head
+    assert(finalPlan.contains("== Final Plan =="))
+    recs.foreach { r =>
+      assert(r.query === "q53_realtime_metrics")
+      // q53 runs eager jobs while building its DataFrame; the split must
+      // keep them out of the action's count
+      assert(r.constructJobs > 0, r.line)
+      assert(r.jobs >= 1 && r.stages >= 1 && r.tasks >= r.stages, r.line)
+      assert(r.constructMs >= 0 && r.actionMs > 0, r.line)
+      assert(r.codegenPct >= 0 && r.codegenPct <= 100, r.line)
+      assert(r.scans === "Scan parquet".r.findAllIn(finalPlan).size, r.line)
+      assert(r.exchanges === "\\b(Broadcast)?Exchange \\(".r.findAllIn(finalPlan).size,
+        r.line)
+    }
+    assert(recs.head.scans > 0 && recs.head.exchanges > 0)
+    assert(recs.map(_.constructJobs).distinct.size === 1)
+    assert(recs.map(r => (r.jobs, r.stages, r.scans, r.exchanges)).distinct.size === 1)
+  }
+
+  test("src/main declares exactly the four main entry points") {
+    // measurement belongs in Profile (or a spec), not in a new ad-hoc main
+    val mains = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(f => "def main\\(|extends App\\b".r.findFirstIn(Files.readString(f)).nonEmpty)
+      .map(_.getFileName.toString.stripSuffix(".scala")).toSet
+    assert(mains === Set("Bench", "Verify", "WarmLedgerCli", "Profile"))
+  }
+}

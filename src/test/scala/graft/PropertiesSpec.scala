@@ -169,97 +169,6 @@ class PropertiesSpec extends SparkSpecBase {
     }
   }
 
-  test("Pct.relationStacked is bitwise-equal to per-column Pct.relation " +
-      "on keyed mixed-type data with per-column nulls") {
-    import graft.ops.Pct
-    val caseGen = for {
-      n <- Gen.choose(2, 80)
-      rows <- Gen.listOfN(n, for {
-        k <- Gen.oneOf("a", "b", "c")
-        d <- Gen.option(Gen.choose(0, 40).map(_ / 100.0))
-        m <- Gen.option(Gen.choose(-5, 25))
-      } yield (k, d.map(Double.box).orNull, m.map(Int.box).orNull))
-      // every (key) must have at least one non-null per column somewhere,
-      // else the keyed relations legitimately differ in key sets — filter
-      // below instead of constraining the generator
-    } yield rows
-    samples(caseGen, 15).zipWithIndex.foreach { case (rows, i) =>
-      val df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.map(r =>
-          org.apache.spark.sql.Row(r._1, r._2, r._3)), 3),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("k",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("d",
-            org.apache.spark.sql.types.DoubleType),
-          org.apache.spark.sql.types.StructField("m",
-            org.apache.spark.sql.types.IntegerType))))
-      val qs1 = Seq("d50" -> 0.5, "d95" -> 0.95)
-      val qs2 = Seq("m25" -> 0.25, "m99" -> 0.99)
-      val sep = Pct.relation(df, Seq("k"), "d", qs1)
-        .join(Pct.relation(df, Seq("k"), "m", qs2), Seq("k"), "outer")
-      val stk = Pct.relationStacked(df, Seq("k"),
-        Seq("d" -> qs1, "m" -> qs2))
-      def toMap(r: org.apache.spark.sql.DataFrame) = r.collect().map { row =>
-        row.getAs[String]("k") -> Seq("d50", "d95", "m25", "m99").map(c =>
-          Option(row.getAs[java.lang.Double](c)).map(_.doubleValue()))
-      }.toMap
-      // per-column nulls: a key absent from one column's relation appears
-      // with nulls via the outer join; stacked emits the same shape only
-      // when the key has rows in at least one column — compare on the
-      // union of keys with any data, which both forms cover identically
-      assert(toMap(stk) === toMap(sep), s"case $i: $rows")
-    }
-  }
-
-  test("Pct.relationSelect is BITWISE-equal to Pct.relation on keyed data " +
-      "with ties, nulls, constant keys and skew, at tiny bucket counts") {
-    import graft.ops.Pct
-    val caseGen = for {
-      n <- Gen.choose(1, 120)
-      rows <- Gen.listOfN(n, for {
-        k <- Gen.oneOf("a", "b", "c")
-        // heavy ties (small value domain) mixed with a wide tail, plus
-        // nulls; key "c" is made constant-valued below
-        d <- Gen.option(Gen.frequency(
-          3 -> Gen.choose(0, 6).map(_.toDouble),
-          2 -> Gen.choose(-1000000, 1000000).map(_ / 97.0)))
-      } yield (k, if (k == "c") Some(42.5) else d))
-    } yield rows
-    samples(caseGen, 12).zipWithIndex.foreach { case (rows, i) =>
-      val df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.map(r =>
-          org.apache.spark.sql.Row(r._1, r._2.map(Double.box).orNull)), 3),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("k",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("d",
-            org.apache.spark.sql.types.DoubleType))))
-      val qs = Seq("p00" -> 0.0, "p25" -> 0.25, "p50" -> 0.5,
-        "p95" -> 0.95, "p100" -> 1.0)
-      def toBits(r: org.apache.spark.sql.DataFrame) = r.collect().map { row =>
-        row.getAs[String]("k") -> qs.map { case (a, _) =>
-          Option(row.getAs[java.lang.Double](a))
-            .map(v => java.lang.Double.doubleToLongBits(v.doubleValue()))
-        }
-      }.toMap
-      // buckets = 3 forces multi-bin refinement with b regularly landing
-      // in a LATER bin than a; also exercise the default width
-      for (b <- Seq(3, 8192)) {
-        val sel = Pct.relationSelect(df, Seq("k"), "d", qs, buckets = b)
-        assert(toBits(sel) === toBits(Pct.relation(df, Seq("k"), "d", qs)),
-          s"case $i buckets=$b: $rows")
-      }
-      // the global (no-key) form: one row either way, compare raw bits
-      def gBits(r: org.apache.spark.sql.DataFrame) =
-        Option(r.head().getAs[java.lang.Double]("g50"))
-          .map(v => java.lang.Double.doubleToLongBits(v.doubleValue()))
-      assert(gBits(Pct.relationSelect(df, Nil, "d", Seq("g50" -> 0.5), 3)) ===
-        gBits(Pct.relation(df, Nil, "d", Seq("g50" -> 0.5))),
-        s"case $i global: $rows")
-    }
-  }
-
   test("q60 stratified sample: K per class, sample mean near population mean") {
     val rows = graft.prep.DataPrep.q60StratifiedSample(spark, Sf001).collect()
     rows.foreach { r =>

@@ -14,7 +14,7 @@ class SimilaritySpec extends SparkSpecBase {
       (Array(1.0f, 0.0f), Array(-1.0f, 0.0f), -1.0)
     ).toDF("a", "b", "expected")
     df.withColumn("sim", Similarity.cosine(col("a"), col("b")))
-      .withColumn("simc", Similarity.cosineComposed(col("a"), col("b")))
+      .withColumn("simc", SimilarityReference.cosineComposed(col("a"), col("b")))
       .collect().foreach { r =>
         assert(math.abs(r.getAs[Double]("sim") - r.getAs[Double]("expected")) < 1e-9)
         // native kernel and composed tree agree bit-for-bit (same fold order)
@@ -29,7 +29,7 @@ class SimilaritySpec extends SparkSpecBase {
     for (offset <- Seq(0, 8, 40)) {
       val rows = df.select(
         Similarity.lshSignature(col("e"), 6, lit(offset)).as("k"),
-        Similarity.lshSignatureComposed(col("e"), 6, lit(offset)).as("c")).collect()
+        SimilarityReference.lshSignatureComposed(col("e"), 6, lit(offset)).as("c")).collect()
       rows.foreach { r =>
         // native kernel and the interpreted HOF tree agree bit-for-bit
         // (same sin, same multiply/fold order — q100's oracle depends on it)
@@ -191,15 +191,15 @@ class SimilaritySpec extends SparkSpecBase {
     // max over the same float set is accumulation-order-independent and
     // every path computes each per-probe cosine with identical loop
     // orders, so all three plans must agree bitwise — the same comparison
-    // graft.TimeProbes makes at 10k probes
+    // the 10k-probe measurement in PLANS.md "Big-probe-set max-sim" made
     Similarity.ensureRegistered(spark)
     val e = graft.Tables.embeddings(spark, Sf001)
     val probes = e.filter(col("vec_id") <= 30)
     val corpus = e.filter(col("vec_id") > 30)
-    val lad = Similarity.maxSimChunkedLadder(corpus, "embedding",
+    val lad = SimilarityReference.maxSimChunkedLadder(corpus, "embedding",
         probes, "embedding", chunk = 7)
       .select(col("vec_id"), col("max_sim_raw").as("a"))
-    val bc = Similarity.maxSimBroadcastAgg(corpus, "vec_id", "embedding",
+    val bc = SimilarityReference.maxSimBroadcastAgg(corpus, "vec_id", "embedding",
         probes, "embedding")
       .select(col("vec_id"), col("max_sim_raw").as("b"))
     assert(lad.join(bc, "vec_id").filter(col("a") =!= col("b")).count() === 0L)
@@ -240,7 +240,7 @@ class SimilaritySpec extends SparkSpecBase {
         .sortBy(_._1)
     for (k <- Seq(40, 300)) {
       val cents = centsOf(k)
-      val lad = Similarity.assignLadder(corpus, cents)
+      val lad = SimilarityReference.assignLadder(corpus, cents)
         .select(col("vec_id"), col("cid").as("a"))
       val ker = Similarity.assignKernel(corpus, cents)
         .select(col("vec_id"), col("cid").as("b"))
@@ -814,7 +814,7 @@ class SimilaritySpec extends SparkSpecBase {
     Similarity.tombstoneIvfRows(spark, idxDir, e.filter(col("vec_id") < 10))
     val probes = e.filter(col("vec_id") < 10)
       .select((col("vec_id") + 5000L).as("qid"), col("embedding"))
-    def serve() = Similarity.probeIvfLive(spark, idxDir, probes, nprobe = 2)
+    def serve() = Similarity.probeIvf(spark, idxDir, probes, nprobe = 2, live = true)
       .orderBy(col("qid")).collect()
     val pre = serve()
     pre.foreach { r =>
@@ -883,7 +883,7 @@ class SimilaritySpec extends SparkSpecBase {
     assert(graft.ops.Layouts.exists(spark, s"$idxDir/tombstones"))
     val probes = e.filter(col("vec_id") < 10)
       .select((col("vec_id") + 5000L).as("qid"), col("embedding"))
-    val served = Similarity.probeIvfLive(spark, idxDir, probes, nprobe = 2)
+    val served = Similarity.probeIvf(spark, idxDir, probes, nprobe = 2, live = true)
       .collect()
     assert(served.length === 10)
     served.foreach { r =>
