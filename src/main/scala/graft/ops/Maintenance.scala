@@ -357,13 +357,11 @@ object Maintenance {
     * deployments, pinned in fixtures). */
   def appendableLayoutFacts(spark: SparkSession, layout: String,
       table: String, targetBuckets: Long, now: Long): LayoutFacts = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    graft.streaming.Streaming.requireAppendableLayout(meta,
+    val idx = graft.streaming.Streaming.AppendableIndex(spark, table,
       s"appendableLayoutFacts($table)")
-    val buckets = meta.bucketSpec.get.numBuckets.toLong
+    val buckets = idx.numBuckets.toLong
     val tombId = graft.sim.Similarity.TombstoneBatchId
-    val all = spark.table(table)
+    val all = idx.rows
     LayoutFacts(layout, "appendable_index",
       graft.sources.Sources.countTableDataFiles(spark, table).toLong,
       buckets,

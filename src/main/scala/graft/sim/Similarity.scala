@@ -634,20 +634,14 @@ object Similarity {
     * embedding). θ defaults to 0.75 — dyadic (oracle-safe compare) and
     * hazard-free on this corpus (natural cosine tops out ≈0.53). */
   /** MERGE-ON-READ live view of an appendable vector index relation:
-    * tombstone-partition marks anti-join their rows out on (sig, vec_id)
-    * — both sides the same sig-bucketed table, so the anti-join rides the
-    * bucket partitioning. The text twin is
-    * [[graft.text.TextOps.liveBandRelation]]; every consumer that treats
-    * the index as "the accepted corpus" (serving probes, admission gates)
-    * must read THIS view, or a takedown's content keeps gating dup /
-    * serving until the physical purge — deletion must be observable the
-    * moment the mark lands. */
-  def liveIndexRelation(index: DataFrame): DataFrame = {
-    val tomb = index.filter(col("batch_id") === TombstoneBatchId)
-      .select(col("sig"), col("vec_id"))
-    index.filter(col("batch_id") =!= TombstoneBatchId)
-      .join(tomb, Seq("sig", "vec_id"), "left_anti")
-  }
+    * [[graft.streaming.Streaming.liveRelation]] keyed on (sig, vec_id).
+    * The text twin is [[graft.text.TextOps.liveBandRelation]]; every
+    * consumer that treats the index as "the accepted corpus" (serving
+    * probes, admission gates) must read THIS view, or a takedown's
+    * content keeps gating dup / serving until the physical purge —
+    * deletion must be observable the moment the mark lands. */
+  def liveIndexRelation(index: DataFrame): DataFrame =
+    graft.streaming.Streaming.liveRelation(index, Seq("sig", "vec_id"))
 
   /** The gate's index tier BEFORE its localCheckpoint — the signed batch
     * bucket-aligned-joined to the index, exact cosine, per-probe argmax.
@@ -882,36 +876,12 @@ object Similarity {
     * silently failed (mark not landing, anti-join dropped, purge
     * resurrecting rows) flips retrieved ids back and breaks the driver
     * hash. */
-  def q157IndexDeleteProbe(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
-    val copyShift = 24000000L; val offset = 25000000L; val tables = 4
-    val e = Tables.embeddings(spark, dir)
-    val n = e.count()
-    val planes = IndexParams.lshPlanes(n)
-    val eSlim = e.select(col("vec_id"), col("embedding"))
-    val copies = eSlim.filter(col("vec_id") % 7 === 0)
-      .select((col("vec_id") + copyShift).as("vec_id"), col("embedding"))
-    val idx = "g_del_index_" + layoutTag(fileFp(s"$dir/embeddings.parquet"),
-      s"del$planes", LayoutVersion)
-    // staging-NAME atomicity (the q145 rule): tableExists must flip only
-    // after the tombstone landed — a crash mid-build must never leave a
-    // registered index that serves the un-deleted originals forever
-    graft.ops.Layouts.buildTableIfAbsent(spark, idx) { staging =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_del_idx").toString
-      graft.streaming.Streaming.createAppendableIndex(spark, staging,
-        s"$tmp/index", IndexParams.indexBuckets(n, tables))
-      graft.streaming.Streaming.appendIndexBatch(eSlim, 0L, staging, planes, tables)
-      graft.streaming.Streaming.appendIndexBatch(copies, 1L, staging, planes, tables)
-      graft.streaming.Streaming.tombstoneIndexRows(spark, staging,
-        eSlim.filter(col("vec_id") % 7 === 0), planes, tables)
+  def q157IndexDeleteProbe(spark: SparkSession, dir: String): DataFrame =
+    appendableLifecycleProbe(spark, dir, "del",
+        copyShift = 24000000L, offset = 25000000L, live = true) {
+      (staging, eSlim, copies, planes, tables) =>
+        plantedDeleteIngest(spark, staging, eSlim, copies, planes, tables)
     }
-    val probes = eSlim.filter(col("vec_id") % 7 === 0)
-      .select((col("vec_id") + offset).as("qid"), col("embedding"))
-    probeIndexLive(spark, idx, probes, planes, tables)
-      .withColumn("hit",
-        col("retrieved_id") === col("qid") - (offset - copyShift))
-      .orderBy(col("qid"))
-  }
 
   /** q162: REBUILD of the appendable index under a re-derived bucket
     * count, with outstanding deletion debt —
@@ -926,51 +896,33 @@ object Similarity {
     * function (pruning would read the wrong buckets) flips retrieved
     * ids and breaks the driver hash. Exactness is q157's argument over
     * the rebuilt corpus. */
-  def q162IndexRebuildProbe(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
-    val copyShift = 32000000L; val offset = 33000000L; val tables = 4
-    val e = Tables.embeddings(spark, dir)
-    val n = e.count()
-    val planes = IndexParams.lshPlanes(n)
-    val eSlim = e.select(col("vec_id"), col("embedding"))
-    val copies = eSlim.filter(col("vec_id") % 7 === 0)
-      .select((col("vec_id") + copyShift).as("vec_id"), col("embedding"))
-    val idx = "g_rb_index_" + layoutTag(fileFp(s"$dir/embeddings.parquet"),
-      s"rb$planes", LayoutVersion)
-    graft.ops.Layouts.buildTableIfAbsent(spark, idx) { staging =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_rb_idx").toString
-      // stale keyspace by construction: the rebuild is the point
-      graft.streaming.Streaming.createAppendableIndex(spark, staging,
-        s"$tmp/index", buckets = 4)
-      graft.streaming.Streaming.appendIndexBatch(eSlim, 0L, staging,
-        planes, tables)
-      graft.streaming.Streaming.appendIndexBatch(copies, 1L, staging,
-        planes, tables)
-      graft.streaming.Streaming.tombstoneIndexRows(spark, staging,
-        eSlim.filter(col("vec_id") % 7 === 0), planes, tables)
-      graft.streaming.Streaming.rebuildAppendableIndex(spark, staging,
-        IndexParams.indexBuckets(n, tables))
+  def q162IndexRebuildProbe(spark: SparkSession, dir: String): DataFrame =
+    // stale keyspace by construction: the rebuild is the point
+    appendableLifecycleProbe(spark, dir, "rb",
+        copyShift = 32000000L, offset = 33000000L, live = false,
+        createBuckets = Some(4)) {
+      (staging, eSlim, copies, planes, tables) =>
+        plantedDeleteIngest(spark, staging, eSlim, copies, planes, tables)
+        graft.streaming.Streaming.rebuildAppendableIndex(spark, staging,
+          IndexParams.indexBuckets(eSlim.count(), tables))
+        ()
     }
-    val probes = eSlim.filter(col("vec_id") % 7 === 0)
-      .select((col("vec_id") + offset).as("qid"), col("embedding"))
-    probeIndex(spark, idx, probes, planes, tables)
-      .withColumn("hit",
-        col("retrieved_id") === col("qid") - (offset - copyShift))
-      .orderBy(col("qid"))
-  }
 
   /** The shared build-and-probe scaffold of the appendable-lifecycle
-    * probe family (q164/q165/q166): the corpus and planted copies of
-    * every 7th vector ingest through `build` — which owns the appends
-    * and the maintenance steps under test against the staging table —
-    * and the originals' content probes the result (the q157
+    * probe family (q157/q162/q164/q165/q166): the corpus and planted
+    * copies of every 7th vector ingest through `build` — which owns the
+    * appends and the maintenance steps under test against the staging
+    * table — and the originals' content probes the result (the q157
     * planted-delete argument: each top-1 provably flips original →
     * copy). `live` picks [[probeIndexLive]] (merge-on-read serving)
-    * versus the PLAIN [[probeIndex]] (physical-death certification).
-    * One definition so a scaffold fix cannot drift across the family —
-    * the next probe (q167…) is a lambda, not a fourth copy. */
+    * versus the PLAIN [[probeIndex]] (physical-death certification);
+    * `createBuckets` overrides the corpus-derived bucket count the table
+    * is created with (q162's deliberately stale keyspace). One
+    * definition so a scaffold fix cannot drift across the family — the
+    * next probe is a lambda, not another copy. */
   private def appendableLifecycleProbe(spark: SparkSession, dir: String,
-      tag: String, copyShift: Long, offset: Long, live: Boolean)(
+      tag: String, copyShift: Long, offset: Long, live: Boolean,
+      createBuckets: Option[Int] = None)(
       build: (String, DataFrame, DataFrame, Int, Int) => Unit)
       : DataFrame = {
     ensureRegistered(spark)
@@ -987,7 +939,8 @@ object Similarity {
       val tmp = java.nio.file.Files
         .createTempDirectory(s"graft_${tag}_idx").toString
       graft.streaming.Streaming.createAppendableIndex(spark, staging,
-        s"$tmp/index", IndexParams.indexBuckets(n, tables))
+        s"$tmp/index",
+        createBuckets.getOrElse(IndexParams.indexBuckets(n, tables)))
       build(staging, eSlim, copies, planes, tables)
     }
     val probes = eSlim.filter(col("vec_id") % 7 === 0)
@@ -997,6 +950,19 @@ object Similarity {
     served.withColumn("hit",
         col("retrieved_id") === col("qid") - (offset - copyShift))
       .orderBy(col("qid"))
+  }
+
+  /** The q157/q162 ingest sequence: corpus as batch 0, the planted
+    * copies as batch 1, originals tombstoned (merge-on-read). */
+  private def plantedDeleteIngest(spark: SparkSession, staging: String,
+      eSlim: DataFrame, copies: DataFrame, planes: Int, tables: Int)
+      : Unit = {
+    graft.streaming.Streaming.appendIndexBatch(eSlim, 0L, staging,
+      planes, tables)
+    graft.streaming.Streaming.appendIndexBatch(copies, 1L, staging,
+      planes, tables)
+    graft.streaming.Streaming.tombstoneIndexRows(spark, staging,
+      eSlim.filter(col("vec_id") % 7 === 0), planes, tables)
   }
 
   /** The q164/q165 ingest sequence: corpus in two leveled-folded

@@ -1,6 +1,10 @@
 package graft.streaming
 
+import graft.sim.Similarity.TombstoneBatchId
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
@@ -442,10 +446,9 @@ object Streaming {
       .start()
 
   /** The foreachBatch body of [[indexAppendStream]], exposed for direct
-    * testing. Empty batches follow the writeBatch stale-partition rule: an
-    * empty frame under dynamic overwrite is a no-op, so a replay that now
-    * yields zero rows must explicitly clear the crashed attempt's stale
-    * partition or it would keep serving ghost vectors. */
+    * testing. The batch replaces its own partition through
+    * [[AppendableIndex.replaceOrClear]], so an empty replay clears the
+    * partition a crashed attempt left (see the step's crash contract). */
   def appendIndexBatch(batch: DataFrame, batchId: Long, indexTable: String,
                        planes: Int, tables: Int): Unit =
     appendSignedBatch(batch, batchId, indexTable,
@@ -453,63 +456,177 @@ object Streaming {
         .select(col("vec_id"), col("embedding"), col("sig")))
 
   /** Shared append body for both appendable-index flavors: sign the
-    * batch, land it under its own batch_id partition with dynamic
-    * overwrite (restored after — a session-wide mode flip would turn
-    * every later full-overwrite partitioned write into a partial one),
-    * and clear the stale partition on an empty replay. `sign` must emit
-    * columns in the index table's declared order (insertInto is
-    * positional). */
+    * batch and land it under its own batch_id partition. An append's rows
+    * never read the table, so they are their own staging. */
   private def appendSignedBatch(batch: DataFrame, batchId: Long,
                                 indexTable: String,
                                 sign: DataFrame => DataFrame): Unit = {
-    val spark = batch.sparkSession
-    // r22: route the signed rows onto the bucket function before the
-    // insert (the writeBucketed rule): corpus-scale appends (full-corpus
-    // seeds, %k slices) otherwise arrive as ONE input split and the
-    // sign+write runs serial; the repartition keys by exactly the bucket
-    // placement hash, so each task holds one bucket and the batch still
-    // lands one file per (batch, bucket) — the same file set as before.
-    val bucketSpec = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(indexTable))
-      .bucketSpec
-    // r22 REJECTED WITH NUMBERS (VERDICT r21 item 6, don't retry): the
-    // per-write `option("partitionOverwriteMode", "dynamic")` — which
-    // would have made this write-site thread-safe and unlocked parallel
-    // appendable builds — is documented for path-based save() but is NOT
-    // honored by catalog insertInto on this engine: replayed batches
-    // DUPLICATED their rows instead of replacing their partition (19
-    // StreamingSpec/soak failures, e.g. "33 did not equal 3: the first
-    // batch must still serve"). The session-scoped helper stays, and so
-    // does the rule that builds flipping session confs never overlap.
-    withDynamicOverwrite(spark) {
-      if (batch.isEmpty) clearIndexPartition(spark, indexTable, batchId)
-      else {
-        val signed = sign(batch).withColumn("batch_id", lit(batchId))
-        val routed = bucketSpec.fold(signed)(bs =>
-          graft.sources.Sources.bucketRouted(signed,
-            bs.bucketColumnNames.head, bs.numBuckets))
-        routed.write.mode("overwrite").insertInto(indexTable)
-      }
-    }
-    spark.catalog.refreshTable(indexTable)
+    val idx = AppendableIndex(batch.sparkSession, indexTable,
+      s"appendSignedBatch($indexTable)")
+    idx.replaceOrClear(
+      Staged(sign(batch).withColumn("batch_id", lit(batchId)),
+        if (batch.isEmpty) Set.empty else Set(batchId)),
+      owned = Seq(batchId), routed = true)
   }
 
-  /** The appendable-index layout-shape guard every maintenance op and
-    * fact gather shares (the CLAUDE.md rule: any maintenance op taking a
-    * TABLE must require the layout it assumes — without batch_id
-    * partitions a "dynamic" overwrite is a FULL-table replace, and
-    * without the bucket spec the dedup keys are misread or die in a
-    * bare None.get). ONE definition (the marker-file rule) so the
-    * mutating ops and the observers can never drift on what
-    * "appendable" means. */
-  private[graft] def requireAppendableLayout(
-      meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
-      site: String): Unit =
-    require(meta.partitionColumnNames == Seq("batch_id") &&
-        meta.bucketSpec.isDefined,
-      s"$site: expected the appendable-index layout (batch_id " +
-        s"partitions + bucketed), got " +
-        s"partitions=${meta.partitionColumnNames} buckets=${meta.bucketSpec}")
+  /** An appendable index resolved ONCE for one operation: one catalog
+    * read, the layout-shape guard, and every table fact the writers and
+    * fact gathers derive from them. The guard is the layout-shape rule
+    * (any maintenance op taking a TABLE must require the layout it assumes):
+    * without batch_id partitions a "dynamic" overwrite is a FULL-table
+    * replace, and without the bucket spec the dedup keys are misread or
+    * die in a bare None.get. Column roles come from the table's own
+    * metadata, so one handle serves BOTH flavors — the vector index
+    * (vec_id, embedding, sig) and the band index (doc_id, digest, key). */
+  private[graft] final class AppendableIndex private (
+      val spark: SparkSession, val table: String, meta: CatalogTable) {
+    val location: Path = new Path(meta.location)
+    val fs: FileSystem =
+      location.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    /** Data columns in declared order (insertInto is positional). */
+    val dataCols: Seq[String] =
+      meta.schema.fieldNames.filterNot(_ == "batch_id").toSeq
+    val bucketCol: String = meta.bucketSpec.get.bucketColumnNames.head
+    val numBuckets: Int = meta.bucketSpec.get.numBuckets
+    /** The dedup / purge / mark key: (bucket column, leading id column). */
+    val keys: Seq[String] = Seq(bucketCol, dataCols.head)
+    // every staged and inserted frame is re-selected in declared order: a
+    // using-columns join hoists its keys to the front, and the positional
+    // insertInto would write bucket-key bits into the id column
+    private val tableCols = (dataCols :+ "batch_id").map(col)
+
+    def rows: DataFrame = spark.table(table)
+    /** The standing tombstone marks, data columns only. */
+    def marks: DataFrame = rows.filter(col("batch_id") === TombstoneBatchId)
+      .select(dataCols.map(col): _*)
+    def markKeys: DataFrame = marks.select(keys.map(col): _*)
+    def child(name: String): Path = new Path(location, name)
+
+    /** `<location>/_tombstone_epochs` — landing stamps for the mark
+      * partition, one (bucket key, id, epoch) row per landed mark. The
+      * `_`-prefix hides it from every table reader; it is POLICY metadata
+      * only (never serving input): lost or stale rows degrade the q155
+      * age fact toward "older", which fires the purge earlier — never
+      * later, and never wrong rows. Epoch units are the caller's
+      * (wall-clock seconds in deployments; test-controlled in specs) —
+      * policy metadata is exempt from the pinned-now oracle rule because
+      * no oracle reads it. */
+    def epochSidecar: Path = child("_tombstone_epochs")
+
+    /** THE write step of every appendable-index writer — fold, leveled
+      * fold, purge, mark landing and append — and its one crash contract,
+      * which the ops' docs point at:
+      *  (1) STAGE everything before the first mutation: a frame derived
+      *      from the table itself is written to a `_`-prefixed dir under
+      *      the location (invisible to readers; beside the table, because
+      *      a driver-local temp dir would not exist for a cluster's
+      *      executors) and read back from there — never read-your-own-
+      *      partition inside an overwrite.
+      *  (2) REPLACE-OR-CLEAR ([[replaceOrClear]]): dynamic-overwrite the
+      *      staged partitions, then delete every partition the write owns
+      *      that the staged set leaves EMPTY — an empty frame under dynamic
+      *      overwrite is a no-op (the r8 empty-frame rule), so its old rows
+      *      would keep serving: a crashed attempt's ghost rows, or purged
+      *      victims outliving their retiring marks.
+      *  (3) Marks retire LAST: an op replaces its data partitions first and
+      *      the mark partition after them, and the epoch sidecar syncs
+      *      after the marks. A crash anywhere leaves every mark standing
+      *      (extra marks for already-purged rows are harmless to the
+      *      serving anti-join and to a re-run), so every replace recomputes
+      *      identically on re-entry.
+      * Scratch stagings are deleted in `finally` ([[scratch]]); the leveled
+      * fold's `_leveled_staging_t<level>_u<upto>` is its crash-resume PLAN
+      * and survives a failure. Single-writer: one fold, purge or landing
+      * per table at a time. The staging is partitioned by batch_id, so the
+      * partitions it carries are a directory listing, not a job. */
+    private[streaming] def stage(name: String, rows: DataFrame): Staged = {
+      val dir = child(name)
+      rows.select(tableCols: _*).write.mode("overwrite")
+        .partitionBy("batch_id").parquet(dir.toString)
+      Staged(readStaged(dir),
+        graft.ops.Layouts.listChildren(spark, dir.toString)
+          .collect { case PartitionDir(id) => id.toLong }.toSet)
+    }
+
+    /** Staged rows under the table's own schema (no inference job). A
+      * staging written without the batch_id column reads it as null. */
+    private[streaming] def readStaged(dir: Path): DataFrame =
+      spark.read.schema(meta.schema).parquet(dir.toString)
+
+    /** Phase (2) of [[stage]]'s contract. `owned` lists the partitions
+      * this write replaces, in clearing order; `routed` puts the rows on
+      * the bucket function first (r22: corpus-scale appends arrive as ONE
+      * input split and the write would run serial; routing by the bucket
+      * placement hash keeps one file per (partition, bucket)).
+      *
+      * r22 REJECTED WITH NUMBERS (don't retry): the per-write
+      * `option("partitionOverwriteMode", "dynamic")` is not honored by
+      * catalog insertInto on this engine — replayed batches DUPLICATED
+      * their rows (19 StreamingSpec/soak failures). The session-scoped
+      * [[withDynamicOverwrite]] stays, and so does the rule that builds
+      * flipping session confs never overlap. */
+    private[streaming] def replaceOrClear(staged: Staged, owned: Seq[Long],
+                                          routed: Boolean = false): Unit = {
+      if (staged.parts.nonEmpty) withDynamicOverwrite(spark) {
+        val out = staged.rows.select(tableCols: _*)
+        (if (routed) graft.sources.Sources.bucketRouted(out, bucketCol,
+          numBuckets) else out).write.mode("overwrite").insertInto(table)
+      }
+      owned.filterNot(staged.parts).foreach { id =>
+        val dir = child(s"batch_id=$id")
+        if (fs.exists(dir)) fs.delete(dir, true)
+      }
+      spark.catalog.refreshTable(table)
+    }
+
+    /** Run `body`, deleting the scratch stagings `names` afterwards — on
+      * the failure path too. */
+    private[streaming] def scratch[A](names: String*)(body: => A): A =
+      try body finally names.foreach(n => fs.delete(child(n), true))
+  }
+
+  private[graft] object AppendableIndex {
+    def apply(spark: SparkSession, table: String,
+              site: String): AppendableIndex = {
+      val meta = catalogTable(spark, table)
+      require(meta.partitionColumnNames == Seq("batch_id") &&
+          meta.bucketSpec.isDefined,
+        s"$site: expected the appendable-index layout (batch_id " +
+          s"partitions + bucketed), got " +
+          s"partitions=${meta.partitionColumnNames} buckets=${meta.bucketSpec}")
+      new AppendableIndex(spark, table, meta)
+    }
+  }
+
+  /** Staged rows and the partitions they carry. */
+  private[streaming] final case class Staged(rows: DataFrame, parts: Set[Long])
+
+  private val PartitionDir = """batch_id=(-?\d+)""".r
+
+  /** The distinct batch_ids of `rows`, ascending. */
+  private def partitionIds(rows: DataFrame): Seq[Long] =
+    rows.select(col("batch_id")).distinct().collect().map(_.getLong(0))
+      .sorted.toSeq
+
+  /** The one catalog lookup behind every appendable-index op. */
+  private def catalogTable(spark: SparkSession, table: String): CatalogTable =
+    spark.sessionState.catalog.getTableMetadata(TableIdentifier(table))
+
+  private def locationOf(spark: SparkSession, table: String): Path =
+    new Path(catalogTable(spark, table).location)
+
+  /** THE merge-on-read live view of an appendable index relation: the
+    * tombstone partition's marks anti-join their rows out on `keys`
+    * (bucket column, id column) — both sides the same bucketed table, so
+    * the anti-join rides the bucket partitioning. The keys lead the
+    * output (a using-columns join hoists them). Flavor views:
+    * [[graft.sim.Similarity.liveIndexRelation]] and
+    * [[graft.text.TextOps.liveBandRelation]]. */
+  private[graft] def liveRelation(index: DataFrame,
+                                  keys: Seq[String]): DataFrame =
+    index.filter(col("batch_id") =!= TombstoneBatchId)
+      .join(index.filter(col("batch_id") === TombstoneBatchId)
+        .select(keys.map(col): _*), keys, "left_anti")
 
   /** Fold the appendable index's checkpoint-committed batch partitions
     * into ONE base partition — the maintenance arm of the THIRD layout
@@ -533,12 +650,10 @@ object Streaming {
     *     cannot race a re-land (the stream's own idempotence contract
     *     covers only the newest batch);
     * (2) the base is recomputed as dedup(live originals ∪ current base)
-    *     — the (sig, vec_id) dedup makes the result identical no matter
+    *     — the (bucket, id) dedup makes the result identical no matter
     *     where a prior crash fell, because every row exists in
-    *     originals ∪ base at every step (the base write lands before any
-    *     original is deleted); staging through a temp parquet dir breaks
-    *     the read-your-own-partition cycle the self-union would
-    *     otherwise create. (vec_id is the stable content key everywhere
+    *     originals ∪ base at every step ([[AppendableIndex.stage]]'s
+    *     crash contract). (vec_id is the stable content key everywhere
     *     in this library — a re-ingest of the same vec_id with DIFFERENT
     *     content would fold to an arbitrary one of the two, as it
     *     already serves as an arbitrary one of the two.)
@@ -546,12 +661,14 @@ object Streaming {
     *     original). For the serving shapes this is RESULT-safe — argmax
     *     over duplicated candidates returns the same top-1 — and only
     *     occupancy counts (q147) inflate until the resume finishes.
+    * Tombstoned rows do not make it into the folded base. A PARTIAL fold
+    * (uptoBatch below the live head) re-lands the marks whose rows live
+    * in a LATER batch — retiring them would resurrect the deleted rows in
+    * every live serving path; the other marks retire with the fold.
     * Returns (batches folded, base rows after the fold). */
   def foldIndexBase(spark: SparkSession, indexTable: String,
                     uptoBatch: Long): (Long, Long) = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(indexTable))
-    requireAppendableLayout(meta, s"foldIndexBase($indexTable)")
+    val idx = AppendableIndex(spark, indexTable, s"foldIndexBase($indexTable)")
     // a negative bound would sweep the base/tombstone partitions into the
     // "unfolded" mark-retention read below
     require(uptoBatch >= 0, s"foldIndexBase: uptoBatch must be >= 0, " +
@@ -559,109 +676,42 @@ object Streaming {
     // drain pending LEVELED plans first: their staging remembers pre-purge
     // rows mark-agnostically, so one replayed after this fold's purge
     // would resurrect the purged victims into a generation
-    finishPendingLeveledFolds(spark, indexTable, meta)
-    val tombId = graft.sim.Similarity.TombstoneBatchId
-    // column roles come from the table's own metadata so the fold (and
-    // the tombstone purge) serve BOTH appendable flavors — the vector
-    // index (vec_id, embedding, sig) and the band index (doc_id, digest,
-    // key): dedup/purge key = (bucket column, leading id column)
-    val dataCols = meta.schema.fieldNames.filterNot(_ == "batch_id").toSeq
-    val dedupKeys = Seq(meta.bucketSpec.get.bucketColumnNames.head,
-      dataCols.head)
-    val live = spark.table(indexTable)
+    finishPendingLeveledFolds(idx)
+    val live = idx.rows
       .filter(col("batch_id") >= 0 && col("batch_id") <= uptoBatch)
-    val batches = live.select(col("batch_id")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val tombFull = spark.table(indexTable)
-      .filter(col("batch_id") === tombId)
-      .select(dataCols.map(col): _*)
-    val tomb = tombFull.select(dedupKeys.map(col): _*)
+    val batches = partitionIds(live)
+    val tomb = idx.markKeys
     val hasTomb = !tomb.isEmpty
     // the base fold is GENERATION-AWARE: every [[foldIndexLeveled]]
-    // generation partition folds into the base here (and is cleared
-    // below, BEFORE mark retirement — a retired mark whose row still sat
-    // in an uncleared generation would resurrect it)
-    val genIds = spark.table(indexTable)
-      .filter(col("batch_id") <= GenerationBaseId)
-      .select(col("batch_id")).distinct()
-      .collect().map(_.getLong(0)).sorted
+    // generation partition folds into the base here and is cleared with
+    // the folded batches, BEFORE mark retirement — a retired mark whose
+    // row still sat in an uncleared generation would resurrect it
+    val genIds = partitionIds(
+      idx.rows.filter(col("batch_id") <= GenerationBaseId))
     // a tombstone-only fold (no live batches) still runs: its job is to
     // purge deleted rows out of the BASE partition and retire the marks
     if (batches.isEmpty && !hasTomb && genIds.isEmpty) return (0L, 0L)
-    val source = live.unionByName(
-        spark.table(indexTable).filter(col("batch_id") === -2L ||
+    val base = live.unionByName(
+        idx.rows.filter(col("batch_id") === -2L ||
           col("batch_id") <= GenerationBaseId))
-      .dropDuplicates(dedupKeys)
-      // the physical purge: tombstoned rows ([[tombstoneIndexRows]] /
-      // [[tombstoneBandRows]]) do not make it into the folded base; the
-      // marks clear LAST, so a crash anywhere in the window leaves
-      // serving's anti-join correct and a re-fold purges identically
-      .join(tomb, dedupKeys, "left_anti")
-      // a using-columns join hoists the join keys to the FRONT of the
-      // row; re-select the table's declared order or the positional
-      // insertInto below writes bucket-key bits into the id column
-      .select(dataCols.map(col): _*)
+      .dropDuplicates(idx.keys)
+      .join(tomb, idx.keys, "left_anti")
       .withColumn("batch_id", lit(-2L))
-    // stage beside the table (underscore prefix → invisible to readers):
-    // a driver-local temp dir would not exist for a cluster's executors,
-    // and cleanup must run on the failure path too
-    // A PARTIAL fold (uptoBatch below the live head) purges only batches
-    // <= uptoBatch plus the base, so a mark whose row lives in a LATER
-    // batch must survive the fold — retiring it would resurrect the
-    // deleted row in every live serving path. Those marks are staged
-    // (before any mutation — never read-your-own-partition) and
-    // RE-LANDED instead of cleared; marks matching nothing beyond
-    // uptoBatch retire with the fold as before.
-    val unfolded = spark.table(indexTable)
-      .filter(col("batch_id") > uptoBatch)
-      .select(dedupKeys.map(col): _*)
-    val survivorMarks = tombFull.join(unfolded, dedupKeys, "left_semi")
-    val staging = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(meta.location), "_fold_staging")
-    val markStaging = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(meta.location), "_fold_mark_staging")
-    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      source.write.mode("overwrite").parquet(staging.toString)
-      if (hasTomb)
-        survivorMarks.write.mode("overwrite").parquet(markStaging.toString)
-      val staged = spark.read.parquet(staging.toString)
-      val rows = staged.count()
-      // An EMPTY folded base (every base/live row <= uptoBatch is
-      // tombstoned — a full takedown followed by a scheduled fold) makes
-      // the dynamic overwrite below a NO-OP (the r8 empty-frame rule), so
-      // the old batch_id=-2 partition's deleted rows would stay physically
-      // in place while their marks retire — resurrecting every
-      // base-resident victim in all serving paths. Clear the base
-      // partition explicitly instead (clear-and-seed, index flavor).
-      if (rows == 0L) clearIndexPartition(spark, indexTable, -2L)
-      else withDynamicOverwrite(spark) {
-        staged.write.mode("overwrite").insertInto(indexTable)
-      }
-      batches.foreach(clearIndexPartition(spark, indexTable, _))
-      genIds.foreach(clearIndexPartition(spark, indexTable, _))
-      if (hasTomb) {
-        val survivors = spark.read.parquet(markStaging.toString)
-        // marks retire LAST: a nonempty survivor set REPLACES the
-        // tombstone partition in one dynamic overwrite (a crash before
-        // the replace leaves every mark standing — extra marks for
-        // already-purged rows are harmless to the serving anti-join and
-        // to a re-fold); only an empty set clears the partition outright
-        if (survivors.isEmpty) clearIndexPartition(spark, indexTable, tombId)
-        else withDynamicOverwrite(spark) {
-          survivors.select(dataCols.map(col): _*)
-            .withColumn("batch_id", lit(tombId))
-            .write.mode("overwrite").insertInto(indexTable)
-        }
-      }
-      spark.catalog.refreshTable(indexTable)
-      // landing stamps of retired marks retire with them (runs last —
-      // a crash before it only ages the debt upward)
-      if (hasTomb) syncEpochSidecar(spark, meta, indexTable, dedupKeys)
+    val unfolded = idx.rows.filter(col("batch_id") > uptoBatch)
+      .select(idx.keys.map(col): _*)
+    idx.scratch("_fold_staging", "_fold_mark_staging") {
+      val staged = idx.stage("_fold_staging", base)
+      val survivors = if (!hasTomb) None else Some(idx.stage(
+        "_fold_mark_staging", idx.marks.join(unfolded, idx.keys, "left_semi")
+          .withColumn("batch_id", lit(TombstoneBatchId))))
+      val rows = staged.rows.count()
+      // an EMPTY folded base (a full takedown followed by a scheduled
+      // fold) clears batch_id=-2 with the folded batches
+      idx.replaceOrClear(staged, -2L +: (batches ++ genIds))
+      survivors.foreach(idx.replaceOrClear(_, Seq(TombstoneBatchId)))
+      // landing stamps of retired marks retire with them
+      if (hasTomb) syncEpochSidecar(idx)
       (batches.length.toLong, rows)
-    } finally {
-      fs.delete(staging, true)
-      fs.delete(markStaging, true)
     }
   }
 
@@ -697,110 +747,82 @@ object Streaming {
     * retirement remain [[foldIndexBase]]'s job (now generation-aware),
     * run at a much slower cadence or by the q155 schedule's purge check.
     *
-    * Crash contract — the PLAN rides the staging dir's NAME
-    * (`_leveled_staging_t<level>_u<upto>`): a resume must finish the
-    * identical plan, never recompute one from mutated state (a half-
-    * cleared source set would derive a different target level and leave
-    * the written generation serving duplicate rows forever). Entry
-    * finishes any committed pending plan first (deleting uncommitted
-    * staging debris), so every invocation converges the table before
-    * folding anew; within the window rows exist in staging ∪ sources ∪
-    * target and the (bucket, id) dedup makes re-execution identical —
-    * the same invariant the base fold holds. Duplicates visible inside
-    * the window are argmax-safe, exactly as for the base fold's window.
-    * Single-writer: same contract as every fold/landing on the table.
-    * Returns (batch partitions cleared, rows in the written generation). */
+    * Crash contract — [[AppendableIndex.stage]]'s, with the PLAN riding
+    * the staging dir's NAME (`_leveled_staging_t<level>_u<upto>`): a
+    * resume must finish the identical plan, never recompute one from
+    * mutated state (a half-cleared source set would derive a different
+    * target level and leave the written generation serving duplicate rows
+    * forever). Entry finishes any committed pending plan first (deleting
+    * uncommitted staging debris), so every invocation converges the table
+    * before folding anew; within the window rows exist in staging ∪
+    * sources ∪ target and the (bucket, id) dedup makes re-execution
+    * identical — the same invariant the base fold holds. Duplicates
+    * visible inside the window are argmax-safe, exactly as for the base
+    * fold's window. Returns (batch partitions cleared, rows in the
+    * written generation). */
   def foldIndexLeveled(spark: SparkSession, indexTable: String,
                        uptoBatch: Long): (Long, Long) = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(indexTable))
-    requireAppendableLayout(meta, s"foldIndexLeveled($indexTable)")
+    val idx = AppendableIndex(spark, indexTable,
+      s"foldIndexLeveled($indexTable)")
     require(uptoBatch >= 0, s"foldIndexLeveled: uptoBatch must be >= 0, " +
       s"got $uptoBatch")
-    val pending = finishPendingLeveledFolds(spark, indexTable, meta)
-    val dataCols = meta.schema.fieldNames.filterNot(_ == "batch_id").toSeq
-    val dedupKeys = Seq(meta.bucketSpec.get.bucketColumnNames.head,
-      dataCols.head)
-    val live = spark.table(indexTable)
+    val pending = finishPendingLeveledFolds(idx)
+    val live = idx.rows
       .filter(col("batch_id") >= 0 && col("batch_id") <= uptoBatch)
     if (live.isEmpty) return pending.getOrElse((0L, 0L))
-    val occupied = spark.table(indexTable)
-      .filter(col("batch_id") <= GenerationBaseId)
-      .select(col("batch_id")).distinct()
-      .collect().map(r => (GenerationBaseId - r.getLong(0)).toInt).toSet
+    val occupied = partitionIds(
+        idx.rows.filter(col("batch_id") <= GenerationBaseId))
+      .map(id => (GenerationBaseId - id).toInt).toSet
     val level = Iterator.from(0).find(!occupied(_)).get
-    val source = live.unionByName(
-        spark.table(indexTable).filter(
-          col("batch_id") <= GenerationBaseId &&
-            col("batch_id") > GenerationBaseId - level))
-      .dropDuplicates(dedupKeys)
-      .select(dataCols.map(col): _*)
-    val staging = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(meta.location),
-      s"_leveled_staging_t${level}_u$uptoBatch")
-    source.write.mode("overwrite").parquet(staging.toString)
-    finishLeveledFold(spark, indexTable, meta, level, uptoBatch, staging)
+    val target = GenerationBaseId - level
+    val plan = s"_leveled_staging_t${level}_u$uptoBatch"
+    idx.stage(plan, live.unionByName(idx.rows.filter(
+        col("batch_id") <= GenerationBaseId && col("batch_id") > target))
+      .dropDuplicates(idx.keys)
+      .withColumn("batch_id", lit(target)))
+    finishLeveledFold(idx, level, uptoBatch, idx.child(plan))
   }
 
   /** Execute (or resume) a leveled-fold plan whose committed staging sits
-    * at `staging`: overwrite the target generation with the staged rows,
+    * at `staging`: replace the target generation with the staged rows,
     * clear the source partitions the plan names (every occupied level
     * below `level`, every batch partition ≤ `upto` still present), drop
     * the staging last. Every step is idempotent, so re-entry from any
     * crash point converges to the same table. */
-  private def finishLeveledFold(spark: SparkSession, indexTable: String,
-                                meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
-                                level: Int, upto: Long,
-                                staging: org.apache.hadoop.fs.Path): (Long, Long) = {
-    val dataCols = meta.schema.fieldNames.filterNot(_ == "batch_id").toSeq
-    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staged = spark.read.parquet(staging.toString)
-    val rows = staged.count()
+  private def finishLeveledFold(idx: AppendableIndex, level: Int, upto: Long,
+                                staging: Path): (Long, Long) = {
     val target = GenerationBaseId - level
-    if (rows == 0L) clearIndexPartition(spark, indexTable, target)
-    else withDynamicOverwrite(spark) {
-      staged.select(dataCols.map(col): _*)
-        .withColumn("batch_id", lit(target))
-        .write.mode("overwrite").insertInto(indexTable)
-    }
-    spark.catalog.refreshTable(indexTable)
-    val sources = spark.table(indexTable)
-      .filter((col("batch_id") >= 0 && col("batch_id") <= upto) ||
-        (col("batch_id") <= GenerationBaseId &&
-          col("batch_id") > GenerationBaseId - level))
-      .select(col("batch_id")).distinct()
-      .collect().map(_.getLong(0))
-    sources.foreach(clearIndexPartition(spark, indexTable, _))
-    spark.catalog.refreshTable(indexTable)
-    fs.delete(staging, true)
+    val staged = idx.readStaged(staging).withColumn("batch_id", lit(target))
+    val rows = staged.count()
+    val sources = partitionIds(idx.rows.filter(
+      (col("batch_id") >= 0 && col("batch_id") <= upto) ||
+        (col("batch_id") <= GenerationBaseId && col("batch_id") > target)))
+    idx.replaceOrClear(
+      Staged(staged, if (rows > 0L) Set(target) else Set.empty),
+      target +: sources)
+    idx.fs.delete(staging, true)
     (sources.count(_ >= 0).toLong, rows)
   }
 
-  /** Finish every committed pending leveled-fold plan beside `table`'s
+  /** Finish every committed pending leveled-fold plan beside the table's
     * location (single-writer means at most one) and delete uncommitted
-    * staging debris. Shared by [[foldIndexLeveled]] (entry convergence)
-    * and [[foldIndexBase]] — the base fold purges rows and retires marks,
-    * and a stale plan replayed AFTER the purge would resurrect them (the
-    * staging remembers pre-purge rows, mark-agnostically), so the base
-    * fold must drain pending plans before mutating anything. Returns the
-    * last finished plan's counts, if any. */
-  private def finishPendingLeveledFolds(spark: SparkSession, table: String,
-      meta: org.apache.spark.sql.catalyst.catalog.CatalogTable)
-      : Option[(Long, Long)] = {
-    val loc = new org.apache.hadoop.fs.Path(meta.location)
-    graft.ops.Layouts.listChildren(spark, meta.location.toString)
-      .flatMap {
-        case n @ LeveledStagingRe(level, upto) => Some((n, level.toInt,
-          upto.toLong))
-        case _ => None
+    * staging debris. Shared by [[foldIndexLeveled]] (entry convergence),
+    * [[foldIndexBase]] and [[purgeIndexTombstones]] — those purge rows and
+    * retire marks, and a stale plan replayed AFTER the purge would
+    * resurrect them (the staging remembers pre-purge rows,
+    * mark-agnostically), so they drain pending plans before mutating
+    * anything. Returns the last finished plan's counts, if any. */
+  private def finishPendingLeveledFolds(idx: AppendableIndex)
+      : Option[(Long, Long)] =
+    graft.ops.Layouts.listChildren(idx.spark, idx.location.toString)
+      .collect { case n @ LeveledStagingRe(level, upto) =>
+        (idx.child(n), level.toInt, upto.toLong)
       }
-      .map { case (name, level, upto) =>
-        val p = new org.apache.hadoop.fs.Path(loc, name)
-        if (graft.ops.Layouts.committed(spark, p.toString))
-          Some(finishLeveledFold(spark, table, meta, level, upto, p))
-        else { graft.ops.Layouts.delete(spark, p.toString); None }
-      }.flatten.lastOption
-  }
+      .flatMap { case (p, level, upto) =>
+        if (graft.ops.Layouts.committed(idx.spark, p.toString))
+          Some(finishLeveledFold(idx, level, upto, p))
+        else { graft.ops.Layouts.delete(idx.spark, p.toString); None }
+      }.lastOption
 
   /** MARK-SCOPED physical purge of an appendable index — the table
     * flavor's analog of [[graft.sim.Similarity.purgeIvfTombstones]]'
@@ -827,86 +849,45 @@ object Streaming {
     * [[purgeIndexTombstonesConverging]], which folds the committed live
     * batches and re-purges when marks survive this pass.
     *
-    * Crash contract (the fold invariant): survivors of every touched
-    * partition and the surviving marks are STAGED before any mutation;
-    * partition overwrites recompute identically on re-entry (the marks
-    * still stand), emptied partitions clear explicitly (the r8
-    * empty-frame rule), marks retire LAST, the epoch sidecar syncs after
-    * them. Pending leveled-fold plans drain FIRST — a stale staged plan
-    * replayed after this purge would resurrect the victims (leveled
-    * staging remembers pre-purge rows, mark-agnostically). Single-writer
-    * contract as for every fold/landing on the table. Returns
-    * (partitions rewritten, rows purged). */
+    * Crash contract: [[AppendableIndex.stage]]'s. Pending leveled-fold
+    * plans drain FIRST — a stale staged plan replayed after this purge
+    * would resurrect the victims (leveled staging remembers pre-purge
+    * rows, mark-agnostically). Returns (partitions rewritten, rows
+    * purged). */
   def purgeIndexTombstones(spark: SparkSession, indexTable: String)
       : (Long, Long) = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(indexTable))
-    requireAppendableLayout(meta, s"purgeIndexTombstones($indexTable)")
-    finishPendingLeveledFolds(spark, indexTable, meta)
-    val tombId = graft.sim.Similarity.TombstoneBatchId
-    val dataCols = meta.schema.fieldNames.filterNot(_ == "batch_id").toSeq
-    val dedupKeys = Seq(meta.bucketSpec.get.bucketColumnNames.head,
-      dataCols.head)
-    val tombFull = spark.table(indexTable)
-      .filter(col("batch_id") === tombId)
-      .select(dataCols.map(col): _*)
-    val tomb = tombFull.select(dedupKeys.map(col): _*)
+    val idx = AppendableIndex(spark, indexTable,
+      s"purgeIndexTombstones($indexTable)")
+    finishPendingLeveledFolds(idx)
+    val tomb = idx.markKeys
     if (tomb.isEmpty) {
-      syncEpochSidecar(spark, meta, indexTable, dedupKeys)
+      syncEpochSidecar(idx)
       return (0L, 0L)
     }
-    val consolidated = spark.table(indexTable)
-      .filter(col("batch_id") === -2L ||
-        col("batch_id") <= GenerationBaseId)
-    val touched = consolidated.join(tomb, dedupKeys, "left_semi")
-      .select(col("batch_id")).distinct()
-      .collect().map(_.getLong(0)).sorted
+    val consolidated = idx.rows.filter(col("batch_id") === -2L ||
+      col("batch_id") <= GenerationBaseId)
+    val touched =
+      partitionIds(consolidated.join(tomb, idx.keys, "left_semi"))
+    val scoped = consolidated
+      .filter(col("batch_id").isin(touched.map(Long.box): _*))
     // marks whose row still sits in a LIVE batch must survive — after the
     // touched partitions rewrite, live batches hold the only remaining
     // copies, so retiring their marks would resurrect the victims
-    val liveRows = spark.table(indexTable).filter(col("batch_id") >= 0)
-      .select(dedupKeys.map(col): _*)
-    val survivorMarks = tombFull.join(liveRows, dedupKeys, "left_semi")
-    val loc = new org.apache.hadoop.fs.Path(meta.location)
-    val staging = new org.apache.hadoop.fs.Path(loc, "_purge_staging")
-    val markStaging = new org.apache.hadoop.fs.Path(loc, "_purge_mark_staging")
-    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      val scoped = consolidated
-        .filter(col("batch_id").isin(touched.map(Long.box): _*))
-      val orderCols = (dataCols :+ "batch_id").map(col)
-      scoped.join(tomb, dedupKeys, "left_anti")
-        .select(orderCols: _*)
-        .write.mode("overwrite").parquet(staging.toString)
-      survivorMarks.write.mode("overwrite").parquet(markStaging.toString)
-      val staged = spark.read.parquet(staging.toString)
+    val liveRows = idx.rows.filter(col("batch_id") >= 0)
+      .select(idx.keys.map(col): _*)
+    idx.scratch("_purge_staging", "_purge_mark_staging") {
+      val staged = idx.stage("_purge_staging",
+        scoped.join(tomb, idx.keys, "left_anti"))
+      val survivors = idx.stage("_purge_mark_staging",
+        idx.marks.join(liveRows, idx.keys, "left_semi")
+          .withColumn("batch_id", lit(TombstoneBatchId)))
       // both sides read the pre-rewrite files (the purgeIvfTombstones
       // accounting rule) — forced before any mutation below
-      val purged = scoped.count() - staged.count()
-      val stagedParts = staged.select(col("batch_id")).distinct()
-        .collect().map(_.getLong(0)).toSet
-      if (stagedParts.nonEmpty) withDynamicOverwrite(spark) {
-        staged.select(orderCols: _*)
-          .write.mode("overwrite").insertInto(indexTable)
-      }
-      // a partition every row of which was a victim is absent from the
-      // staged frame — dynamic overwrite no-ops on it, so clear it
-      // explicitly or its dead rows outlive their retiring marks
-      touched.filterNot(stagedParts).foreach(
-        clearIndexPartition(spark, indexTable, _))
-      val sm = spark.read.parquet(markStaging.toString)
-      if (sm.isEmpty) clearIndexPartition(spark, indexTable, tombId)
-      else withDynamicOverwrite(spark) {
-        sm.select(dataCols.map(col): _*)
-          .withColumn("batch_id", lit(tombId))
-          .write.mode("overwrite").insertInto(indexTable)
-      }
-      spark.catalog.refreshTable(indexTable)
-      syncEpochSidecar(spark, meta, indexTable, dedupKeys)
+      val purged = scoped.count() - staged.rows.count()
+      idx.replaceOrClear(staged, touched)
+      idx.replaceOrClear(survivors, Seq(TombstoneBatchId))
+      syncEpochSidecar(idx)
       (touched.length.toLong, purged)
-    } finally {
-      fs.delete(staging, true)
-      fs.delete(markStaging, true)
     }
   }
 
@@ -938,9 +919,8 @@ object Streaming {
   def purgeIndexTombstonesConverging(spark: SparkSession,
       indexTable: String, uptoBatch: Long): (Long, Long) = {
     val first = purgeIndexTombstones(spark, indexTable)
-    val tombId = graft.sim.Similarity.TombstoneBatchId
     val standing = !spark.table(indexTable)
-      .filter(col("batch_id") === tombId).isEmpty
+      .filter(col("batch_id") === TombstoneBatchId).isEmpty
     if (!standing || uptoBatch < 0) return first
     val foldable = !spark.table(indexTable)
       .filter(col("batch_id") >= 0 && col("batch_id") <= uptoBatch)
@@ -971,17 +951,11 @@ object Streaming {
     * (bounded: one mark-partition read + one sidecar read). */
   def appendableTombstoneAge(spark: SparkSession, indexTable: String,
                              now: Long): Long = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(indexTable))
-    requireAppendableLayout(meta, s"appendableTombstoneAge($indexTable)")
-    val dataCols = meta.schema.fieldNames.filterNot(_ == "batch_id").toSeq
-    val dedupKeys = Seq(meta.bucketSpec.get.bucketColumnNames.head,
-      dataCols.head)
-    val tomb = spark.table(indexTable)
-      .filter(col("batch_id") === graft.sim.Similarity.TombstoneBatchId)
-      .select(dedupKeys.map(col): _*)
+    val idx = AppendableIndex(spark, indexTable,
+      s"appendableTombstoneAge($indexTable)")
+    val tomb = idx.markKeys
     if (tomb.isEmpty) return -1L
-    val sidecar = epochSidecar(meta)
+    val sidecar = idx.epochSidecar
     if (!graft.ops.Layouts.hasParquetData(spark, sidecar.toString)) return now
     // ONE pass answers both questions: min stamp over STANDING marks
     // (stale stamps for retired marks drop out of the left join's left
@@ -991,8 +965,8 @@ object Streaming {
     // behind a later mark's younger stamp (the SLA fires sooner, never
     // later — per mark, not per table)
     val stamps = spark.read.parquet(sidecar.toString)
-      .select((dedupKeys.map(col) :+ col("epoch")): _*)
-    val r = tomb.join(stamps, dedupKeys, "left")
+      .select((idx.keys.map(col) :+ col("epoch")): _*)
+    val r = tomb.join(stamps, idx.keys, "left")
       .agg(min(col("epoch")),
         sum(when(col("epoch").isNull, 1L).otherwise(0L))).head()
     if (r.getLong(1) > 0L) now
@@ -1013,7 +987,7 @@ object Streaming {
     * mark-free — the rebuild is also a purge and a full fold.
     *
     * Metadata-generic like [[foldIndexBase]]: column roles come from the
-    * old table's own catalog metadata, so one tool serves the vector
+    * old table's [[AppendableIndex]] handle, so one tool serves the vector
     * (vec_id, embedding, sig) and band (doc_id, digest, key) flavors.
     * Signatures/keys are pure functions of content, independent of the
     * bucket COUNT, so stored rows rebucket as-is — no kernel re-run.
@@ -1031,9 +1005,7 @@ object Streaming {
     if (!spark.catalog.tableExists(table)) {
       require(spark.catalog.tableExists(staging),
         s"rebuildAppendableIndex: neither $table nor $staging exists")
-      val resumedLoc = new org.apache.hadoop.fs.Path(
-        spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(staging)).location)
+      val resumedLoc = locationOf(spark, staging)
       spark.sql(s"ALTER TABLE $staging RENAME TO $table")
       // the crashed attempt may have left its retiring-location marker
       // standing (crash between the swap and the retired-location rename)
@@ -1044,21 +1016,11 @@ object Streaming {
         resumedLoc.getParent, rbBase(table), resumedLoc.getName)
       return spark.table(table).count()
     }
+    val idx = AppendableIndex(spark, table, s"rebuildAppendableIndex($table)")
     if (spark.catalog.tableExists(staging)) spark.sql(s"DROP TABLE $staging")
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    requireAppendableLayout(meta, s"rebuildAppendableIndex($table)")
-    val dataCols = meta.schema.fieldNames.filterNot(_ == "batch_id").toSeq
-    val bucketCol = meta.bucketSpec.get.bucketColumnNames.head
-    val dedupKeys = Seq(bucketCol, dataCols.head)
-    val tombId = graft.sim.Similarity.TombstoneBatchId
-    val t = spark.table(table)
-    val tomb = t.filter(col("batch_id") === tombId)
-      .select(dedupKeys.map(col): _*)
-    val live = t.filter(col("batch_id") =!= tombId)
-      .join(tomb, dedupKeys, "left_anti")
-      .dropDuplicates(dedupKeys)
-      .select(dataCols.map(col): _*)
+    val live = liveRelation(idx.rows, idx.keys)
+      .dropDuplicates(idx.keys)
+      .select(idx.dataCols.map(col): _*)
       .withColumn("batch_id", lit(-2L))
     // fresh generation dir BESIDE the table's own location (same
     // filesystem/durability as the data it replaces), namespaced on the
@@ -1066,14 +1028,12 @@ object Streaming {
     // tables' generation namespaces when one's dir happens to end in
     // _rb<digits>, and an operator reaping one table's old generations
     // must never be able to hit another's live dir
-    val loc = new org.apache.hadoop.fs.Path(meta.location)
-    val locFs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val loc = idx.location
     val base = rbBase(table)
-    val gen = nextFreeRbSlot(locFs, loc.getParent, base)
-    val path = new org.apache.hadoop.fs.Path(loc.getParent,
-      s"${base}_rb$gen").toString
+    val gen = nextFreeRbSlot(idx.fs, loc.getParent, base)
+    val path = new Path(loc.getParent, s"${base}_rb$gen").toString
     live.write.partitionBy("batch_id")
-      .bucketBy(buckets, bucketCol).sortBy(bucketCol)
+      .bucketBy(buckets, idx.bucketCol).sortBy(idx.bucketCol)
       .option("path", path).format("parquet").saveAsTable(staging)
     val rows = spark.table(staging).count()
     // the FIRST rebuild's dead generation is the original caller-chosen
@@ -1091,8 +1051,8 @@ object Streaming {
       writeRetiringMarker(spark, loc.getParent, base, loc.getName)
     spark.sql(s"DROP TABLE $table") // external: old files outlive the drop
     spark.sql(s"ALTER TABLE $staging RENAME TO $table")
-    finishRetiredLocationRename(spark, locFs, loc.getParent, base,
-      liveLocName = new org.apache.hadoop.fs.Path(path).getName)
+    finishRetiredLocationRename(spark, idx.fs, loc.getParent, base,
+      liveLocName = new Path(path).getName)
     rows
   }
 
@@ -1103,18 +1063,15 @@ object Streaming {
     * [[oldRebuildGenerations]] if the rebuild crashed in between) — the
     * name cannot match [[rbRegex]] (no trailing digits), so the reaper
     * never enumerates the marker itself as a generation. */
-  private def retiringMarker(parent: org.apache.hadoop.fs.Path,
-                             base: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(parent, s"${base}_rb_retiring")
+  private def retiringMarker(parent: Path, base: String): Path =
+    new Path(parent, s"${base}_rb_retiring")
 
-  private def writeRetiringMarker(spark: SparkSession,
-                                  parent: org.apache.hadoop.fs.Path,
+  private def writeRetiringMarker(spark: SparkSession, parent: Path,
                                   base: String, dirName: String): Unit =
     graft.ops.Layouts.writeMarkerFile(spark,
       retiringMarker(parent, base).toString, dirName)
 
-  private def readRetiringMarker(spark: SparkSession,
-                                 parent: org.apache.hadoop.fs.Path,
+  private def readRetiringMarker(spark: SparkSession, parent: Path,
                                  base: String): Option[String] =
     graft.ops.Layouts.readMarkerFile(spark,
       retiringMarker(parent, base).toString)
@@ -1126,15 +1083,13 @@ object Streaming {
     * then the next attempt resumed) just drops the marker. Idempotent;
     * shared by the rebuild's publish path and its crash-resume branch. */
   private def finishRetiredLocationRename(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      parent: org.apache.hadoop.fs.Path, base: String,
+      fs: FileSystem, parent: Path, base: String,
       liveLocName: String): Unit =
     readRetiringMarker(spark, parent, base).foreach { name =>
-      val dead = new org.apache.hadoop.fs.Path(parent, name)
+      val dead = new Path(parent, name)
       if (name != liveLocName && fs.exists(dead)) {
         val free = nextFreeRbSlot(fs, parent, base)
-        if (!fs.rename(dead,
-            new org.apache.hadoop.fs.Path(parent, s"${base}_rb$free")))
+        if (!fs.rename(dead, new Path(parent, s"${base}_rb$free")))
           sys.error(s"rebuildAppendableIndex: could not move the retired " +
             s"location $dead into the reapable generation namespace")
       }
@@ -1149,11 +1104,10 @@ object Streaming {
     table.replaceAll("[^A-Za-z0-9_]", "_")
   private def rbRegex(base: String): scala.util.matching.Regex =
     s"^${java.util.regex.Pattern.quote(base)}_rb\\d+$$".r
-  private def nextFreeRbSlot(fs: org.apache.hadoop.fs.FileSystem,
-                             parent: org.apache.hadoop.fs.Path,
+  private def nextFreeRbSlot(fs: FileSystem, parent: Path,
                              base: String): Int =
     Iterator.from(1).find(i => !fs.exists(
-      new org.apache.hadoop.fs.Path(parent, s"${base}_rb$i"))).get
+      new Path(parent, s"${base}_rb$i"))).get
 
   /** OLD `<table>_rb<N>` rebuild generations of an appendable index —
     * the data-file dirs [[rebuildAppendableIndex]]'s external DROP left
@@ -1168,9 +1122,6 @@ object Streaming {
     * naming rule), so one table's reap can never see another's dirs. */
   def oldRebuildGenerations(spark: SparkSession,
                             table: String): Seq[String] = {
-    def locOf(t: String) = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(t)).location)
     val stagingTbl = s"${table}_rebuild"
     val keep = scala.collection.mutable.Set.empty[String]
     // the audit must survive the rebuild crash window (table dropped,
@@ -1179,12 +1130,12 @@ object Streaming {
     // protecting both locations from enumeration
     val parent =
       if (spark.catalog.tableExists(table)) {
-        val l = locOf(table); keep += l.getName
+        val l = locationOf(spark, table); keep += l.getName
         if (spark.catalog.tableExists(stagingTbl))
-          keep += locOf(stagingTbl).getName
+          keep += locationOf(spark, stagingTbl).getName
         l.getParent
       } else if (spark.catalog.tableExists(stagingTbl)) {
-        val l = locOf(stagingTbl); keep += l.getName
+        val l = locationOf(spark, stagingTbl); keep += l.getName
         l.getParent
       } else sys.error(s"oldRebuildGenerations($table): neither the " +
         s"table nor its $stagingTbl staging exists — a mistyped/stale " +
@@ -1200,12 +1151,11 @@ object Streaming {
     // marker naming the live/staging location (crash before the swap) is
     // excluded by the same keep set as everything else.
     val markerNamed = readRetiringMarker(spark, parent, base)
-      .filter(n => !keep(n) &&
-        fs.exists(new org.apache.hadoop.fs.Path(parent, n)))
+      .filter(n => !keep(n) && fs.exists(new Path(parent, n)))
     (graft.ops.Layouts.listChildren(spark, parent.toString)
       .filter(n => re.findFirstIn(n).isDefined && !keep(n)) ++ markerNamed)
       .distinct.sorted
-      .map(n => new org.apache.hadoop.fs.Path(parent, n).toString)
+      .map(n => new Path(parent, n).toString)
   }
 
   /** The `reap_rebuild_generations` tool the q155 schedule's `reap`
@@ -1220,14 +1170,11 @@ object Streaming {
     // now, or renamed by a finished rebuild that crashed before the
     // marker delete) is spent — retire it so nothing stale accrues
     if (spark.catalog.tableExists(table)) {
-      val parent = new org.apache.hadoop.fs.Path(
-        spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
-        .getParent
+      val parent = locationOf(spark, table).getParent
       val fs = parent.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val base = rbBase(table)
       readRetiringMarker(spark, parent, base).foreach { n =>
-        if (!fs.exists(new org.apache.hadoop.fs.Path(parent, n)))
+        if (!fs.exists(new Path(parent, n)))
           fs.delete(retiringMarker(parent, base), false)
       }
     }
@@ -1257,13 +1204,12 @@ object Streaming {
     * signatures are pure functions of it (a mark must sit in every
     * bucket its row sits in); production fetches it by pushed `vec_id
     * IN` point-lookup from the corpus (the q149 rescore read pattern).
-    * Marks store a NULL embedding (they are keys, not vectors), are
+    * Marks store a NULL embedding (they are keys, not vectors) and are
     * deduplicated against the existing marks on (sig, vec_id) — so
-    * re-deleting is idempotent — and are staged through a `_`-prefixed
-    * temp dir (the fold rule: never read-your-own-partition inside an
-    * overwrite; a crash leaves only the invisible staging dir).
-    * Single-writer: see [[landTombstoneMarks]] — landings must be
-    * serialized with each other and with [[foldIndexBase]]. */
+    * re-deleting is idempotent. Crash contract:
+    * [[AppendableIndex.stage]]'s. Single-writer: see
+    * [[landTombstoneMarks]] — landings must be serialized with each other
+    * and with [[foldIndexBase]]. */
   def tombstoneIndexRows(spark: SparkSession, indexTable: String,
                          victims: DataFrame, planes: Int, tables: Int,
                          epoch: Long = System.currentTimeMillis() / 1000L)
@@ -1324,11 +1270,10 @@ object Streaming {
       }
       .start()
 
-  /** The shared mark-landing body for both index flavors: marks (in the
-    * table's data-column order) union with the existing marks, dedup on
-    * (bucket column, id column) — both read from the table's own
-    * metadata, the [[foldIndexBase]] convention — and overwrite the
-    * tombstone partition through a `_`-prefixed staging dir.
+  /** The shared mark-landing body for both index flavors: marks union
+    * with the existing marks, dedup on the handle's (bucket column, id
+    * column) keys, and replace the tombstone partition through the
+    * stage-then-replace step.
     *
     * SINGLE-WRITER contract (the same maintenance-op serialization the
     * fold assumes): landing is read-union-overwrite of ONE partition, so
@@ -1342,30 +1287,14 @@ object Streaming {
   private def landTombstoneMarks(spark: SparkSession, indexTable: String,
                                  marks: DataFrame,
                                  epoch: Long): Unit = {
-    val tombId = graft.sim.Similarity.TombstoneBatchId
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(indexTable))
-    requireAppendableLayout(meta, s"landTombstoneMarks($indexTable)")
-    val dataCols = meta.schema.fieldNames.filterNot(_ == "batch_id").toSeq
-    val dedupKeys = Seq(meta.bucketSpec.get.bucketColumnNames.head,
-      dataCols.head)
-    val existing = spark.table(indexTable)
-      .filter(col("batch_id") === tombId)
-      .select(dataCols.map(col): _*)
-    val staging = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(meta.location), "_tombstone_staging")
-    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      existing.unionByName(marks.select(dataCols.map(col): _*))
-        .dropDuplicates(dedupKeys)
-        .write.mode("overwrite").parquet(staging.toString)
-      withDynamicOverwrite(spark) {
-        spark.read.parquet(staging.toString)
-          .select(dataCols.map(col): _*)
-          .withColumn("batch_id", lit(tombId))
-          .write.mode("overwrite").insertInto(indexTable)
-      }
-      spark.catalog.refreshTable(indexTable)
+    val idx = AppendableIndex(spark, indexTable,
+      s"landTombstoneMarks($indexTable)")
+    idx.scratch("_tombstone_staging") {
+      idx.replaceOrClear(idx.stage("_tombstone_staging",
+          idx.marks.unionByName(marks.select(idx.dataCols.map(col): _*))
+            .dropDuplicates(idx.keys)
+            .withColumn("batch_id", lit(TombstoneBatchId))),
+        Seq(TombstoneBatchId))
       // the LANDING-EPOCH sidecar (r18): debt age is a purge-policy input
       // — without it a band-gated schedule could defer a handful of marks
       // forever, unbounding erasure latency. Appended AFTER the marks (a
@@ -1379,73 +1308,53 @@ object Streaming {
       // batch's stamp — the next converge would then see it exists,
       // skip the resume, and delete the staging/retiring copies holding
       // every pre-crash stamp.
-      convergeEpochSidecar(spark, epochSidecar(meta))
-      marks.select(dedupKeys.map(col): _*)
+      convergeEpochSidecar(idx)
+      marks.select(idx.keys.map(col): _*)
         .withColumn("epoch", lit(epoch))
-        .write.mode("append").parquet(epochSidecar(meta).toString)
-    } finally fs.delete(staging, true)
+        .write.mode("append").parquet(idx.epochSidecar.toString)
+    }
   }
 
-  /** `<table location>/_tombstone_epochs` — landing stamps for the mark
-    * partition, one (bucket key, id, epoch) row per landed mark. The
-    * `_`-prefix hides it from every table reader; it is POLICY metadata
-    * only (never serving input): lost or stale rows degrade the q155 age
-    * fact toward "older", which fires the purge earlier — never later,
-    * and never wrong rows. Epoch units are the caller's (wall-clock
-    * seconds in deployments; test-controlled in specs) — policy metadata
-    * is exempt from the pinned-now oracle rule because no oracle reads
-    * it. */
-  private def epochSidecar(
-      meta: org.apache.spark.sql.catalyst.catalog.CatalogTable)
-      : org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(meta.location), "_tombstone_epochs")
-
-  /** Re-sync the epoch sidecar after mark retirement: keep only stamps
-    * whose (bucket, id) key is still marked, or drop the sidecar when the
-    * marks cleared. Runs LAST in every purge/fold — a crash before it
-    * leaves stale stamps, which only age the debt upward (conservative).
-    * Staged beside the sidecar (never read-your-own-dir in an overwrite),
-    * and published by RENAME-ASIDE (the r17 retire rule): the live
-    * sidecar moves to `_tombstone_epochs_retiring` and is deleted only
-    * AFTER the staging rename lands — a delete-then-rename publish whose
-    * rename fails destroys BOTH copies and every landing stamp with it
-    * (degradation was conservative — unstamped marks read infinitely old
-    * — but the loss plus the per-tick no-op purges it buys are
-    * avoidable). [[convergeEpochSidecar]] finishes any crash state at the
-    * next writer's entry. */
-  private def syncEpochSidecar(spark: SparkSession,
-      meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
-      indexTable: String, dedupKeys: Seq[String]): Unit = {
-    val sidecar = epochSidecar(meta)
-    val fs = sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    convergeEpochSidecar(spark, sidecar)
-    if (!graft.ops.Layouts.hasParquetData(spark, sidecar.toString)) {
+  /** Re-sync the epoch sidecar ([[AppendableIndex.epochSidecar]]) after
+    * mark retirement: keep only stamps whose (bucket, id) key is still
+    * marked, or drop the sidecar when the marks cleared. Runs LAST in
+    * every purge/fold — a crash before it leaves stale stamps, which only
+    * age the debt upward (conservative). Staged beside the sidecar (never
+    * read-your-own-dir in an overwrite), and published by RENAME-ASIDE
+    * (the r17 retire rule): the live sidecar moves to
+    * `_tombstone_epochs_retiring` and is deleted only AFTER the staging
+    * rename lands — a delete-then-rename publish whose rename fails
+    * destroys BOTH copies and every landing stamp with it (degradation
+    * was conservative — unstamped marks read infinitely old — but the
+    * loss plus the per-tick no-op purges it buys are avoidable).
+    * [[convergeEpochSidecar]] finishes any crash state at the next
+    * writer's entry. */
+  private def syncEpochSidecar(idx: AppendableIndex): Unit = {
+    val sidecar = idx.epochSidecar
+    val fs = idx.fs
+    convergeEpochSidecar(idx)
+    if (!graft.ops.Layouts.hasParquetData(idx.spark, sidecar.toString)) {
       if (fs.exists(sidecar)) fs.delete(sidecar, true)
       return
     }
-    val standing = spark.table(indexTable)
-      .filter(col("batch_id") === graft.sim.Similarity.TombstoneBatchId)
-      .select(dedupKeys.map(col): _*)
+    val standing = idx.markKeys
     if (standing.isEmpty) { fs.delete(sidecar, true); return }
-    val staging = new org.apache.hadoop.fs.Path(
-      sidecar.getParent, "_tombstone_epochs_staging")
-    val retiring = new org.apache.hadoop.fs.Path(
-      sidecar.getParent, "_tombstone_epochs_retiring")
-    try {
-      spark.read.parquet(sidecar.toString)
-        .join(standing, dedupKeys, "left_semi")
+    val staging = idx.child("_tombstone_epochs_staging")
+    val retiring = idx.child("_tombstone_epochs_retiring")
+    idx.scratch(staging.getName) {
+      idx.spark.read.parquet(sidecar.toString)
+        .join(standing, idx.keys, "left_semi")
         .write.mode("overwrite").parquet(staging.toString)
       if (!fs.rename(sidecar, retiring))
-        sys.error(s"epoch-sidecar sync of $indexTable could not retire " +
+        sys.error(s"epoch-sidecar sync of ${idx.table} could not retire " +
           s"the live copy aside")
       if (!fs.rename(staging, sidecar)) {
         // restore the retired copy so the stamps survive the failure
         fs.rename(retiring, sidecar)
-        sys.error(s"epoch-sidecar sync of $indexTable failed to publish")
+        sys.error(s"epoch-sidecar sync of ${idx.table} failed to publish")
       }
       fs.delete(retiring, true)
-    } finally fs.delete(staging, true)
+    }
   }
 
   /** Finish a [[syncEpochSidecar]] crash window at the next writer's
@@ -1455,13 +1364,11 @@ object Streaming {
     * (stale stamps only age debt upward); then clear debris. Writer-side
     * only — the q155 fact gather stays a pure observer, reading missing
     * stamps as infinitely old until the next purge/fold converges. */
-  private def convergeEpochSidecar(spark: SparkSession,
-      sidecar: org.apache.hadoop.fs.Path): Unit = {
-    val fs = sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(
-      sidecar.getParent, "_tombstone_epochs_staging")
-    val retiring = new org.apache.hadoop.fs.Path(
-      sidecar.getParent, "_tombstone_epochs_retiring")
+  private def convergeEpochSidecar(idx: AppendableIndex): Unit = {
+    val sidecar = idx.epochSidecar
+    val fs = idx.fs
+    val staging = idx.child("_tombstone_epochs_staging")
+    val retiring = idx.child("_tombstone_epochs_retiring")
     // a failed resume rename must fail LOUD before the debris deletes
     // below — falling through would erase the only surviving stamp
     // copies, exactly the silent loss the rename-aside protocol exists
@@ -1475,8 +1382,8 @@ object Streaming {
       // that an empty semi-join means every retiring stamp's mark retired
       // — restore the retiring copy instead; its stale stamps only age
       // debt upward (conservative) and the next sync re-filters them
-      if (graft.ops.Layouts.committed(spark, staging.toString) &&
-          graft.ops.Layouts.hasParquetData(spark, staging.toString)) {
+      if (graft.ops.Layouts.committed(idx.spark, staging.toString) &&
+          graft.ops.Layouts.hasParquetData(idx.spark, staging.toString)) {
         if (!fs.rename(staging, sidecar))
           sys.error(s"epoch-sidecar converge: could not resume the " +
             s"committed staging copy into $sidecar")
@@ -1488,21 +1395,6 @@ object Streaming {
     }
     fs.delete(staging, true)
     fs.delete(retiring, true)
-  }
-
-  /** Delete one batch_id partition directory of a catalog-table index —
-    * the empty-replay clear both append paths share (a dynamic overwrite
-    * of an empty frame is a no-op, so a crashed attempt's partition would
-    * otherwise keep serving ghost rows). */
-  private def clearIndexPartition(spark: SparkSession, indexTable: String,
-                                  batchId: Long): Unit = {
-    val loc = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(indexTable))
-      .location
-    val stale = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(loc), s"batch_id=$batchId")
-    val fs = stale.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(stale)) fs.delete(stale, true)
   }
 
   /** Streaming ONLINE dedup gate — continuous ingest admission control
@@ -1594,7 +1486,7 @@ object Streaming {
                       foldEvery: Int, majorEvery: Int): Unit =
     if (batchId > 0 && batchId % majorEvery == 0) {
       val debt = !spark.table(indexTable)
-        .filter(col("batch_id") === graft.sim.Similarity.TombstoneBatchId)
+        .filter(col("batch_id") === TombstoneBatchId)
         .isEmpty
       if (debt) foldIndexBase(spark, indexTable, batchId - 1)
       else foldIndexLeveled(spark, indexTable, batchId - 1)
@@ -1765,12 +1657,12 @@ object Streaming {
                        gate: (SparkSession, DataFrame, DataFrame) => DataFrame,
                        append: (DataFrame, Long) => Unit): Unit = {
     val spark = batch.sparkSession
-    val root = new org.apache.hadoop.fs.Path(decisionsDir)
+    val root = new Path(decisionsDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (batch.isEmpty) {
-      val stale = new org.apache.hadoop.fs.Path(root, s"batch_id=$batchId")
+      val stale = new Path(root, s"batch_id=$batchId")
       if (fs.exists(stale)) fs.delete(stale, true)
-      val seed = new org.apache.hadoop.fs.Path(root, "batch_id=-1")
+      val seed = new Path(root, "batch_id=-1")
       if (!fs.exists(seed))
         gate(spark, spark.table(indexTable), batch.limit(0))
           .limit(0).coalesce(1).write.mode("overwrite").parquet(seed.toString)
@@ -1878,12 +1770,12 @@ object Streaming {
       // unreadable (no footer). batch_id is the innermost partition level
       // here, so stale dirs are globbed under every hour.
       val hconf = batch.sparkSession.sparkContext.hadoopConfiguration
-      val root = new org.apache.hadoop.fs.Path(outDir)
+      val root = new Path(outDir)
       val fs = root.getFileSystem(hconf)
-      val stale = fs.globStatus(new org.apache.hadoop.fs.Path(root,
+      val stale = fs.globStatus(new Path(root,
         s"year=*/month=*/day=*/hour=*/batch_id=$batchId"))
       if (stale != null) stale.foreach(s => fs.delete(s.getPath, true))
-      val seed = new org.apache.hadoop.fs.Path(root,
+      val seed = new Path(root,
         "year=0/month=0/day=0/hour=0/batch_id=-1")
       if (!fs.exists(seed))
         batch.limit(0).coalesce(1).write.mode("overwrite")
@@ -1981,14 +1873,14 @@ object Streaming {
         // prior attempt is never cleared (dynamic mode only touches
         // partitions present in the data). Clear-and-seed explicitly:
         val hconf = batch.sparkSession.sparkContext.hadoopConfiguration
-        val qPath = new org.apache.hadoop.fs.Path(quarantineDir)
+        val qPath = new Path(quarantineDir)
         val fs = qPath.getFileSystem(hconf)
-        val stale = new org.apache.hadoop.fs.Path(qPath, s"batch_id=$batchId")
+        val stale = new Path(qPath, s"batch_id=$batchId")
         if (fs.exists(stale)) fs.delete(stale, true)
         // one typed zero-row file inside a synthetic partition (-1 never
         // collides with a real batch id) establishes the sink's schema;
         // a non-partitioned empty write DOES emit a footer
-        val seed = new org.apache.hadoop.fs.Path(qPath, "batch_id=-1")
+        val seed = new Path(qPath, "batch_id=-1")
         if (!fs.exists(seed))
           badRows.limit(0).coalesce(1).write.mode("overwrite")
             .parquet(seed.toString)

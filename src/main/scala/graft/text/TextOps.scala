@@ -860,16 +860,12 @@ object TextOps {
     liveBandRelation(spark.table(indexTable))
 
   /** [[liveBandIndex]] over an already-scoped relation (the streaming
-    * gate excludes the batch's own partition first) — the band flavor of
-    * [[graft.sim.Similarity.liveIndexRelation]]. */
-  def liveBandRelation(index: DataFrame): DataFrame = {
-    val tombId = graft.sim.Similarity.TombstoneBatchId
-    val tomb = index.filter(col("batch_id") === tombId)
-      .select(col("key"), col("doc_id"))
-    index.filter(col("batch_id") =!= tombId)
-      .join(tomb, Seq("key", "doc_id"), "left_anti")
+    * gate excludes the batch's own partition first):
+    * [[graft.streaming.Streaming.liveRelation]] keyed on (key, doc_id),
+    * projected to (doc_id, digest, key). */
+  def liveBandRelation(index: DataFrame): DataFrame =
+    graft.streaming.Streaming.liveRelation(index, Seq("key", "doc_id"))
       .select(col("doc_id"), col("digest"), col("key"))
-  }
 
   /** q158: DELETION from the band index, gate-side observable — the q157
     * embedding-index deletion's text twin, and the decision that makes a

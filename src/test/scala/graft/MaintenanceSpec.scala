@@ -597,6 +597,55 @@ class MaintenanceSpec extends SparkSpecBase {
     assert(ex.getMessage.contains("appendable"), ex.getMessage)
   }
 
+  test("every appendable-index op refuses a plain table loudly and " +
+      "leaves its files untouched (one layout guard for writers and fact " +
+      "gathers alike)") {
+    import graft.streaming.Streaming
+    val tbl = "g_layout_guard_plain"
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    spark.sql(s"DROP TABLE IF EXISTS ${tbl}_rebuild")
+    spark.range(5).write.saveAsTable(tbl)
+    val vecs = Seq((1L, Array.fill(8)(0.5f))).toDF("vec_id", "embedding")
+    val docs = Seq((1L, "one two three four")).toDF("doc_id", "text")
+    val ops: Seq[(String, () => Any)] = Seq(
+      "appendIndexBatch" -> (() =>
+        Streaming.appendIndexBatch(vecs, 0L, tbl, 5, 2)),
+      "appendBandBatch" -> (() => Streaming.appendBandBatch(docs, 0L, tbl)),
+      "tombstoneIndexRows" -> (() =>
+        Streaming.tombstoneIndexRows(spark, tbl, vecs, 5, 2)),
+      "tombstoneBandRows" -> (() =>
+        Streaming.tombstoneBandRows(spark, tbl, docs)),
+      "foldIndexBase" -> (() => Streaming.foldIndexBase(spark, tbl, 0L)),
+      "foldIndexLeveled" -> (() => Streaming.foldIndexLeveled(spark, tbl, 0L)),
+      "purgeIndexTombstones" -> (() =>
+        Streaming.purgeIndexTombstones(spark, tbl)),
+      "purgeIndexTombstonesConverging" -> (() =>
+        Streaming.purgeIndexTombstonesConverging(spark, tbl, 0L)),
+      "rebuildAppendableIndex" -> (() =>
+        Streaming.rebuildAppendableIndex(spark, tbl, 4)),
+      "appendableTombstoneAge" -> (() =>
+        Streaming.appendableTombstoneAge(spark, tbl, 100L)),
+      "appendableLayoutFacts" -> (() =>
+        Maintenance.appendableLayoutFacts(spark, "plain", tbl, 4L, 100L)))
+    val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(tbl))
+      .location)
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def files() = {
+      val it = fs.listFiles(loc, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        .toSet
+    }
+    val before = files()
+    ops.foreach { case (name, op) =>
+      val ex = intercept[IllegalArgumentException](op())
+      assert(ex.getMessage.contains("appendable"), s"$name: ${ex.getMessage}")
+      assert(files() === before, s"$name changed the table's files")
+    }
+    assert(spark.table(tbl).count() === 5L)
+  }
+
   test("rebuild byproducts surface in the schedule and their tools close " +
       "the loop: a dead _rb generation triggers reap (live and staging " +
       "locations excluded), an orphaned-tombstone slot triggers reissue " +

@@ -922,6 +922,48 @@ class StreamingSpec extends SparkSpecBase {
     assert(spark.table(tbl).select(col("vec_id")).distinct().count() === 25L)
   }
 
+  test("a tombstone landing that fails at write time leaves no scratch " +
+      "staging and an unchanged mark partition — scratch stagings die in " +
+      "finally, unlike the leveled fold's resume plan") {
+    val planes = 5; val tables = 2
+    val tbl = "g_failed_landing_idx"
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    val path = Files.createTempDirectory("failed_landing")
+    Streaming.createAppendableIndex(spark, tbl, s"$path/index", buckets = 4)
+    val eSlim = Tables.embeddings(spark, Sf001)
+      .select(col("vec_id"), col("embedding")).filter(col("vec_id") < 10)
+    Streaming.appendIndexBatch(eSlim, 0L, tbl, planes, tables)
+    Streaming.tombstoneIndexRows(spark, tbl,
+      eSlim.filter(col("vec_id") < 2), planes, tables, epoch = 1000L)
+    val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(tbl))
+      .location)
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tombId = graft.sim.Similarity.TombstoneBatchId
+    val markDir = new org.apache.hadoop.fs.Path(loc, s"batch_id=$tombId")
+    def markFiles() = fs.listStatus(markDir)
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).toSet
+    val before = markFiles()
+    val boom = udf { (id: Long) =>
+      if (id >= 0L) throw new IllegalStateException("boom"); id
+    }
+    val ex = intercept[Exception] {
+      Streaming.tombstoneIndexRows(spark, tbl,
+        eSlim.filter(col("vec_id") >= 5)
+          .withColumn("vec_id", boom(col("vec_id"))),
+        planes, tables, epoch = 2000L)
+    }
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("boom")), ex)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(loc, "_tombstone_staging")))
+    assert(markFiles() === before)
+    spark.catalog.refreshTable(tbl)
+    assert(spark.table(tbl).filter(col("batch_id") === tombId).count() ===
+      2L * tables)
+    // no stamp of the failed landing reached the epoch sidecar
+    assert(Streaming.appendableTombstoneAge(spark, tbl, now = 1500L) === 500L)
+  }
+
   test("foldIndexBase is generation-aware: generations fold into the base " +
       "with marks honored, generation-resident victims purge and their " +
       "marks retire only after the generation partition is cleared") {
@@ -1033,10 +1075,10 @@ class StreamingSpec extends SparkSpecBase {
     def emb(id: Long) = corpus.find(_.vec_id == id).get.embedding
     val ing = MemoryStream[Vec]
     val del = MemoryStream[Vec]
-    val q = Streaming.maintainedLifecycleStream(ing.toDF(), del.toDF(), tbl,
-      planes, tables, decDir,
-      Files.createTempDirectory("lifecycle_ck").toString, foldEvery = 2,
-      majorEvery = 4)
+    val ck = Files.createTempDirectory("lifecycle_ck").toString
+    def start() = Streaming.maintainedLifecycleStream(ing.toDF(), del.toDF(),
+      tbl, planes, tables, decDir, ck, foldEvery = 2, majorEvery = 4)
+    var q = start()
     val tombId = graft.sim.Similarity.TombstoneBatchId
     def marks() = {
       spark.catalog.refreshTable(tbl)
@@ -1051,9 +1093,13 @@ class StreamingSpec extends SparkSpecBase {
     // b1: takedown of vec 3 INTERLEAVED with a same-batch re-ingest of its
     // content (fresh id 9003) and a copy of still-live vec 5 (id 9005):
     // marks land before the gate, so 9003 re-admits exactly while 9005
-    // keeps rejecting
+    // keeps rejecting. Both feeds fill while the query is stopped and it
+    // restarts on the same checkpoint, so no trigger can fire between
+    // the two addData calls: batch 1 holds both sides
+    q.stop()
     del.addData(Seq(Vec(3L, emb(3L))))
     ing.addData(Seq(Vec(9003L, emb(3L)), Vec(9005L, emb(5L))))
+    q = start()
     q.processAllAvailable()
     val d1 = decisions(1)
     assert(d1(9003L) === "accepted", s"takedown must re-admit in-batch: $d1")
@@ -1129,9 +1175,10 @@ class StreamingSpec extends SparkSpecBase {
       .sortBy(_.doc_id).distinctBy(_.text).take(12)
     val ing = MemoryStream[GateDoc]
     val del = MemoryStream[GateDoc]
-    val q = Streaming.maintainedTextLifecycleStream(ing.toDF(), del.toDF(),
-      tbl, decDir, Files.createTempDirectory("text_lifecycle_ck").toString,
-      foldEvery = 2, majorEvery = 4)
+    val ck = Files.createTempDirectory("text_lifecycle_ck").toString
+    def start() = Streaming.maintainedTextLifecycleStream(ing.toDF(),
+      del.toDF(), tbl, decDir, ck, foldEvery = 2, majorEvery = 4)
+    var q = start()
     val tombId = graft.sim.Similarity.TombstoneBatchId
     def marks() = {
       spark.catalog.refreshTable(tbl)
@@ -1144,9 +1191,12 @@ class StreamingSpec extends SparkSpecBase {
     ing.addData(docs.take(8).toSeq); q.processAllAvailable()
     assert(decisions(0).values.count(_ == "unique") === 8)
     // b1: takedown of docs(3) interleaved with a same-batch re-ingest of
-    // its content (fresh id) and a copy of still-live docs(4)
+    // its content (fresh id) and a copy of still-live docs(4); both feeds
+    // fill while the query is stopped, so batch 1 holds both sides
+    q.stop()
     del.addData(Seq(docs(3)))
     ing.addData(Seq(GateDoc(900L, docs(3).text), GateDoc(901L, docs(4).text)))
+    q = start()
     q.processAllAvailable()
     val d1 = decisions(1)
     assert(d1(900L) === "unique", s"takedown must re-admit in-batch: $d1")
