@@ -396,7 +396,7 @@ object JoinQueries {
       graft.ops.Layouts.fileFp(s"$dir/customer.parquet"))
     val (ot, ct) = (s"g_bkt_orders_$tag", s"g_bkt_customer_$tag")
     if (!spark.catalog.tableExists(ot) || !spark.catalog.tableExists(ct)) {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bkt").toString
+      val tmp = graft.ops.Layouts.ownedTempDir(spark, "graft_bkt")
       graft.sources.Sources.writeBucketed(
         Tables.orders(spark, dir), ot, s"$tmp/orders", "o_custkey", 8)
       graft.sources.Sources.writeBucketed(

@@ -1,7 +1,8 @@
 package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Shared fingerprinting AND filesystem plumbing for PERSISTED layouts
   * (index tables, codebooks, partitioned corpora): a layout is only valid
@@ -57,6 +58,14 @@ object Layouts {
     if (fs.exists(p)) fs.delete(p, true)
   }
 
+  /** Rename `from` to `to`, failing loudly with `msg` when the store
+    * refuses — a silent false would let a publish or retire "succeed". */
+  def renameOrFail(spark: SparkSession, from: String, to: String,
+                   msg: => String): Unit = {
+    val p = new Path(from)
+    if (!fsOf(spark, p).rename(p, new Path(to))) sys.error(msg)
+  }
+
   /** Child entry NAMES of a directory (empty when absent) — scheme-aware
     * like every other layout primitive; used to count rebuild byproducts
     * (`_rb<N>` generations, orphaned-tombstone slots) so the maintenance
@@ -90,7 +99,6 @@ object Layouts {
   def hasParquetData(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
     val fs = fsOf(spark, p)
-    def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
     def walk(dir: Path): Boolean = {
       val st = fs.listStatus(dir).filterNot(s => hidden(s.getPath.getName))
       st.exists(s => !s.isDirectory && s.getPath.getName.endsWith(".parquet")) ||
@@ -99,28 +107,51 @@ object Layouts {
     fs.exists(p) && walk(p)
   }
 
-  /** Crash-atomic publish of a multi-step directory-layout build: when
-    * `idxDir` is absent, run `build` against a fresh `<idxDir>.build`
-    * staging dir (a crashed prior attempt is deleted first) and rename it
-    * into place only after the LAST step — a failure anywhere leaves only
-    * the staging dir, so a re-invocation rebuilds from scratch instead of
-    * serving a partial layout. Rename is atomic on local FS and HDFS; on
-    * object stores rename is a copy, where the per-subdir `_SUCCESS`
-    * gating ([[committed]]) is the actual read-path guard — document any
-    * new layout's read path against that. */
-  def buildIfAbsent(spark: SparkSession, idxDir: String)
-                   (build: String => Unit): Unit = {
-    val p = new Path(idxDir)
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) {
-      val b = new Path(idxDir + ".build")
-      if (fs.exists(b)) fs.delete(b, true)
-      build(b.toString)
-      if (!fs.rename(b, p)) sys.error(s"atomic publish of $idxDir failed")
+  /** Spark's reader path filter: `_`/`.`-prefixed names are hidden. */
+  private def hidden(name: String): Boolean =
+    name.startsWith("_") || name.startsWith(".")
+
+  /** Read a READER-HIDDEN (`_`-prefixed) dir — a staging or sidecar that
+    * keeps its prefix so the owning table's own scan never sees it. Spark
+    * filters on the LEAF name of each given path, so reading the dir itself
+    * works but logs `WARN DataSource: All paths were ignored` every time;
+    * passing its non-hidden children with `basePath` = the dir reads the
+    * same rows and partitions without the warning. `schema` skips
+    * inference; with no children the result is an empty frame under it. */
+  def readHidden(spark: SparkSession, dir: String,
+                 schema: Option[StructType] = None): DataFrame = {
+    val kids = listChildren(spark, dir).filterNot(hidden)
+    if (kids.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        schema.getOrElse(new StructType()))
+    else {
+      val reader = spark.read.option("basePath", dir)
+      schema.fold(reader)(reader.schema).parquet(kids.map(k => s"$dir/$k"): _*)
     }
   }
 
-  /** Catalog-table twin of [[buildIfAbsent]] — the staging-NAME +
+  /** The ONE JVM-owned root for catalog-table data dirs (index tables,
+    * bucketed copies, compaction outputs): created on first use, deleted
+    * when the JVM exits. The in-memory catalog that names those tables dies
+    * with the JVM too, so no table outlives its files and no build leaves
+    * a dir behind. */
+  private lazy val ownedRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_tables")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
+    root
+  }
+
+  /** A fresh dir under [[ownedRoot]] for one catalog table's files. Only
+    * under the in-memory catalog: a persistent one (Hive) would keep the
+    * table after the JVM exit reaped its files. */
+  def ownedTempDir(spark: SparkSession, prefix: String): String = {
+    val catalog = spark.conf.get("spark.sql.catalogImplementation", "in-memory")
+    require(catalog == "in-memory", s"catalog-table dirs are reaped at JVM " +
+      s"exit, which only the in-memory catalog outlives cleanly; got $catalog")
+    java.nio.file.Files.createTempDirectory(ownedRoot, prefix).toString
+  }
+
+  /** Catalog-table twin of `Similarity.ensureIvf` — the staging-NAME +
     * `ALTER TABLE RENAME` rule (r13, q145): when `table` is absent, run
     * the multi-step `build` (create + appends + tombstones) against
     * `<table>_build` — a crashed prior attempt is dropped first; these

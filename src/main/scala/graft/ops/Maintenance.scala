@@ -426,23 +426,25 @@ object Maintenance {
         IndexParams.indexBuckets(n, tables).toLong)
     }
 
-    val (ivfDir, k) = Similarity.ensureIvfLayout(spark, dir)
-    val ivfFactsF = () => {
-      val occ = Similarity.ivfLayoutOccupancies(spark, ivfDir)
+    // ONE facts gather for both directory-IVF flavors: actual k is the
+    // layout's own, target k re-derives from the current corpus
+    def ivfFacts(layout: String, ensured: (String, Long)) = () => {
+      val (idxDir, k) = ensured
+      val occ = Similarity.ivfLayoutOccupancies(spark, idxDir)
         .agg(sum(col("occ")), max(col("occ"))).head()
-      LayoutFacts("ivf_base", "ivf_layout", -1L, -1L, -1L,
+      LayoutFacts(layout, "ivf_layout", -1L, -1L, -1L,
         occ.getLong(0), occ.getLong(1), k, IndexParams.ivfK(n).toLong,
-        tombstones = sidecarTombstones(spark, ivfDir),
-        orphan_slots = Similarity.orphanedTombstoneSlots(spark, ivfDir))
+        tombstones = sidecarTombstones(spark, idxDir),
+        orphan_slots = Similarity.orphanedTombstoneSlots(spark, idxDir))
     }
+    val ivfFactsF = ivfFacts("ivf_base", Similarity.ensureIvfLayout(spark, dir))
 
     val apBuckets = IndexParams.indexBuckets(n, tables)
     val apTbl = "g_maint_ap_idx_" + Layouts.tag(
       Layouts.fileFp(s"$dir/embeddings.parquet"), apBuckets.toString,
       Layouts.Version)
     Layouts.buildTableIfAbsent(spark, apTbl) { staging =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_maint_ap")
-        .toString
+      val tmp = Layouts.ownedTempDir(spark, "graft_maint_ap")
       graft.streaming.Streaming.createAppendableIndex(spark, staging,
         s"$tmp/index", apBuckets)
       (0 until 3).foreach { b =>
@@ -488,8 +490,7 @@ object Maintenance {
       Layouts.fileFp(s"$dir/documents.parquet"), bandBuckets.toString,
       Layouts.Version)
     Layouts.buildTableIfAbsent(spark, bandTbl) { staging =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_maint_band")
-        .toString
+      val tmp = Layouts.ownedTempDir(spark, "graft_maint_band")
       graft.streaming.Streaming.createAppendableBandIndex(spark, staging,
         s"$tmp/index", bandBuckets)
       (0 until 3).foreach { b =>
@@ -505,15 +506,7 @@ object Maintenance {
     // table decays by insertInto generations like any other — a schedule
     // that cannot see either lets quantized deletion debt and file decay
     // accrue invisibly
-    val (sqIvfDir, sqK) = Similarity.ensureSqIvfLayout(spark, dir)
-    val sqIvfFactsF = () => {
-      val sqOcc = Similarity.ivfLayoutOccupancies(spark, sqIvfDir)
-        .agg(sum(col("occ")), max(col("occ"))).head()
-      LayoutFacts("sq_ivf", "ivf_layout", -1L, -1L, -1L,
-        sqOcc.getLong(0), sqOcc.getLong(1), sqK, IndexParams.ivfK(n).toLong,
-        tombstones = sidecarTombstones(spark, sqIvfDir),
-        orphan_slots = Similarity.orphanedTombstoneSlots(spark, sqIvfDir))
-    }
+    val sqIvfFactsF = ivfFacts("sq_ivf", Similarity.ensureSqIvfLayout(spark, dir))
 
     // actual = what the table was BUILT at (its own metadata), target =
     // the derivation for the current corpus — deriving both from the

@@ -597,7 +597,7 @@ object Similarity {
     val idx = "g_lsh_index_" +
       layoutTag(fileFp(s"$dir/embeddings.parquet"), planes.toString, LayoutVersion)
     if (!spark.catalog.tableExists(idx)) {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_lsh_idx").toString
+      val tmp = graft.ops.Layouts.ownedTempDir(spark, "graft_lsh_idx")
       // bucket count derives from the corpus like every other parameter
       // (64 at test SFs, ~n·tables/1M at scale — IndexParamsSpec)
       graft.sources.Sources.writeBucketed(
@@ -936,8 +936,7 @@ object Similarity {
     val idx = s"g_${tag}_index_" + layoutTag(
       fileFp(s"$dir/embeddings.parquet"), s"$tag$planes", LayoutVersion)
     graft.ops.Layouts.buildTableIfAbsent(spark, idx) { staging =>
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft_${tag}_idx").toString
+      val tmp = graft.ops.Layouts.ownedTempDir(spark, s"graft_${tag}_idx")
       graft.streaming.Streaming.createAppendableIndex(spark, staging,
         s"$tmp/index",
         createBuckets.getOrElse(IndexParams.indexBuckets(n, tables)))
@@ -1280,7 +1279,7 @@ object Similarity {
       if (spark.catalog.tableExists(idx)) spark.sql(s"DROP TABLE $idx")
       writeSqStats(eSlim, statsDir)
       val stats = sqStatsLocal(spark, statsDir) // the frozen copy, not the plan
-      val tmp = java.nio.file.Files.createTempDirectory("graft_sq_idx").toString
+      val tmp = graft.ops.Layouts.ownedTempDir(spark, "graft_sq_idx")
       graft.sources.Sources.writeBucketed(
         indexedRelation(eSlim, planes, tables)
           .select(col("sig"), col("vec_id"),
@@ -1299,263 +1298,6 @@ object Similarity {
     val probes = eSlim.filter(col("vec_id") % 89 === 0)
       .select((col("vec_id") + offset).as("qid"), col("embedding"))
     probeSqIndex(spark, idx, statsDir, probes, planes, tables, eSlim)
-      .withColumn("hit", col("retrieved_id") === col("qid") - offset)
-      .orderBy(col("qid"))
-  }
-
-  /** The q154 SQ8-IVF layout directory for `dir`'s embeddings at cluster
-    * count `k` — fingerprint-named like every layout (q143 rule). Holds
-    * three subdirs: `centroids` (float, frozen — the q143/q146 rule),
-    * `stats` (the per-dim codebook, frozen beside the codes it wrote —
-    * the q149 rule), and `assigned` (cid-partitioned tinyint codes, NO
-    * float vectors). */
-  def sqIvfLayoutDir(dir: String, k: Int): String =
-    System.getProperty("java.io.tmpdir") + "/graft_ivf_sq_" +
-      layoutTag(fileFp(s"$dir/embeddings.parquet"), k.toString, LayoutVersion)
-
-  /** First stage of the quantized IVF serving path: rank the PERSISTED
-    * centroids per probe (broadcast of k×dim doubles), collect the wanted
-    * cluster ids (≤ k ints), read only those partitions of the QUANTIZED
-    * layout (PartitionFilters over tinyint-code files — nprobe/k of the
-    * index bytes, and those already 4× smaller than float), approximate
-    * cosine against dequantized codes, top-R candidates per probe. Public
-    * so specs can pin the pruned-scan shape [[probeSqIvf]] consumes
-    * eagerly. */
-  /** Probe→centroid routing for the IVF serving paths, collected ONCE
-    * (r21): the routing pipeline (probes scan → broadcast centroid cross
-    * join → top-nprobe window) previously ran TWICE per probe call — once
-    * to collect the wanted partition ids for pruning and once recomputed
-    * inside the candidate query itself. Probes are a bounded serving
-    * batch by contract (the [[localizeProbes]] rule, enforced with the
-    * same loud [[MaxCollectProbes]] guard), so the (qid, qe, cid) routing
-    * relation collects once, the partition list derives driver-side, and
-    * the routing re-enters the candidate join as a broadcast LOCAL
-    * relation — one pipeline run instead of two, and the candidate join's
-    * build side is exact instead of estimate-driven. */
-  private def localizeProbeClusters(spark: SparkSession, probes: DataFrame,
-      centroidsDisk: DataFrame, nprobe: Int): (DataFrame, Array[Int]) = {
-    val wC = Window.partitionBy(col("qid")).orderBy(col("csim").desc, col("cid"))
-    val pc = probes.select(col("qid"), col("embedding").as("qe"))
-      .crossJoin(broadcast(centroidsDisk))
-      .withColumn("csim", cosine(col("qe"), col("ce")))
-      .withColumn("crn", row_number().over(wC))
-      .filter(col("crn") <= nprobe)
-      .select(col("qid"), col("qe"), col("cid"))
-    val rows = pc.limit(MaxCollectProbes + 1).collect()
-    require(rows.length <= MaxCollectProbes,
-      s"serving batch exceeds $MaxCollectProbes (probe, cluster) rows — " +
-        "too large to collect for the partition-pruned serving path; " +
-        "ingest-scale batches belong on a distributed join, not probeIvf")
-    val cids = rows.map(_.getAs[Long]("cid")).distinct.sorted.map(_.toInt)
-    (spark.createDataFrame(java.util.Arrays.asList(rows: _*), pc.schema), cids)
-  }
-
-  def sqIvfCandidates(spark: SparkSession, idxDir: String, probes: DataFrame,
-                      nprobe: Int, topR: Int,
-                      live: Boolean = false): DataFrame = {
-    ensureRegistered(spark)
-    val stats = sqStatsLocal(spark, s"$idxDir/stats")
-    val centroidsDisk = spark.read.parquet(s"$idxDir/centroids")
-    val (probeClusters, wantedCids) =
-      localizeProbeClusters(spark, probes, centroidsDisk, nprobe)
-    val wA = Window.partitionBy(col("qid"))
-      .orderBy(col("approx").desc, col("cid_vec"))
-    val scoped = spark.read.parquet(s"$idxDir/assigned")
-      .filter(col("cid").isin(wantedCids.map(Int.box): _*))
-    // merge-on-read deletion (live = true): tombstoned codes leave the
-    // candidate set HERE, which suffices for the whole two-stage serve —
-    // the exact rescore inner-joins the collected candidate list, so a
-    // row absent from it can never re-enter via the corpus lookup
-    val alive = if (!live) scoped else ivfTombstones(spark, idxDir) match {
-      case Some(t) => scoped.join(
-        t.filter(col("cid").isin(wantedCids.map(Int.box): _*)),
-        Seq("cid", "vec_id"), "left_anti")
-      case None => scoped
-    }
-    alive
-      .select(col("cid"), col("vec_id").as("cid_vec"), col("qcode"))
-      .join(broadcast(probeClusters), "cid")
-      .withColumn("approx", cosine(col("qe"), reconExpr(col("qcode"), stats)))
-      .select(col("qid"), col("cid_vec"), col("approx"))
-      .withColumn("rn", row_number().over(wA))
-      .filter(col("rn") <= topR)
-      .select(col("qid"), col("cid_vec").as("cid"), col("approx"))
-  }
-
-  /** Serving path against the QUANTIZED IVF layout (q154): candidate
-    * generation reads only tinyint codes from the nprobe pruned
-    * partitions ([[sqIvfCandidates]]), then the shared exact-rescore
-    * stage ([[exactRescoreTop1]], the q149 second stage) re-scores the
-    * bounded candidate set at full precision and emits the exact argmax.
-    * `probes` must carry (qid, embedding) and is a serving batch by
-    * contract (it broadcasts into the rescore). */
-  def probeSqIvf(spark: SparkSession, idxDir: String, probes: DataFrame,
-                 nprobe: Int, corpus: DataFrame, topR: Int = 8,
-                 live: Boolean = false): DataFrame = {
-    ensureRegistered(spark)
-    val candStage = sqIvfCandidates(spark, idxDir, probes, nprobe, topR, live)
-      .select(col("qid"), col("cid"))
-    exactRescoreTop1(spark, corpus, candStage,
-      probes.select(col("qid"), col("embedding").as("qe")))
-  }
-
-  /** q154: SQ8-QUANTIZED IVF layout with exact rescore — q149's storage
-    * tier applied to the OTHER index family, closing the quantization
-    * story for both (LSH buckets q149, IVF partitions here): the
-    * `assigned` dir stores (vec_id, qcode array<tinyint>) partitioned by
-    * cid — no float vectors in the index, 4× less I/O per probed
-    * partition on top of the nprobe/k partition pruning — while the
-    * centroids stay float (k×dim doubles, the routing state every IVF
-    * probe broadcasts; quantizing them would change routing for no
-    * storage win).
-    *
-    * Frozen-artifact rules compose: centroids are persisted and never
-    * retrained (q143/q146 — retraining would re-route probes away from
-    * stored partitions), the codebook is persisted beside the codes it
-    * wrote (q149 — recomputed stats could disagree with stored codes),
-    * and the multi-step build (centroids → stats → assigned) is
-    * crash-atomic via temp-dir + rename (the q146 convention: a partial
-    * build is invisible, a re-invocation rebuilds from scratch).
-    *
-    * The planted oracle is exact through BOTH approximations, by the
-    * composed q143 + q149 arguments: a probe is a bit-exact copy of its
-    * original, so centroid ranking (a pure function of embedding ×
-    * frozen centroids) routes it to the partition its original is stored
-    * under at any nprobe ≥ 1; there its approximate score ≈ 1 − ε clears
-    * the ≈0.53 natural tail at any top-R ≥ 1, and the exact rescore
-    * reproduces the exhaustive full-precision argmax DuckDB recomputes —
-    * independent of centroid noise, codebook noise, nprobe, and R. */
-  /** Build-or-reuse the q154 quantized IVF layout (frozen centroids +
-    * frozen codebook + cid-partitioned tinyint codes). Returns
-    * (layout dir, k); shared by the probe and the q155 maintenance
-    * audit. */
-  def ensureSqIvfLayout(spark: SparkSession, dir: String): (String, Long) = {
-    ensureRegistered(spark)
-    implicit val s: SparkSession = spark
-    val e = Tables.embeddings(spark, dir)
-    val k = IndexParams.ivfK(e.count())
-    val idxDir = sqIvfLayoutDir(dir, k)
-    val eSlim = e.select(col("vec_id"), col("embedding"))
-    graft.ops.Layouts.buildIfAbsent(spark, idxDir)(
-      buildSqIvfDir(spark, eSlim, _, k))
-    (idxDir, k.toLong)
-  }
-
-  def q154SqIvfProbe(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
-    implicit val s: SparkSession = spark
-    val offset = 19000000L; val nprobe = 2
-    val (idxDir, _) = ensureSqIvfLayout(spark, dir)
-    val eSlim = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-    val probes = eSlim.filter(col("vec_id") % 139 === 0)
-      .select((col("vec_id") + offset).as("qid"), col("embedding"))
-    probeSqIvf(spark, idxDir, probes, nprobe, eSlim)
-      .withColumn("hit", col("retrieved_id") === col("qid") - offset)
-      .orderBy(col("qid"))
-  }
-
-  /** q160: deletion from the QUANTIZED IVF layout — the last serving path
-    * without a takedown story (q157 bucketed table, q158 band table,
-    * q159 float directory): the same frozen-centroid-routed sidecar marks
-    * as q159 ([[tombstoneIvfRows]] reads only `centroids`, which both
-    * directory flavors persist identically), anti-joined out of the
-    * candidate stage (`live = true` on [[sqIvfCandidates]]) — which
-    * suffices for the whole two-stage serve, because the exact rescore
-    * inner-joins the collected candidate list and a row absent from it
-    * cannot re-enter via the corpus lookup. Marks land inside the same
-    * crash-atomic build; [[purgeIvfTombstones]] applies unchanged (the
-    * purge never reads the payload columns it rewrites).
-    *
-    * Exactness composes q159's flip argument with q154's quantization
-    * margin: probe and surviving copy share the embedding bits, so
-    * routing, stored codes and approximate score coincide; with the
-    * original anti-joined out, the copy's ≈ 1 − ε approximate score
-    * clears the natural tail at any top-R ≥ 1 and the exact rescore
-    * emits the exhaustive argmax over corpus-minus-deleted. */
-  def q160SqIvfDeleteProbe(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
-    implicit val s: SparkSession = spark
-    val copyShift = 28000000L; val offset = 29000000L; val nprobe = 2
-    val e = Tables.embeddings(spark, dir)
-    val k = IndexParams.ivfK(e.count())
-    val idxDir = System.getProperty("java.io.tmpdir") + "/graft_ivf_sq_del_" +
-      layoutTag(fileFp(s"$dir/embeddings.parquet"), k.toString, LayoutVersion)
-    val eSlim = e.select(col("vec_id"), col("embedding"))
-    val copies = eSlim.filter(col("vec_id") % 7 === 0)
-      .select((col("vec_id") + copyShift).as("vec_id"), col("embedding"))
-    val union = eSlim.unionByName(copies)
-    graft.ops.Layouts.buildIfAbsent(spark, idxDir) { build =>
-      ivfCentroids(e, k, iters = 2).write.parquet(s"$build/centroids")
-      writeSqStats(eSlim, s"$build/stats")
-      val cd = spark.read.parquet(s"$build/centroids")
-      val stats = sqStatsLocal(spark, s"$build/stats")
-      assignToCentroid(union, cd)
-        .select(col("vec_id"),
-          quantizeExpr(col("embedding"), stats).as("qcode"), col("cid"))
-        .write.partitionBy("cid").parquet(s"$build/assigned")
-      // the takedown lands inside the same atomic unit (q159 rule)
-      tombstoneIvfRows(spark, build,
-        eSlim.filter(col("vec_id") % 7 === 0))
-    }
-    val probes = eSlim.filter(col("vec_id") % 7 === 0)
-      .select((col("vec_id") + offset).as("qid"), col("embedding"))
-    probeSqIvf(spark, idxDir, probes, nprobe, union, live = true)
-      .withColumn("hit",
-        col("retrieved_id") === col("qid") - (offset - copyShift))
-      .orderBy(col("qid"))
-  }
-
-  /** q156: incremental append into the QUANTIZED IVF layout — the q146
-    * append story for the q154 flavor, completing the append symmetry
-    * across all four index shapes (float LSH q145, float IVF q146,
-    * quantized LSH via the same insertInto contract, quantized IVF
-    * here). A delta batch is routed by the FROZEN persisted centroids
-    * (q146 rule) and coded by the FROZEN persisted codebook (q149 rule —
-    * re-deriving stats over base+delta would make old codes unreadable);
-    * out-of-codebook delta values SATURATE to edge codes
-    * ([[quantizeExpr]]) instead of erroring, the graceful-degradation
-    * contract a frozen codebook needs. Build is crash-atomic via
-    * temp-dir + rename spanning base write AND delta append (q146
-    * convention).
-    *
-    * Oracle exactness composes the q146 + q149 arguments: a probe is a
-    * bit-exact copy of a union vector, so frozen-centroid ranking routes
-    * it to its original's stored partition (pure function of the value);
-    * the original's code equals the probe-content's code (same frozen
-    * codebook), so its approximate score ≈ 1 − ε survives any top-R; and
-    * the exact rescore over the full-precision union emits the
-    * exhaustive argmax DuckDB recomputes. Saturation only widens ε on
-    * out-of-range dims — the certain candidate still clears the ≈0.55
-    * natural/reversal tail (validated at both SFs). */
-  def q156SqIvfAppendProbe(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
-    implicit val s: SparkSession = spark
-    val deltaShift = 21000000L; val offset = 22000000L; val nprobe = 2
-    val e = Tables.embeddings(spark, dir)
-    val k = IndexParams.ivfK(e.count())
-    val idxDir = System.getProperty("java.io.tmpdir") + "/graft_ivf_sq_inc_" +
-      layoutTag(fileFp(s"$dir/embeddings.parquet"), k.toString, LayoutVersion)
-    val eSlim = e.select(col("vec_id"), col("embedding"))
-    val delta = eSlim.select((col("vec_id") + deltaShift).as("vec_id"),
-      reverse(col("embedding")).as("embedding"))
-    graft.ops.Layouts.buildIfAbsent(spark, idxDir) { build =>
-      ivfCentroids(e, k, iters = 2).write.parquet(s"$build/centroids")
-      writeSqStats(eSlim, s"$build/stats")
-      val cd = spark.read.parquet(s"$build/centroids")
-      val stats = sqStatsLocal(spark, s"$build/stats")
-      def coded(src: DataFrame) = assignToCentroid(src, cd)
-        .select(col("vec_id"),
-          quantizeExpr(col("embedding"), stats).as("qcode"), col("cid"))
-      coded(eSlim).write.partitionBy("cid").parquet(s"$build/assigned")
-      // the incremental append: frozen centroids AND frozen codebook
-      coded(delta).write.mode("append").partitionBy("cid")
-        .parquet(s"$build/assigned")
-    }
-    val union = eSlim.unionByName(delta)
-    val probes = union.filter(col("vec_id") % 131 === 0)
-      .select((col("vec_id") + offset).as("qid"), col("embedding"))
-    probeSqIvf(spark, idxDir, probes, nprobe, union)
       .withColumn("hit", col("retrieved_id") === col("qid") - offset)
       .orderBy(col("qid"))
   }
@@ -1600,7 +1342,7 @@ object Similarity {
     // the delta landed — a failure mid-append can never leave a
     // registered base-only index that later invocations silently serve
     graft.ops.Layouts.buildTableIfAbsent(spark, idx) { staging =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_lsh_inc").toString
+      val tmp = graft.ops.Layouts.ownedTempDir(spark, "graft_lsh_inc")
       val buckets = IndexParams.indexBuckets(n, tables)
       graft.sources.Sources.writeBucketed(indexed(eSlim), staging, s"$tmp/index", "sig",
         buckets)
@@ -1656,7 +1398,7 @@ object Similarity {
     val idx = "g_lsh_index_cmp_" +
       layoutTag(fileFp(s"$dir/embeddings.parquet"), planes.toString, LayoutVersion)
     graft.ops.Layouts.buildTableIfAbsent(spark, idx) { staging =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_lsh_cmp").toString
+      val tmp = graft.ops.Layouts.ownedTempDir(spark, "graft_lsh_cmp")
       graft.sources.Sources.writeBucketed(indexed(eSlim), staging,
         s"$tmp/index", "sig", buckets)
       // two separate ingest batches: each insertInto lands its own
@@ -1714,36 +1456,276 @@ object Similarity {
     * dir per regeneration — reclaiming it is an ops sweep's job, not the
     * query path's; deleting sibling tags here could race a concurrent
     * session still probing them). */
-  def q143IvfPartitionedProbe(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
-    implicit val s: SparkSession = spark
-    import spark.implicits._
-    val offset = 8000000L; val nprobe = 2
-    val e = Tables.embeddings(spark, dir)
-    val (idxDir, _) = ensureIvfLayout(spark, dir)
-    val probes = e.filter(col("vec_id") % 150 === 0)
-      .select((col("vec_id") + offset).as("qid"), col("embedding"))
-    probeIvf(spark, idxDir, probes, nprobe)
-      .withColumn("hit", col("retrieved_id") === col("qid") - offset)
-      .orderBy(col("qid"))
+  def q143IvfPartitionedProbe(spark: SparkSession, dir: String): DataFrame =
+    ivfLifecycleProbe(spark, dir, FloatIvf, "idx", modulus = 150,
+      offset = 8000000L)(ivfBaseSteps(spark, FloatIvf))
+
+  /** The directory-IVF FLAVOR as data — all that differs between the
+    * float layout (q143) and the SQ8 layout (q154). Every lifecycle step
+    * below (naming, ensure, build, append, candidate read, rebuild, marks,
+    * purge) is written once against it:
+    *  - `subdirs`, what a complete layout commits: `centroids` (float,
+    *    frozen — the q143/q146 rule) and `assigned` (cid-partitioned
+    *    rows), plus for SQ8 `stats` (the per-dim codebook, frozen beside
+    *    the codes it wrote — the q149 rule);
+    *  - the payload projection at build and append time ([[encode]]):
+    *    the float `embedding`, or its tinyint `qcode` under the frozen
+    *    codebook (no float vectors, 4× less I/O per probed partition);
+    *  - the candidate scorer: exact cosine top-1 ([[probeIvf]]), or
+    *    approximate cosine over the dequantized codes ([[decode]]) top-R
+    *    plus the exact full-precision rescore ([[probeSqIvf]]). */
+  final case class IvfFlavor(quantized: Boolean) {
+    val subdirs: Seq[String] =
+      if (quantized) Seq("centroids", "stats", "assigned")
+      else Seq("centroids", "assigned")
+
+    /** True iff `idxDir` holds a complete layout (every subdir committed —
+      * the q143 `_SUCCESS` convention). */
+    def built(spark: SparkSession, idxDir: String): Boolean =
+      subdirs.forall(sub => graft.ops.Layouts.committed(spark, s"$idxDir/$sub"))
+
+    /** The `assigned` payload of an `embedding` row under `idxDir`'s
+      * frozen codebook. */
+    private[sim] def encode(spark: SparkSession, idxDir: String): Column =
+      if (quantized)
+        quantizeExpr(col("embedding"), sqStatsLocal(spark, s"$idxDir/stats"))
+          .as("qcode")
+      else col("embedding")
+
+    /** The stored payload as the float vector a candidate scores with. */
+    private[sim] def decode(spark: SparkSession, idxDir: String): Column =
+      if (quantized) reconExpr(col("qcode"), sqStatsLocal(spark, s"$idxDir/stats"))
+      else col("embedding")
   }
 
-  /** Build-or-reuse the base IVF layout over `dir`'s embeddings (the
-    * q143 layout: persisted centroids + cid-partitioned assignment,
-    * `_SUCCESS`-checked per subdir — single-write-per-subdir builds are
-    * crash-safe on that alone, the r13 rule). Returns (layout dir, k);
-    * parameters derive from the BASE corpus count. Shared by the q143
-    * probe, the q147 health monitor, and the q155 maintenance
-    * scheduler. */
-  def ensureIvfLayout(spark: SparkSession, dir: String): (String, Long) = {
+  val FloatIvf: IvfFlavor = IvfFlavor(quantized = false)
+  val SqIvf: IvfFlavor = IvfFlavor(quantized = true)
+
+  def ivfLayoutBuilt(spark: SparkSession, idxDir: String): Boolean =
+    FloatIvf.built(spark, idxDir)
+  def sqIvfLayoutBuilt(spark: SparkSession, idxDir: String): Boolean =
+    SqIvf.built(spark, idxDir)
+
+  /** THE directory-IVF layout name for `dir`'s embeddings at cluster count
+    * `k`: `<java.io.tmpdir>/graft_ivf_<role>_<tag>`, fingerprint-named
+    * (layout naming rules as documented on [[q143IvfPartitionedProbe]]).
+    * `role` separates the layouts one corpus carries: `idx` (the q143
+    * base, audited by q147 and q155), `sq` (the q154 base), and the
+    * lifecycle probes' `inc`/`del`/`rb` with their `sq_` twins. */
+  def ivfLayoutDir(dir: String, k: Int, role: String): String =
+    System.getProperty("java.io.tmpdir") + s"/graft_ivf_${role}_" +
+      layoutTag(fileFp(s"$dir/embeddings.parquet"), k.toString, LayoutVersion)
+
+  def ivfBaseLayoutDir(dir: String, k: Int): String = ivfLayoutDir(dir, k, "idx")
+  def sqIvfLayoutDir(dir: String, k: Int): String = ivfLayoutDir(dir, k, "sq")
+
+  /** THE build-or-reuse of a directory-IVF layout. When `idxDir` is not
+    * built:
+    *  - rebuild evidence — a built `<idxDir>.build` or a
+    *    `<idxDir>.retiring` — means a crashed in-place [[rebuildIvf]]
+    *    publish: that staging is the only copy honoring the marks that sit
+    *    in `.retiring/tombstones`, so the publish RESUMES
+    *    ([[publishIvfStaging]]) and the corpus is never read — a fresh
+    *    build would serve every taken-down row again, with no schedule fact
+    *    counting them;
+    *  - otherwise `steps` writes a fresh `<idxDir>.ensure` (a partial one
+    *    is deleted first) and the same publish renames it into place, so a
+    *    failure anywhere leaves only that staging, never a partial layout.
+    *    It is NOT the rebuild's `.build`: a multi-step build (q146's delta
+    *    append, q159's copies and marks) passes `built` after its first
+    *    step, so a crash inside the steps would read as rebuild evidence
+    *    and publish a base-only or unmarked layout.
+    * Rename is atomic on local FS and HDFS; on object stores the
+    * per-subdir `_SUCCESS` gating ([[IvfFlavor.built]]) is the read-path
+    * guard. */
+  private[graft] def ensureIvf(spark: SparkSession, flavor: IvfFlavor,
+      idxDir: String)(steps: String => Unit): Unit =
+    if (!flavor.built(spark, idxDir)) {
+      if (flavor.built(spark, s"$idxDir.build") ||
+          graft.ops.Layouts.exists(spark, s"$idxDir.retiring"))
+        publishIvfStaging(spark, flavor, s"$idxDir.build", idxDir)
+      else {
+        val fresh = s"$idxDir.ensure"
+        graft.ops.Layouts.delete(spark, fresh)
+        steps(fresh)
+        publishIvfStaging(spark, flavor, fresh, idxDir)
+      }
+    }
+
+  /** Publish the complete `staging` over `idxDir` — the one publish of
+    * [[ensureIvf]] and [[rebuildIvf]]: a husk's sidecar is preserved
+    * aside, the staging renamed into place, THEN a retired copy drained
+    * (its sidecar preserved aside; draining after the rename keeps the
+    * live dir's absence to one rename, and a built live dir beside a
+    * `.retiring` is a classified state), and every preserved mark re-keyed
+    * against the published layout IMMEDIATELY (the reissue, not operator
+    * debt — a takedown must never wait on a human). */
+  private def publishIvfStaging(spark: SparkSession, flavor: IvfFlavor,
+                                staging: String, idxDir: String): Unit = {
+    require(flavor.built(spark, staging),
+      s"$idxDir: rebuild evidence without a complete staging copy — " +
+        "rebuilding from the corpus would resurrect the retired marks' rows")
+    preserveSidecarAside(spark, s"$idxDir/tombstones", idxDir)
+    graft.ops.Layouts.delete(spark, idxDir)
+    graft.ops.Layouts.renameOrFail(spark, staging, idxDir,
+      s"atomic publish of $idxDir failed")
+    drainRetired(spark, s"$idxDir.retiring", idxDir)
+    reissueOrphanedTombstones(spark, idxDir)
+  }
+
+  /** `dir`'s corpus (vec_id, embedding), the k its BASE count derives (the
+    * r13 rule) and the `role` layout dir at that k. */
+  private def resolveIvf(spark: SparkSession, dir: String,
+                         role: String): (DataFrame, Int, String) = {
+    val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
+    val k = IndexParams.ivfK(base.count())
+    (base, k, ivfLayoutDir(dir, k, role))
+  }
+
+  /** Build-or-reuse the q143 float base layout. Returns (layout dir, k);
+    * shared by the probe, the q147 health monitor and the q155
+    * maintenance scheduler. */
+  def ensureIvfLayout(spark: SparkSession, dir: String): (String, Long) =
+    ensureBaseIvf(spark, dir, FloatIvf, "idx")
+
+  /** Build-or-reuse the q154 SQ8 base layout (frozen centroids + frozen
+    * codebook + cid-partitioned tinyint codes); shared by the probe and
+    * the q155 maintenance audit. */
+  def ensureSqIvfLayout(spark: SparkSession, dir: String): (String, Long) =
+    ensureBaseIvf(spark, dir, SqIvf, "sq")
+
+  private def ensureBaseIvf(spark: SparkSession, dir: String,
+                            flavor: IvfFlavor, role: String): (String, Long) = {
     ensureRegistered(spark)
-    implicit val s: SparkSession = spark
-    val e = Tables.embeddings(spark, dir)
-    val k = IndexParams.ivfK(e.count())
-    val idxDir = ivfBaseLayoutDir(dir, k)
-    if (!ivfLayoutBuilt(spark, idxDir)) buildIvfDir(spark, e, idxDir, k)
+    val (base, k, idxDir) = resolveIvf(spark, dir, role)
+    ivfBaseSteps(spark, flavor)(idxDir, base, base, k)
     (idxDir, k.toLong)
   }
+
+  /** THE directory-IVF build: train Lloyd centroids on `base` and persist
+    * them (plus, for SQ8, the per-dim codebook over `base`), then land
+    * `batches` through [[appendIvf]] — assignment and coding run against
+    * the PERSISTED copies, the same doubles probes will rank and decode.
+    * Every caller builds into a freshly deleted target. */
+  private[graft] def buildIvf(spark: SparkSession, flavor: IvfFlavor,
+      base: DataFrame, target: String, k: Int)(batches: DataFrame*): Unit = {
+    implicit val s: SparkSession = spark
+    ivfCentroids(base, k, iters = 2).write.parquet(s"$target/centroids")
+    if (flavor.quantized) writeSqStats(base, s"$target/stats")
+    appendIvf(spark, flavor, target, batches: _*)
+  }
+
+  /** THE frozen-centroid, frozen-codebook append (q146/q156): each batch
+    * of (vec_id, embedding) rows, one append write apiece, is routed by the
+    * layout's PERSISTED centroids — never retrained: re-running Lloyd over
+    * base+delta would reshuffle stored assignments and invalidate every
+    * partition — and coded by its PERSISTED codebook — never re-derived:
+    * old codes would become unreadable; out-of-codebook values saturate
+    * ([[quantizeExpr]]). Both are read once per call. */
+  private[graft] def appendIvf(spark: SparkSession, flavor: IvfFlavor,
+                               idxDir: String, batches: DataFrame*): Unit = {
+    val cd = spark.read.parquet(s"$idxDir/centroids")
+    val payload = flavor.encode(spark, idxDir)
+    batches.foreach(rows =>
+      assignToCentroid(rows.select(col("vec_id"), col("embedding")), cd)
+        .select(col("vec_id"), payload, col("cid"))
+        .write.mode("append").partitionBy("cid").parquet(s"$idxDir/assigned"))
+  }
+
+  /** Probe→centroid routing for the IVF serving paths, collected ONCE
+    * (r21): the routing pipeline (probes scan → broadcast centroid cross
+    * join → top-nprobe window) previously ran TWICE per probe call — once
+    * to collect the wanted partition ids for pruning and once recomputed
+    * inside the candidate query itself. Probes are a bounded serving
+    * batch by contract (the [[localizeProbes]] rule, enforced with the
+    * same loud [[MaxCollectProbes]] guard), so the (qid, qe, cid) routing
+    * relation collects once, the partition list derives driver-side, and
+    * the routing re-enters the candidate join as a broadcast LOCAL
+    * relation — one pipeline run instead of two, and the candidate join's
+    * build side is exact instead of estimate-driven. */
+  private def localizeProbeClusters(spark: SparkSession, probes: DataFrame,
+      centroidsDisk: DataFrame, nprobe: Int): (DataFrame, Array[Int]) = {
+    val wC = Window.partitionBy(col("qid")).orderBy(col("csim").desc, col("cid"))
+    val pc = probes.select(col("qid"), col("embedding").as("qe"))
+      .crossJoin(broadcast(centroidsDisk))
+      .withColumn("csim", cosine(col("qe"), col("ce")))
+      .withColumn("crn", row_number().over(wC))
+      .filter(col("crn") <= nprobe)
+      .select(col("qid"), col("qe"), col("cid"))
+    val rows = pc.limit(MaxCollectProbes + 1).collect()
+    require(rows.length <= MaxCollectProbes,
+      s"serving batch exceeds $MaxCollectProbes (probe, cluster) rows — " +
+        "too large to collect for the partition-pruned serving path; " +
+        "ingest-scale batches belong on a distributed join, not probeIvf")
+    val cids = rows.map(_.getAs[Long]("cid")).distinct.sorted.map(_.toInt)
+    (spark.createDataFrame(java.util.Arrays.asList(rows: _*), pc.schema), cids)
+  }
+
+  /** THE candidate read of every directory-IVF serve: route the probes to
+    * their nprobe nearest PERSISTED centroids ([[localizeProbeClusters]]),
+    * read only those partitions of `assigned` (int literals, so `cid IN`
+    * lands in PartitionFilters with no cast — nprobe/k of the index bytes),
+    * and with `live = true` anti-join the (cid, vec_id) tombstone sidecar
+    * pruned to the SAME partitions: merge-on-read deletion for one bounded
+    * side read and no extra corpus I/O, answers identical before and after
+    * the physical purge. Each candidate scores by cosine against the
+    * flavor's decoded payload; the top `topR` per probe survive as (qid,
+    * cid, score). `probes` must carry (qid, embedding). */
+  private def ivfCandidates(spark: SparkSession, flavor: IvfFlavor,
+      idxDir: String, probes: DataFrame, nprobe: Int, topR: Int,
+      live: Boolean): DataFrame = {
+    ensureRegistered(spark)
+    val (probeClusters, wantedCids) = localizeProbeClusters(spark, probes,
+      spark.read.parquet(s"$idxDir/centroids"), nprobe)
+    val wanted = col("cid").isin(wantedCids.map(Int.box): _*)
+    val scoped = spark.read.parquet(s"$idxDir/assigned").filter(wanted)
+    val alive = (if (live) ivfTombstones(spark, idxDir) else None) match {
+      case Some(t) => scoped.join(t.filter(wanted), Seq("cid", "vec_id"), "left_anti")
+      case None => scoped
+    }
+    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("cid_vec"))
+    alive.withColumnRenamed("vec_id", "cid_vec")
+      .join(broadcast(probeClusters), "cid")
+      .withColumn("score", cosine(col("qe"), flavor.decode(spark, idxDir)))
+      .select(col("qid"), col("cid_vec"), col("score"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= topR)
+      .select(col("qid"), col("cid_vec").as("cid"), col("score"))
+  }
+
+  /** The float scorer: the exact-cosine top-1 per probe (qid,
+    * retrieved_id, sim), straight from [[ivfCandidates]]. */
+  def probeIvf(spark: SparkSession, idxDir: String, probes: DataFrame,
+               nprobe: Int, live: Boolean = false): DataFrame =
+    ivfCandidates(spark, FloatIvf, idxDir, probes, nprobe, 1, live)
+      .select(col("qid"), col("cid").as("retrieved_id"),
+        Exprs.dround(col("score"), 6).as("sim"))
+
+  /** The SQ8 candidate stage: approximate cosine over the dequantized codes
+    * of the pruned partitions, top-R per probe (qid, cid, approx). Public
+    * so specs can pin the pruned-scan shape [[probeSqIvf]] consumes. With
+    * `live`, a tombstoned code leaves HERE, which suffices for the whole
+    * two-stage serve: the exact rescore inner-joins the collected candidate
+    * list, so an absent row cannot re-enter via the corpus lookup. */
+  def sqIvfCandidates(spark: SparkSession, idxDir: String, probes: DataFrame,
+                      nprobe: Int, topR: Int,
+                      live: Boolean = false): DataFrame =
+    ivfCandidates(spark, SqIvf, idxDir, probes, nprobe, topR, live)
+      .withColumnRenamed("score", "approx")
+
+  /** The SQ8 scorer (q154): [[sqIvfCandidates]] then the shared exact
+    * rescore ([[exactRescoreTop1]], the q149 second stage) of the bounded
+    * candidate set against the full-precision `corpus` — quantization
+    * decides WHICH candidates are ranked, never the reported score.
+    * `probes` is a serving batch by contract (it broadcasts into the
+    * rescore). */
+  def probeSqIvf(spark: SparkSession, idxDir: String, probes: DataFrame,
+                 nprobe: Int, corpus: DataFrame, topR: Int = 8,
+                 live: Boolean = false): DataFrame =
+    exactRescoreTop1(spark, corpus,
+      ivfCandidates(spark, SqIvf, idxDir, probes, nprobe, topR, live)
+        .select(col("qid"), col("cid")),
+      probes.select(col("qid"), col("embedding").as("qe")))
 
   /** The REBUILD tool behind the q155 schedule's `rebalance` /
     * `rederive_params` actions for directory IVF layouts: re-derive k
@@ -1769,72 +1751,13 @@ object Similarity {
     * and drained only after the publish), while an unchanged k (the
     * rebalance case, oldIdxDir == newIdxDir) replaces in place. Crash
     * windows, retire semantics, and the immediate re-keying of preserved
-    * sidecars are [[rebuildDirProtocol]]'s (r17: retire is RENAME-ASIDE,
+    * sidecars are [[rebuildIvf]]'s (r17: retire is RENAME-ASIDE,
     * every crash state classified; orphaned marks re-key at publish,
     * never operator debt). Maintenance-op single-writer contract applies
     * (no concurrent takedowns mid-run). */
   def rebuildIvfLayout(spark: SparkSession, corpus: DataFrame,
-                       oldIdxDir: String, newIdxDir: String, k: Int): Unit = {
-    implicit val s: SparkSession = spark
-    rebuildDirProtocol(spark, corpus, oldIdxDir, newIdxDir,
-      built = ivfLayoutBuilt(spark, _),
-      build = buildIvfDir(spark, _, _, k))
-  }
-
-  /** True iff `idxDir` holds a complete QUANTIZED IVF layout (all three
-    * subdirs committed — q154's centroids + stats + assigned). */
-  def sqIvfLayoutBuilt(spark: SparkSession, idxDir: String): Boolean =
-    Seq("centroids", "stats", "assigned").forall(sub =>
-      graft.ops.Layouts.committed(spark, s"$idxDir/$sub"))
-
-  /** [[rebuildIvfLayout]]'s QUANTIZED twin — the rebuild tool for the
-    * q154 SQ8-IVF layout's `rebalance`/`rederive_params` actions: same
-    * protocol (survivors exclude old-sidecar marks, crash-resume
-    * publish), but the staging build re-derives the full frozen-artifact
-    * set — fresh centroids, fresh codebook over the SURVIVOR value
-    * distribution, fresh tinyint codes — since codes are only valid with
-    * the codebook that wrote them (the q149 rule: a rebuild is the one
-    * place re-deriving stats is correct, because every code is rewritten
-    * with them). Same live-corpus contract as [[rebuildIvfLayout]]. */
-  def rebuildSqIvfLayout(spark: SparkSession, corpus: DataFrame,
-                         oldIdxDir: String, newIdxDir: String, k: Int): Unit = {
-    implicit val s: SparkSession = spark
-    rebuildDirProtocol(spark, corpus, oldIdxDir, newIdxDir,
-      built = sqIvfLayoutBuilt(spark, _),
-      build = buildSqIvfDir(spark, _, _, k))
-  }
-
-  /** Build a float IVF layout (centroids + cid-partitioned assignment)
-    * for `src` at `target` — the ONE build every float-IVF site shares
-    * (ensure, rebuild, q161's pre-generation), so a schema or
-    * column-order change lands once. Assignment runs against the
-    * PERSISTED centroid copy — the same doubles probes will rank. */
-  private def buildIvfDir(spark: SparkSession, src: DataFrame,
-                          target: String, k: Int): Unit = {
-    implicit val s: SparkSession = spark
-    // overwrite: the ensure path's guard is per-subdir _SUCCESS, so a
-    // re-entry after a partial build must replace the half-written subdir
-    ivfCentroids(src, k, iters = 2)
-      .write.mode("overwrite").parquet(s"$target/centroids")
-    assignToCentroid(src, spark.read.parquet(s"$target/centroids"))
-      .write.mode("overwrite").partitionBy("cid").parquet(s"$target/assigned")
-  }
-
-  /** [[buildIvfDir]]'s quantized twin: + the frozen per-dim codebook and
-    * tinyint codes instead of float vectors. */
-  private def buildSqIvfDir(spark: SparkSession, src: DataFrame,
-                            target: String, k: Int): Unit = {
-    implicit val s: SparkSession = spark
-    ivfCentroids(src, k, iters = 2)
-      .write.mode("overwrite").parquet(s"$target/centroids")
-    writeSqStats(src, s"$target/stats")
-    val cd = spark.read.parquet(s"$target/centroids")
-    val stats = sqStatsLocal(spark, s"$target/stats")
-    assignToCentroid(src, cd)
-      .select(col("vec_id"),
-        quantizeExpr(col("embedding"), stats).as("qcode"), col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(s"$target/assigned")
-  }
+                       oldIdxDir: String, newIdxDir: String, k: Int): Unit =
+    rebuildIvf(spark, FloatIvf, corpus, oldIdxDir, newIdxDir, k)
 
   /** Preserve a layout sidecar ASIDE as an `_orphaned_tombstones/<slot>`
     * dir (outside the layout dir — an orphan preserved inside it would be
@@ -1845,28 +1768,40 @@ object Similarity {
     * schedule debt. No-op when the sidecar is absent. */
   private def preserveSidecarAside(spark: SparkSession, sidecar: String,
                                    idxDir: String): Unit = {
-    val husk = new org.apache.hadoop.fs.Path(sidecar)
-    val fs = husk.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(husk)) return
     if (!graft.ops.Layouts.hasParquetData(spark, sidecar)) {
-      fs.delete(husk, true); return
+      graft.ops.Layouts.delete(spark, sidecar); return
     }
-    val orphanBase = s"${idxDir}_orphaned_tombstones"
+    val orphanBase = new org.apache.hadoop.fs.Path(s"${idxDir}_orphaned_tombstones")
+    orphanBase.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(orphanBase)
     val slot = Iterator.from(0).find(i =>
-      !fs.exists(new org.apache.hadoop.fs.Path(s"$orphanBase/$i"))).get
-    fs.mkdirs(new org.apache.hadoop.fs.Path(orphanBase))
-    if (!fs.rename(husk,
-        new org.apache.hadoop.fs.Path(s"$orphanBase/$slot")))
-      sys.error(s"could not preserve out-of-contract marks at $husk")
+      !graft.ops.Layouts.exists(spark, s"$orphanBase/$i")).get
+    graft.ops.Layouts.renameOrFail(spark, sidecar, s"$orphanBase/$slot",
+      s"could not preserve out-of-contract marks at $sidecar")
   }
 
-  /** The shared directory-rebuild protocol behind [[rebuildIvfLayout]]
-    * and [[rebuildSqIvfLayout]]. The in-place retire is a RENAME-ASIDE
-    * (`<dir>.retiring`), never a recursive delete (r17: a crash
-    * mid-delete left ambiguous half-states — `built(live)` true with the
-    * sidecar already gone — that no entry condition could classify
-    * safely; a rename is atomic, so every crash state is now
-    * unambiguous):
+  /** ONE drain semantics for a retired copy: its sidecar rescued into an
+    * orphan slot beside `idxDir` (marks must never ride a delete), then the
+    * dir dropped; no-op when absent. Re-keying is each caller's explicit
+    * finish step. */
+  private def drainRetired(spark: SparkSession, dir: String,
+                           idxDir: String): Unit = {
+    preserveSidecarAside(spark, s"$dir/tombstones", idxDir)
+    graft.ops.Layouts.delete(spark, dir)
+  }
+
+  /** THE directory-IVF rebuild, behind [[rebuildIvfLayout]] and the
+    * q163 probe: survivors (`corpus` minus the old sidecar's marks) go
+    * through [[buildIvf]] into `<newIdxDir>.build` and publish by rename.
+    * For SQ8 the build re-derives the full frozen-artifact set (fresh
+    * centroids, a fresh codebook over the SURVIVOR value distribution,
+    * fresh codes): codes are only valid with the codebook that wrote them
+    * (the q149 rule — a rebuild is the one place re-deriving stats is
+    * correct, because every code is rewritten with them). The in-place
+    * retire is a RENAME-ASIDE (`<dir>.retiring`), never a recursive
+    * delete (r17: a crash mid-delete left ambiguous half-states —
+    * `built(live)` true with the sidecar already gone — that no entry
+    * condition could classify safely; a rename is atomic, so every crash
+    * state is now unambiguous):
     *
     *  - staging complete, live NOT built (retiring may exist) — the
     *    crash fell between the retire and the publish (or the state is a
@@ -1893,8 +1828,10 @@ object Similarity {
     * by the same rename-aside (a recursive delete could crash into a
     * sidecar-less husk that passes `built` and re-trigger a rebuild with
     * zero visible debt — the exact ambiguity the in-place fix removes).
-    * `built` is the flavor's own completeness check (which subdirs must
-    * be committed).
+    * `built` is the flavor's own completeness check ([[IvfFlavor.built]]).
+    * The same classification binds [[ensureIvf]]: a not-built live dir
+    * beside a built staging or a `.retiring` copy is resumed by the one
+    * publish ([[publishIvfStaging]]), never rebuilt from the corpus.
     *
     * UPGRADE CAVEAT: a crash under a PRE-rename-aside binary could leave
     * the live dir as a mid-delete husk whose `_SUCCESS` files survived
@@ -1906,25 +1843,18 @@ object Similarity {
     * fails the loud require instead of converging — run
     * [[reissueOrphanedTombstones]] on the published dir by hand (the
     * require's message says so; the slot re-key is the only pending
-    * step). Drain in-flight rebuilds before upgrading (the states THIS
-    * protocol leaves are all classified). */
-  private def rebuildDirProtocol(spark: SparkSession, corpus: DataFrame,
-      oldIdxDir: String, newIdxDir: String,
-      built: String => Boolean,
-      build: (DataFrame, String) => Unit): Unit = {
+    * step). Likewise a PRE-`.ensure` binary staged its ensure builds at
+    * `<dir>.build`, so its crash inside a multi-step build can leave a
+    * built but incomplete `.build` that [[ensureIvf]] would publish.
+    * Drain in-flight rebuilds and ensures before upgrading (the states
+    * THIS protocol leaves are all classified). */
+  private def rebuildIvf(spark: SparkSession, flavor: IvfFlavor,
+      corpus: DataFrame, oldIdxDir: String, newIdxDir: String, k: Int): Unit = {
     ensureRegistered(spark)
+    def built(d: String) = flavor.built(spark, d)
     val staging = s"$newIdxDir.build"
-    val p = new org.apache.hadoop.fs.Path(newIdxDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val retiring = s"$newIdxDir.retiring"
     val oldRetiring = s"$oldIdxDir.retiring"
-    // ONE drain semantics (sidecar rescued into an orphan slot — marks
-    // must never ride a delete — then the dir dropped; no-op when
-    // absent). Re-keying is each path's explicit finish step.
-    def drainRetired(dir: String): Unit = {
-      preserveSidecarAside(spark, s"$dir/tombstones", newIdxDir)
-      graft.ops.Layouts.delete(spark, dir)
-    }
     // the cross-dir retire MARKER: written beside the target right after
     // the publish, naming the old dir the retire is about to consume,
     // deleted only once the drain + reissue completed — so every
@@ -1965,7 +1895,7 @@ object Similarity {
     if (newIdxDir != oldIdxDir && !built(oldIdxDir) && built(newIdxDir) &&
         (graft.ops.Layouts.exists(spark, oldRetiring) ||
           readCrossMarker().contains(oldIdxDir))) {
-      drainRetired(oldRetiring)
+      drainRetired(spark, oldRetiring, newIdxDir)
       reissueOrphanedTombstones(spark, newIdxDir)
       graft.ops.Layouts.deleteMarkerFile(spark, crossMarker)
       return
@@ -1973,18 +1903,13 @@ object Similarity {
     if (newIdxDir == oldIdxDir) {
       if (built(staging) && !built(newIdxDir)) {
         // crash between retire and publish: finish it
-        preserveSidecarAside(spark, s"$newIdxDir/tombstones", newIdxDir)
-        drainRetired(retiring)
-        graft.ops.Layouts.delete(spark, newIdxDir)
-        if (!fs.rename(new org.apache.hadoop.fs.Path(staging), p))
-          sys.error(s"atomic publish of $newIdxDir failed")
-        reissueOrphanedTombstones(spark, newIdxDir)
+        publishIvfStaging(spark, flavor, staging, newIdxDir)
         return
       }
       if (built(newIdxDir)) {
         // crash after publish: drain the retired copy and any dangling
         // slots before rebuilding anew — the live dir is authoritative
-        drainRetired(retiring)
+        drainRetired(spark, retiring, newIdxDir)
         reissueOrphanedTombstones(spark, newIdxDir)
       }
     }
@@ -1994,7 +1919,7 @@ object Similarity {
     // under its ORIGINAL dir; a cross-fingerprint retry resumes first,
     // then rebuilds from the resumed layout.
     require(built(oldIdxDir),
-      s"rebuildDirProtocol: $oldIdxDir is not a complete layout — " +
+      s"rebuildIvf: $oldIdxDir is not a complete layout — " +
         "rebuilding from the corpus alone would resurrect any honored " +
         "takedowns; resume the crashed publish under its original dir " +
         "first (oldIdxDir == newIdxDir), then rebuild. If this state was " +
@@ -2011,31 +1936,25 @@ object Similarity {
     graft.ops.Layouts.delete(spark, staging)
     // every read of the old sidecar and corpus happens HERE, before any
     // mutation below
-    build(survivors, staging)
+    buildIvf(spark, flavor, survivors, staging, k)(survivors)
     if (newIdxDir == oldIdxDir) {
       // in-place publish: retire by RENAME (atomic — the crash states it
-      // can leave are exactly the two the entry windows above classify),
-      // publish, then drain the retired copy (its sidecar holds only
-      // marks the build just honored; the re-key is their no-op and an
-      // out-of-contract landing's rescue)
-      if (!fs.rename(p, new org.apache.hadoop.fs.Path(retiring)))
-        sys.error(s"in-place retire of $newIdxDir failed")
-      if (!fs.rename(new org.apache.hadoop.fs.Path(staging), p))
-        sys.error(s"atomic publish of $newIdxDir failed")
-      drainRetired(retiring)
-      reissueOrphanedTombstones(spark, newIdxDir)
+      // can leave are exactly the ones the entry windows above and
+      // [[ensureIvf]] classify), then publish: the retired copy drains
+      // (its sidecar holds only marks the build just honored; the re-key
+      // is their no-op and an out-of-contract landing's rescue)
+      graft.ops.Layouts.renameOrFail(spark, newIdxDir, retiring,
+        s"in-place retire of $newIdxDir failed")
+      publishIvfStaging(spark, flavor, staging, newIdxDir)
     } else {
       // a pre-existing cross-dir target (stale same-k dir) cannot be
-      // trusted to honor the old layout's debt — replace it, rescuing
-      // its sidecar first: a crash-after-publish retry lands here with
-      // the PUBLISHED target as newIdxDir (the old dir not yet retired),
-      // and the deployment may have routed takedowns to it in the
-      // interim — those marks must never ride the delete (they re-key at
-      // the final reissue)
-      preserveSidecarAside(spark, s"$newIdxDir/tombstones", newIdxDir)
-      graft.ops.Layouts.delete(spark, newIdxDir)
-      if (!fs.rename(new org.apache.hadoop.fs.Path(staging), p))
-        sys.error(s"atomic publish of $newIdxDir failed")
+      // trusted to honor the old layout's debt — the publish replaces it,
+      // rescuing its sidecar first: a crash-after-publish retry lands here
+      // with the PUBLISHED target as newIdxDir (the old dir not yet
+      // retired), and the deployment may have routed takedowns to it in
+      // the interim — those marks must never ride the delete (they re-key
+      // against the re-published layout)
+      publishIvfStaging(spark, flavor, staging, newIdxDir)
       // the retire carries its marker from here to completion (see the
       // entry guard): written before the first mutation of the old dir,
       // dropped after the drain + reissue — a crash anywhere inside
@@ -2046,30 +1965,15 @@ object Similarity {
       // husk, and a re-trigger would then rebuild from it with zero
       // visible debt), then drain it — a stale leftover retiring dir is
       // drained first
-      drainRetired(oldRetiring)
-      if (!fs.rename(new org.apache.hadoop.fs.Path(oldIdxDir),
-          new org.apache.hadoop.fs.Path(oldRetiring)))
-        sys.error(s"cross-dir retire of $oldIdxDir failed")
-      drainRetired(oldRetiring)
+      drainRetired(spark, oldRetiring, newIdxDir)
+      graft.ops.Layouts.renameOrFail(spark, oldIdxDir, oldRetiring,
+        s"cross-dir retire of $oldIdxDir failed")
+      drainRetired(spark, oldRetiring, newIdxDir)
       reissueOrphanedTombstones(spark, newIdxDir)
       graft.ops.Layouts.deleteMarkerFile(spark, crossMarker)
     }
   }
 
-  /** The q143 base IVF layout's directory for `dir`'s embeddings at
-    * cluster count `k` — shared by the build/probe path and the q147
-    * health monitor, so the monitor audits the layout actually
-    * serving (layout naming rules as documented on
-    * [[q143IvfPartitionedProbe]]). */
-  def ivfBaseLayoutDir(dir: String, k: Int): String =
-    System.getProperty("java.io.tmpdir") + "/graft_ivf_idx_" +
-      layoutTag(fileFp(s"$dir/embeddings.parquet"), k.toString, LayoutVersion)
-
-  /** True iff `idxDir` holds a complete IVF layout (both subdirs
-    * committed — the q143 `_SUCCESS` convention). */
-  def ivfLayoutBuilt(spark: SparkSession, idxDir: String): Boolean =
-    Seq("centroids", "assigned").forall(sub =>
-      graft.ops.Layouts.committed(spark, s"$idxDir/$sub"))
 
   /** Per-cluster occupancy of a PERSISTED IVF layout — one count
     * aggregation grouped on the `cid` partition column of the `assigned`
@@ -2081,45 +1985,6 @@ object Similarity {
     spark.read.parquet(s"$idxDir/assigned")
       .groupBy(col("cid")).agg(count(lit(1)).as("occ"))
 
-  /** The serving path against a persisted IVF layout (shared by
-    * [[q143IvfPartitionedProbe]] and [[q146IvfAppendProbe]]): rank the
-    * PERSISTED centroids per probe (broadcast of k×dim doubles), collect
-    * the wanted cluster ids (bounded: ≤ k ints — int literals so the
-    * pruning predicate matches the int-inferred partition column with no
-    * cast), read only those partitions (PartitionFilters), exact-cosine
-    * re-score, per-probe argmax. `probes` must carry (qid, embedding).
-    *
-    * `live = true` adds merge-on-read deletion: candidate rows matching a
-    * tombstone mark are anti-joined out before scoring — (cid,
-    * vec_id)-keyed, the mark side pruned to the SAME wanted partitions as
-    * the candidate scan, so deletion costs one bounded side-read and no
-    * extra corpus I/O. Answers are identical before and after the
-    * physical purge. */
-  def probeIvf(spark: SparkSession, idxDir: String, probes: DataFrame,
-               nprobe: Int, live: Boolean = false): DataFrame = {
-    ensureRegistered(spark)
-    val centroidsDisk = spark.read.parquet(s"$idxDir/centroids")
-    val (probeClusters, wantedCids) =
-      localizeProbeClusters(spark, probes, centroidsDisk, nprobe)
-    val scoped = spark.read.parquet(s"$idxDir/assigned")
-      .filter(col("cid").isin(wantedCids.map(Int.box): _*))
-    val alive = if (!live) scoped else ivfTombstones(spark, idxDir) match {
-      case Some(t) => scoped.join(
-        t.filter(col("cid").isin(wantedCids.map(Int.box): _*)),
-        Seq("cid", "vec_id"), "left_anti")
-      case None => scoped
-    }
-    val cand = alive
-      .select(col("cid"), col("vec_id").as("cid_vec"), col("embedding").as("ce2"))
-    val wS = Window.partitionBy(col("qid")).orderBy(col("sim_raw").desc, col("cid_vec"))
-    broadcast(probeClusters).join(cand, "cid")
-      .withColumn("sim_raw", cosine(col("qe"), col("ce2")))
-      .select(col("qid"), col("cid_vec"), col("sim_raw"))
-      .withColumn("rn", row_number().over(wS))
-      .filter(col("rn") === 1)
-      .select(col("qid"), col("cid_vec").as("retrieved_id"),
-        Exprs.dround(col("sim_raw"), 6).as("sim"))
-  }
 
   /** Tombstone deletion for the DIRECTORY IVF layouts — the table
     * flavor's marks partition re-expressed as an append-only
@@ -2156,6 +2021,8 @@ object Similarity {
         .select(col("cid"), col("vec_id")))
     else None
 
+  private val CidDir = """cid=(-?\d+)""".r
+
   /** Physically purge an IVF layout's tombstoned rows — PARTITION-SCOPED:
     * only the cids carrying marks are read and rewritten (dynamic
     * overwrite touches just those partition dirs), partitions left EMPTY
@@ -2191,24 +2058,26 @@ object Similarity {
       // using-columns joins hoist keys to the front (the r15 rule) —
       // restore the layout's column order before the partitioned write
       .select(orderCols.map(col): _*)
-    val staging = new org.apache.hadoop.fs.Path(s"$idxDir/_purge_staging")
+    val staging = s"$idxDir/_purge_staging"
     try {
-      survivors.write.mode("overwrite").parquet(staging.toString)
-      val staged = spark.read.parquet(staging.toString)
+      // staged partitioned by cid (the AppendableIndex.stage rule): the
+      // cids that kept rows are a directory listing, not a job
+      survivors.write.mode("overwrite").partitionBy("cid").parquet(staging)
+      val staged = graft.ops.Layouts.readHidden(spark, staging, Some(scoped.schema))
+      val survivedCids = graft.ops.Layouts.listChildren(spark, staging)
+        .collect { case CidDir(cid) => cid.toInt }.toSet
       val purged = scoped.count() - staged.count() // both read pre-rewrite files
-      graft.streaming.Streaming.withDynamicOverwrite(spark) {
-        staged.write.mode("overwrite").partitionBy("cid")
-          .parquet(s"$idxDir/assigned")
-      }
-      val survivedCids = staged.select(col("cid")).distinct()
-        .collect().map(_.getAs[Number](0).intValue).toSet
+      if (survivedCids.nonEmpty)
+        graft.streaming.Streaming.withDynamicOverwrite(spark) {
+          staged.write.mode("overwrite").partitionBy("cid")
+            .parquet(s"$idxDir/assigned")
+        }
       affected.filterNot(survivedCids).foreach { cid =>
-        val p = new org.apache.hadoop.fs.Path(s"$idxDir/assigned/cid=$cid")
-        if (fs.exists(p)) fs.delete(p, true)
+        graft.ops.Layouts.delete(spark, s"$idxDir/assigned/cid=$cid")
       }
       fs.delete(tombPath, true) // marks retire LAST
       (affected.length.toLong, purged)
-    } finally fs.delete(staging, true)
+    } finally graft.ops.Layouts.delete(spark, staging)
   }
 
   /** Outstanding `_orphaned_tombstones` slots beside a directory layout —
@@ -2267,6 +2136,164 @@ object Similarity {
     } finally marks.unpersist()
   }
 
+  /** The shared build-and-probe scaffold of the directory-IVF lifecycle
+    * probes (q143/q146/q154/q156/q159/q160/q161/q163) — the directory twin
+    * of [[appendableLifecycleProbe]]. It resolves the corpus once (k from
+    * the BASE count), names the `role` layout, and plants the query's rows
+    * under `shift`: with `copies`, exact copies of every 7th vector (the
+    * q157 planted-delete shape — probes are the originals' content, and
+    * each top-1 provably flips original → copy); otherwise, for a nonzero
+    * `shift`, a reversed-embedding delta (the q145 append shape — probes
+    * are every `modulus`-th vector of the union). `steps` gets (layout dir,
+    * base corpus, planted rows, k) and owns the build plus the lifecycle
+    * steps under test; the probes then serve through the flavor's scorer
+    * (`live` = merge-on-read; the SQ8 rescore reads the union). One
+    * definition so a scaffold fix cannot drift across the family — the
+    * next probe is a lambda, not another copy. */
+  private def ivfLifecycleProbe(spark: SparkSession, dir: String,
+      flavor: IvfFlavor, role: String, modulus: Int, offset: Long,
+      shift: Long = 0L, copies: Boolean = false, live: Boolean = false)(
+      steps: (String, DataFrame, DataFrame, Int) => Unit): DataFrame = {
+    ensureRegistered(spark)
+    val (base, k, idxDir) = resolveIvf(spark, dir, role)
+    val planted =
+      if (copies) base.filter(col("vec_id") % 7 === 0)
+        .select((col("vec_id") + shift).as("vec_id"), col("embedding"))
+      else base.select((col("vec_id") + shift).as("vec_id"),
+        reverse(col("embedding")).as("embedding"))
+    steps(idxDir, base, planted, k)
+    val union = if (copies || shift != 0L) base.unionByName(planted) else base
+    val probes = (if (copies) base else union)
+      .filter(col("vec_id") % modulus === 0)
+      .select((col("vec_id") + offset).as("qid"), col("embedding"))
+    val served =
+      if (flavor.quantized) probeSqIvf(spark, idxDir, probes, 2, union, live = live)
+      else probeIvf(spark, idxDir, probes, 2, live)
+    served.withColumn("hit", col("retrieved_id") ===
+        col("qid") - (offset - (if (copies) shift else 0L)))
+      .orderBy(col("qid"))
+  }
+
+  /** q143/q154 (and their ensures): the base corpus, built once. */
+  private def ivfBaseSteps(spark: SparkSession, flavor: IvfFlavor)(
+      idxDir: String, base: DataFrame, planted: DataFrame, k: Int): Unit =
+    ensureIvf(spark, flavor, idxDir)(buildIvf(spark, flavor, base, _, k)(base))
+
+  /** q146/q156: the base build plus the frozen-artifact append of the
+    * delta, one atomic unit — a crash between them leaves only the
+    * staging, never a base-only layout that silently fails every delta
+    * probe. */
+  private def ivfAppendSteps(spark: SparkSession, flavor: IvfFlavor)(
+      idxDir: String, base: DataFrame, delta: DataFrame, k: Int): Unit =
+    ensureIvf(spark, flavor, idxDir)(buildIvf(spark, flavor, base, _, k)(base, delta))
+
+  /** q159/q160: base plus copies, the originals tombstoned inside the same
+    * atomic unit (a half-built layout can never serve undeleted rows). */
+  private def ivfDeleteSteps(spark: SparkSession, flavor: IvfFlavor)(
+      idxDir: String, base: DataFrame, copies: DataFrame, k: Int): Unit =
+    ensureIvf(spark, flavor, idxDir) { t =>
+      buildIvf(spark, flavor, base, t, k)(base.unionByName(copies))
+      tombstoneIvfRows(spark, t, base.filter(col("vec_id") % 7 === 0))
+    }
+
+  /** q161/q163: a pre-rebuild generation at `<idxDir>.pre` (the q159 shape
+    * over corpus ∪ copies, originals tombstoned), then the maintenance
+    * rebuild from the same corpus relation into `idxDir` — the takedown
+    * has NOT propagated upstream, the exact case sidecar exclusion exists
+    * for. A crash between the rebuild's publish and its old-dir retire
+    * leaves the scratch generation behind; re-entry retires it. */
+  private def ivfRebuildSteps(spark: SparkSession, flavor: IvfFlavor)(
+      idxDir: String, base: DataFrame, copies: DataFrame, k: Int): Unit = {
+    val pre = s"$idxDir.pre"
+    graft.ops.Layouts.delete(spark, pre)
+    if (!graft.ops.Layouts.exists(spark, idxDir)) {
+      val union = base.unionByName(copies)
+      buildIvf(spark, flavor, union, pre, k)(union)
+      tombstoneIvfRows(spark, pre, base.filter(col("vec_id") % 7 === 0))
+      rebuildIvf(spark, flavor, union, pre, idxDir, k)
+    }
+  }
+
+  /** q154: SQ8-QUANTIZED IVF layout with exact rescore — q149's storage
+    * tier applied to the OTHER index family, closing the quantization
+    * story for both (LSH buckets q149, IVF partitions here): the
+    * `assigned` dir stores (vec_id, qcode array<tinyint>) partitioned by
+    * cid — no float vectors in the index, 4× less I/O per probed
+    * partition on top of the nprobe/k partition pruning — while the
+    * centroids stay float (k×dim doubles, the routing state every IVF
+    * probe broadcasts; quantizing them would change routing for no
+    * storage win).
+    *
+    * Frozen-artifact rules compose: centroids are persisted and never
+    * retrained (q143/q146 — retraining would re-route probes away from
+    * stored partitions), the codebook is persisted beside the codes it
+    * wrote (q149 — recomputed stats could disagree with stored codes),
+    * and the multi-step build (centroids → stats → assigned) is
+    * crash-atomic via [[ensureIvf]]'s staging + rename (a partial build
+    * is invisible, a re-invocation rebuilds from scratch).
+    *
+    * The planted oracle is exact through BOTH approximations, by the
+    * composed q143 + q149 arguments: a probe is a bit-exact copy of its
+    * original, so centroid ranking (a pure function of embedding ×
+    * frozen centroids) routes it to the partition its original is stored
+    * under at any nprobe ≥ 1; there its approximate score ≈ 1 − ε clears
+    * the ≈0.53 natural tail at any top-R ≥ 1, and the exact rescore
+    * reproduces the exhaustive full-precision argmax DuckDB recomputes —
+    * independent of centroid noise, codebook noise, nprobe, and R. */
+  def q154SqIvfProbe(spark: SparkSession, dir: String): DataFrame =
+    ivfLifecycleProbe(spark, dir, SqIvf, "sq", modulus = 139,
+      offset = 19000000L)(ivfBaseSteps(spark, SqIvf))
+
+  /** q146: IVF incremental append under FROZEN centroids — [[q145IndexAppendProbe]]'s
+    * maintenance story for the other index family. A delta batch is
+    * assigned against the PERSISTED centroid relation (never re-trained:
+    * re-running Lloyd on base+delta would reshuffle existing assignments
+    * and invalidate every stored partition — the production IVF contract
+    * is frozen centroids between rebuilds) and appended into the same
+    * `cid`-partitioned layout; serving reads nprobe partitions spanning
+    * base and delta files alike.
+    *
+    * The build is CRASH-ATOMIC via [[ensureIvf]]'s staging + rename: a
+    * failure between the base write and the delta append leaves only the
+    * `.ensure` staging, so a re-invocation rebuilds from scratch instead of serving a base-only
+    * layout that silently fails every delta probe.
+    *
+    * Exactness: assignment ranks (cosine, cid) against the frozen persisted
+    * centroids — a pure function of (embedding, centroids) — so a planted
+    * probe's top-1 cluster IS its original's stored partition whether the
+    * original arrived in the base build or the append; cosine ≈ 1 then
+    * dominates the ≈0.55 natural/reversal tail and the index top-1 equals
+    * the exhaustive argmax the DuckDB oracle recomputes over the union. */
+  def q146IvfAppendProbe(spark: SparkSession, dir: String): DataFrame =
+    ivfLifecycleProbe(spark, dir, FloatIvf, "inc", modulus = 127,
+      offset = 12000000L, shift = 11000000L)(ivfAppendSteps(spark, FloatIvf))
+
+  /** q156: incremental append into the QUANTIZED IVF layout — the q146
+    * append story for the q154 flavor, completing the append symmetry
+    * across all four index shapes (float LSH q145, float IVF q146,
+    * quantized LSH via the same insertInto contract, quantized IVF
+    * here). A delta batch is routed by the FROZEN persisted centroids
+    * (q146 rule) and coded by the FROZEN persisted codebook (q149 rule —
+    * re-deriving stats over base+delta would make old codes unreadable);
+    * out-of-codebook delta values SATURATE to edge codes
+    * ([[quantizeExpr]]) instead of erroring, the graceful-degradation
+    * contract a frozen codebook needs. Build is crash-atomic via
+    * [[ensureIvf]] spanning base write AND delta append (q146
+    * convention).
+    *
+    * Oracle exactness composes the q146 + q149 arguments: a probe is a
+    * bit-exact copy of a union vector, so frozen-centroid ranking routes
+    * it to its original's stored partition (pure function of the value);
+    * the original's code equals the probe-content's code (same frozen
+    * codebook), so its approximate score ≈ 1 − ε survives any top-R; and
+    * the exact rescore over the full-precision union emits the
+    * exhaustive argmax DuckDB recomputes. Saturation only widens ε on
+    * out-of-range dims — the certain candidate still clears the ≈0.55
+    * natural/reversal tail (validated at both SFs). */
+  def q156SqIvfAppendProbe(spark: SparkSession, dir: String): DataFrame =
+    ivfLifecycleProbe(spark, dir, SqIvf, "sq_inc", modulus = 131,
+      offset = 22000000L, shift = 21000000L)(ivfAppendSteps(spark, SqIvf))
+
   /** q159: deletion from the DIRECTORY IVF layout — q157's
     * partition-pruned sibling, closing deletion across every index
     * flavor (bucketed table q157, band table q158, partitioned dir
@@ -2278,33 +2305,33 @@ object Similarity {
     * pure function of the embedding — to the partition where the
     * surviving copy lives. Same observable-flip exactness argument as
     * q157, recomputed exhaustively by the shared oracle. */
-  def q159IvfDeleteProbe(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
-    implicit val s: SparkSession = spark
-    val copyShift = 26000000L; val offset = 27000000L; val nprobe = 2
-    val e = Tables.embeddings(spark, dir)
-    val k = IndexParams.ivfK(e.count())
-    val idxDir = System.getProperty("java.io.tmpdir") + "/graft_ivf_del_" +
-      layoutTag(fileFp(s"$dir/embeddings.parquet"), k.toString, LayoutVersion)
-    val eSlim = e.select(col("vec_id"), col("embedding"))
-    val copies = eSlim.filter(col("vec_id") % 7 === 0)
-      .select((col("vec_id") + copyShift).as("vec_id"), col("embedding"))
-    graft.ops.Layouts.buildIfAbsent(spark, idxDir) { build =>
-      ivfCentroids(e, k, iters = 2).write.parquet(s"$build/centroids")
-      val cd = spark.read.parquet(s"$build/centroids")
-      assignToCentroid(eSlim.unionByName(copies), cd)
-        .write.partitionBy("cid").parquet(s"$build/assigned")
-      // the takedown lands inside the same atomic unit
-      tombstoneIvfRows(spark, build,
-        eSlim.filter(col("vec_id") % 7 === 0))
-    }
-    val probes = eSlim.filter(col("vec_id") % 7 === 0)
-      .select((col("vec_id") + offset).as("qid"), col("embedding"))
-    probeIvf(spark, idxDir, probes, nprobe, live = true)
-      .withColumn("hit",
-        col("retrieved_id") === col("qid") - (offset - copyShift))
-      .orderBy(col("qid"))
-  }
+  def q159IvfDeleteProbe(spark: SparkSession, dir: String): DataFrame =
+    ivfLifecycleProbe(spark, dir, FloatIvf, "del", modulus = 7,
+      offset = 27000000L, shift = 26000000L, copies = true, live = true)(
+      ivfDeleteSteps(spark, FloatIvf))
+
+  /** q160: deletion from the QUANTIZED IVF layout — the last serving path
+    * without a takedown story (q157 bucketed table, q158 band table,
+    * q159 float directory): the same frozen-centroid-routed sidecar marks
+    * as q159 ([[tombstoneIvfRows]] reads only `centroids`, which both
+    * directory flavors persist identically), anti-joined out of the
+    * candidate stage (`live = true` on [[sqIvfCandidates]]) — which
+    * suffices for the whole two-stage serve, because the exact rescore
+    * inner-joins the collected candidate list and a row absent from it
+    * cannot re-enter via the corpus lookup. Marks land inside the same
+    * crash-atomic build; [[purgeIvfTombstones]] applies unchanged (the
+    * purge never reads the payload columns it rewrites).
+    *
+    * Exactness composes q159's flip argument with q154's quantization
+    * margin: probe and surviving copy share the embedding bits, so
+    * routing, stored codes and approximate score coincide; with the
+    * original anti-joined out, the copy's ≈ 1 − ε approximate score
+    * clears the natural tail at any top-R ≥ 1 and the exact rescore
+    * emits the exhaustive argmax over corpus-minus-deleted. */
+  def q160SqIvfDeleteProbe(spark: SparkSession, dir: String): DataFrame =
+    ivfLifecycleProbe(spark, dir, SqIvf, "sq_del", modulus = 7,
+      offset = 29000000L, shift = 28000000L, copies = true, live = true)(
+      ivfDeleteSteps(spark, SqIvf))
 
   /** q161: REBUILD of a directory IVF layout with outstanding deletion
     * debt — [[rebuildIvfLayout]] made hash-observable, closing the
@@ -2324,40 +2351,13 @@ object Similarity {
     * fresh centroids route probe and copy identically; the copy's
     * cosine ≈ 1 clears the natural tail; the oracle recomputes
     * exhaustively over corpus-minus-deleted ∪ copies). */
-  def q161IvfRebuildProbe(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
-    implicit val s: SparkSession = spark
-    val copyShift = 30000000L; val offset = 31000000L; val nprobe = 2
-    val e = Tables.embeddings(spark, dir)
-    val k = IndexParams.ivfK(e.count())
-    val idxDir = System.getProperty("java.io.tmpdir") + "/graft_ivf_rb_" +
-      layoutTag(fileFp(s"$dir/embeddings.parquet"), k.toString, LayoutVersion)
-    val eSlim = e.select(col("vec_id"), col("embedding"))
-    val copies = eSlim.filter(col("vec_id") % 7 === 0)
-      .select((col("vec_id") + copyShift).as("vec_id"), col("embedding"))
-    val union = eSlim.unionByName(copies)
-    if (!graft.ops.Layouts.exists(spark, idxDir)) {
-      // the pre-rebuild generation (scratch — retired by the rebuild)
-      val oldDir = s"$idxDir.pre"
-      graft.ops.Layouts.delete(spark, oldDir)
-      buildIvfDir(spark, union, oldDir, k)
-      tombstoneIvfRows(spark, oldDir,
-        eSlim.filter(col("vec_id") % 7 === 0))
-      rebuildIvfLayout(spark, union, oldDir, idxDir, k)
-    } else
-      // a crash between the rebuild's publish and its old-dir retire
-      // leaves the scratch generation behind — retire it on re-entry
-      graft.ops.Layouts.delete(spark, s"$idxDir.pre")
-    val probes = eSlim.filter(col("vec_id") % 7 === 0)
-      .select((col("vec_id") + offset).as("qid"), col("embedding"))
-    probeIvf(spark, idxDir, probes, nprobe)
-      .withColumn("hit",
-        col("retrieved_id") === col("qid") - (offset - copyShift))
-      .orderBy(col("qid"))
-  }
+  def q161IvfRebuildProbe(spark: SparkSession, dir: String): DataFrame =
+    ivfLifecycleProbe(spark, dir, FloatIvf, "rb", modulus = 7,
+      offset = 31000000L, shift = 30000000L, copies = true)(
+      ivfRebuildSteps(spark, FloatIvf))
 
   /** q163: REBUILD of the QUANTIZED IVF layout with outstanding deletion
-    * debt — [[rebuildSqIvfLayout]] made hash-observable, completing the
+    * debt — the SQ8 [[rebuildIvf]] made hash-observable, completing the
     * rebuild symmetry across all three rebuildable flavors (float dir
     * q161, appendable table q162, quantized dir here): pre-rebuild
     * generation = the q160 shape (sq layout over corpus ∪ copies,
@@ -2370,86 +2370,10 @@ object Similarity {
     * fresh codes coincide, the ≈1−ε approximate score survives any
     * top-R, and the exact rescore emits the exhaustive argmax over
     * corpus-minus-deleted ∪ copies. */
-  def q163SqIvfRebuildProbe(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
-    implicit val s: SparkSession = spark
-    val copyShift = 34000000L; val offset = 35000000L; val nprobe = 2
-    val e = Tables.embeddings(spark, dir)
-    val k = IndexParams.ivfK(e.count())
-    val idxDir = System.getProperty("java.io.tmpdir") + "/graft_ivf_sq_rb_" +
-      layoutTag(fileFp(s"$dir/embeddings.parquet"), k.toString, LayoutVersion)
-    val eSlim = e.select(col("vec_id"), col("embedding"))
-    val copies = eSlim.filter(col("vec_id") % 7 === 0)
-      .select((col("vec_id") + copyShift).as("vec_id"), col("embedding"))
-    val union = eSlim.unionByName(copies)
-    if (!graft.ops.Layouts.exists(spark, idxDir)) {
-      // the pre-rebuild generation (scratch — retired by the rebuild)
-      val oldDir = s"$idxDir.pre"
-      graft.ops.Layouts.delete(spark, oldDir)
-      buildSqIvfDir(spark, union, oldDir, k)
-      tombstoneIvfRows(spark, oldDir,
-        eSlim.filter(col("vec_id") % 7 === 0))
-      rebuildSqIvfLayout(spark, union, oldDir, idxDir, k)
-    } else
-      // a crash between the rebuild's publish and its old-dir retire
-      // leaves the scratch generation behind — retire it on re-entry
-      graft.ops.Layouts.delete(spark, s"$idxDir.pre")
-    val probes = eSlim.filter(col("vec_id") % 7 === 0)
-      .select((col("vec_id") + offset).as("qid"), col("embedding"))
-    probeSqIvf(spark, idxDir, probes, nprobe, union)
-      .withColumn("hit",
-        col("retrieved_id") === col("qid") - (offset - copyShift))
-      .orderBy(col("qid"))
-  }
-
-  /** q146: IVF incremental append under FROZEN centroids — [[q145IndexAppendProbe]]'s
-    * maintenance story for the other index family. A delta batch is
-    * assigned against the PERSISTED centroid relation (never re-trained:
-    * re-running Lloyd on base+delta would reshuffle existing assignments
-    * and invalidate every stored partition — the production IVF contract
-    * is frozen centroids between rebuilds) and appended into the same
-    * `cid`-partitioned layout; serving reads nprobe partitions spanning
-    * base and delta files alike.
-    *
-    * The build is CRASH-ATOMIC via temp-dir + rename (the
-    * [[graft.sources.Sources.compact]] convention): a failure between the
-    * base write and the delta append leaves only the `.build` dir, so a
-    * re-invocation rebuilds from scratch instead of serving a base-only
-    * layout that silently fails every delta probe.
-    *
-    * Exactness: assignment ranks (cosine, cid) against the frozen persisted
-    * centroids — a pure function of (embedding, centroids) — so a planted
-    * probe's top-1 cluster IS its original's stored partition whether the
-    * original arrived in the base build or the append; cosine ≈ 1 then
-    * dominates the ≈0.55 natural/reversal tail and the index top-1 equals
-    * the exhaustive argmax the DuckDB oracle recomputes over the union. */
-  def q146IvfAppendProbe(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
-    implicit val s: SparkSession = spark
-    val deltaShift = 11000000L; val offset = 12000000L; val nprobe = 2
-    val e = Tables.embeddings(spark, dir)
-    val k = IndexParams.ivfK(e.count())
-    val idxDir = System.getProperty("java.io.tmpdir") + "/graft_ivf_inc_" +
-      layoutTag(fileFp(s"$dir/embeddings.parquet"), k.toString, LayoutVersion)
-    val eSlim = e.select(col("vec_id"), col("embedding"))
-    val delta = eSlim.select((col("vec_id") + deltaShift).as("vec_id"),
-      reverse(col("embedding")).as("embedding"))
-    graft.ops.Layouts.buildIfAbsent(spark, idxDir) { build =>
-      ivfCentroids(e, k, iters = 2)
-        .write.parquet(s"$build/centroids")
-      val cd = spark.read.parquet(s"$build/centroids")
-      assignToCentroid(eSlim, cd)
-        .write.partitionBy("cid").parquet(s"$build/assigned")
-      // the incremental append: frozen centroids, same partition scheme
-      assignToCentroid(delta, cd)
-        .write.mode("append").partitionBy("cid").parquet(s"$build/assigned")
-    }
-    val probes = eSlim.unionByName(delta).filter(col("vec_id") % 127 === 0)
-      .select((col("vec_id") + offset).as("qid"), col("embedding"))
-    probeIvf(spark, idxDir, probes, nprobe)
-      .withColumn("hit", col("retrieved_id") === col("qid") - offset)
-      .orderBy(col("qid"))
-  }
+  def q163SqIvfRebuildProbe(spark: SparkSession, dir: String): DataFrame =
+    ivfLifecycleProbe(spark, dir, SqIvf, "sq_rb", modulus = 7,
+      offset = 35000000L, shift = 34000000L, copies = true)(
+      ivfRebuildSteps(spark, SqIvf))
 
   /** q147: index health audit — the MONITOR arm of the index lifecycle
     * (build q142/q143, serve [[probeIndex]]/[[probeIvf]], append

@@ -158,7 +158,7 @@ object Sources {
     val df = spark.read.parquet(snapshot: _*)
     val inCount = df.count()
     df.repartition(n).write.mode("overwrite").parquet(tmp.toString)
-    val outCount = spark.read.parquet(tmp.toString).count()
+    val outCount = graft.ops.Layouts.readHidden(spark, tmp.toString).count()
     require(outCount == inCount,
       s"compaction of $dir dropped rows ($inCount -> $outCount); original left untouched")
     val out = fs.listStatus(tmp)
@@ -301,7 +301,7 @@ object Sources {
     val before = countTableDataFiles(spark, table)
     val src = spark.table(table)
     val inCount = src.count()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bcompact").toString
+    val tmp = graft.ops.Layouts.ownedTempDir(spark, "graft_bcompact")
     // force the bucket-aligned scan for the rewrite: a write requires no
     // distribution, so the auto-bucketed-scan rule would otherwise hand
     // the writer file-grouped tasks that mix buckets (one small file per

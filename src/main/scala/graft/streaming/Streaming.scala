@@ -548,10 +548,11 @@ object Streaming {
           .collect { case PartitionDir(id) => id.toLong }.toSet)
     }
 
-    /** Staged rows under the table's own schema (no inference job). A
+    /** Staged rows under the table's own schema (no inference job),
+      * through the hidden-dir read ([[graft.ops.Layouts.readHidden]]). A
       * staging written without the batch_id column reads it as null. */
     private[streaming] def readStaged(dir: Path): DataFrame =
-      spark.read.schema(meta.schema).parquet(dir.toString)
+      graft.ops.Layouts.readHidden(spark, dir.toString, Some(meta.schema))
 
     /** Phase (2) of [[stage]]'s contract. `owned` lists the partitions
       * this write replaces, in clearing order; `routed` puts the rows on
@@ -964,7 +965,7 @@ object Streaming {
     // between one mark's landing and its stamp append must not hide
     // behind a later mark's younger stamp (the SLA fires sooner, never
     // later — per mark, not per table)
-    val stamps = spark.read.parquet(sidecar.toString)
+    val stamps = graft.ops.Layouts.readHidden(spark, sidecar.toString)
       .select((idx.keys.map(col) :+ col("epoch")): _*)
     val r = tomb.join(stamps, idx.keys, "left")
       .agg(min(col("epoch")),
@@ -1342,7 +1343,7 @@ object Streaming {
     val staging = idx.child("_tombstone_epochs_staging")
     val retiring = idx.child("_tombstone_epochs_retiring")
     idx.scratch(staging.getName) {
-      idx.spark.read.parquet(sidecar.toString)
+      graft.ops.Layouts.readHidden(idx.spark, sidecar.toString)
         .join(standing, idx.keys, "left_semi")
         .write.mode("overwrite").parquet(staging.toString)
       if (!fs.rename(sidecar, retiring))

@@ -755,7 +755,7 @@ object TextOps {
       graft.ops.Layouts.fileFp(s"$dir/documents.parquet"), "mh16b4r4",
       graft.ops.Layouts.Version)
     if (!spark.catalog.tableExists(idx)) {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_band_idx").toString
+      val tmp = graft.ops.Layouts.ownedTempDir(spark, "graft_band_idx")
       graft.sources.Sources.writeBucketed(bandedSignatures(d), idx,
         s"$tmp/index", "key",
         graft.sim.IndexParams.indexBuckets(d.count(), 4))
@@ -890,8 +890,7 @@ object TextOps {
     // staging-NAME atomicity (the q145 rule): tableExists flips only
     // after the tombstones landed — never serve a half-built deletion
     graft.ops.Layouts.buildTableIfAbsent(spark, idx) { staging =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_band_del")
-        .toString
+      val tmp = graft.ops.Layouts.ownedTempDir(spark, "graft_band_del")
       graft.streaming.Streaming.createAppendableBandIndex(spark, staging,
         s"$tmp/index", buckets)
       graft.streaming.Streaming.appendBandBatch(d, 0L, staging)

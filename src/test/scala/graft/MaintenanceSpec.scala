@@ -875,4 +875,72 @@ class MaintenanceSpec extends SparkSpecBase {
     val again = Maintenance.q155MaintenanceSchedule(spark, Sf001).collect()
     assert(again.map(_.toSeq).toSeq === rows.map(_.toSeq).toSeq)
   }
+
+  test("staging and sidecar reads log no `All paths were ignored` " +
+      "warning: an appendable fold + purge and a directory purge read " +
+      "their `_`-prefixed dirs through their non-hidden children") {
+    import graft.streaming.Streaming
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    graft.sim.Similarity.ensureRegistered(spark)
+    val planes = 5; val tables = 2
+    val tbl = "g_quiet_staging_idx"
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    val tmp = java.nio.file.Files.createTempDirectory("g_quiet").toString
+    Streaming.createAppendableIndex(spark, tbl, s"$tmp/idx", buckets = 4)
+    val eSlim = Tables.embeddings(spark, Sf001)
+      .select(col("vec_id"), col("embedding")).filter(col("vec_id") < 40)
+    (0 until 2).foreach { b =>
+      Streaming.appendIndexBatch(
+        eSlim.filter(col("vec_id") % 2 === b), b.toLong, tbl, planes, tables)
+    }
+    val idxDir = s"$tmp/layout"
+    graft.sim.Similarity.ivfCentroids(eSlim, 4, iters = 1)
+      .write.parquet(s"$idxDir/centroids")
+    graft.sim.Similarity.assignToCentroid(eSlim,
+        spark.read.parquet(s"$idxDir/centroids"))
+      .write.partitionBy("cid").parquet(s"$idxDir/assigned")
+    val victims = eSlim.filter(col("vec_id") < 5)
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("g_quiet_capture", null, null, true,
+        Array.empty) {
+      override def append(e: LogEvent): Unit =
+        warned.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, null, null)
+    ctx.updateLoggers()
+    try {
+      // the capture sees DataSource's own logger
+      LogManager.getLogger(
+        "org.apache.spark.sql.execution.datasources.DataSource")
+        .warn("g_quiet capture check")
+      Streaming.foldIndexLeveled(spark, tbl, uptoBatch = 0L)
+      Streaming.tombstoneIndexRows(spark, tbl, victims, planes, tables,
+        epoch = 1000L)
+      assert(Streaming.appendableTombstoneAge(spark, tbl, now = 1500L) === 500L)
+      // victims 0, 2, 4 sit in the folded generation and are purged; the
+      // marks of 1 and 3 (live batch 1) stand, so the epoch sync re-reads
+      Streaming.purgeIndexTombstones(spark, tbl)
+      graft.sim.Similarity.tombstoneIvfRows(spark, idxDir, victims)
+      assert(graft.sim.Similarity.purgeIvfTombstones(spark, idxDir)._2 === 5L)
+    } finally {
+      root.removeAppender("g_quiet_capture")
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    val msgs = warned.toArray.map(_.toString).toSeq
+    assert(msgs.contains("g_quiet capture check"), msgs.mkString("\n"))
+    assert(!msgs.exists(_.contains("All paths were ignored")),
+      msgs.filter(_.contains("All paths were ignored")).mkString("\n"))
+    val left = spark.table(tbl).filter(col("vec_id") < 5)
+    assert(left.filter(col("batch_id") <= Streaming.GenerationBaseId)
+      .count() === 0L)
+    assert(left.filter(col("batch_id") >= 0).count() === 2L * tables)
+    assert(spark.read.parquet(s"$idxDir/assigned").count() === 35L)
+  }
 }

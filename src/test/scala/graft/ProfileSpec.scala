@@ -40,4 +40,15 @@ class ProfileSpec extends SparkSpecBase {
       .map(_.getFileName.toString.stripSuffix(".scala")).toSet
     assert(mains === Set("Bench", "Verify", "WarmLedgerCli", "Profile"))
   }
+
+  test("src/main creates temp directories only at the JVM-owned root " +
+      "and in EtlBench") {
+    // catalog-table dirs come from Layouts.ownedTempDir, reaped at JVM
+    // exit; a bare createTempDirectory leaks a dir per build again
+    val sites = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(f => Files.readString(f).contains("createTempDirectory"))
+      .map(_.getFileName.toString.stripSuffix(".scala")).toSet
+    assert(sites === Set("Layouts", "EtlBench"))
+  }
 }

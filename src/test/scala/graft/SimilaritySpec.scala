@@ -1156,6 +1156,107 @@ class SimilaritySpec extends SparkSpecBase {
       (10L until 60L).toSet)
   }
 
+  test("ensure never undoes a crashed in-place rebuild: with live ABSENT, " +
+      "the mark-honoring staging complete and the marks only in " +
+      ".retiring, ensureIvfLayout and ensureSqIvfLayout resume the " +
+      "publish instead of rebuilding from the corpus") {
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    Similarity.ensureRegistered(spark)
+    val corpusDir = java.nio.file.Files.createTempDirectory("g_ensure_resume")
+      .toString
+    val e = Tables.embeddings(spark, Sf001)
+      .select(col("vec_id"), col("embedding")).filter(col("vec_id") < 60)
+    e.write.parquet(s"$corpusDir/embeddings.parquet")
+    val k = graft.sim.IndexParams.ivfK(60L)
+    val fs = new org.apache.hadoop.fs.Path(corpusDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def layout(target: String, rows: org.apache.spark.sql.DataFrame,
+               sq: Boolean): Unit = {
+      Similarity.ivfCentroids(rows, k, iters = 1)
+        .write.parquet(s"$target/centroids")
+      val assigned = Similarity.assignToCentroid(rows,
+        spark.read.parquet(s"$target/centroids"))
+      if (!sq) assigned.write.partitionBy("cid").parquet(s"$target/assigned")
+      else {
+        Similarity.writeSqStats(rows, s"$target/stats")
+        val stats = Similarity.sqStatsLocal(spark, s"$target/stats")
+        assigned.select(col("vec_id"),
+            Similarity.quantizeExpr(col("embedding"), stats).as("qcode"),
+            col("cid"))
+          .write.partitionBy("cid").parquet(s"$target/assigned")
+      }
+    }
+    Seq((Similarity.ivfBaseLayoutDir(corpusDir, k), false,
+        () => Similarity.ensureIvfLayout(spark, corpusDir)),
+      (Similarity.sqIvfLayoutDir(corpusDir, k), true,
+        () => Similarity.ensureSqIvfLayout(spark, corpusDir))).foreach {
+      case (idxDir, sq, ensure) =>
+        try {
+          // the crash state: the old layout (victims vec_id < 10 marked)
+          // renamed to .retiring, the staging that honored them complete,
+          // the crash before the publish rename
+          layout(idxDir, e, sq)
+          Similarity.tombstoneIvfRows(spark, idxDir, e.filter(col("vec_id") < 10))
+          assert(fs.rename(new org.apache.hadoop.fs.Path(idxDir),
+            new org.apache.hadoop.fs.Path(s"$idxDir.retiring")))
+          layout(s"$idxDir.build", e.filter(col("vec_id") >= 10), sq)
+          assert(ensure()._1 === idxDir)
+          val ids = spark.read.parquet(s"$idxDir/assigned")
+            .select(col("vec_id")).collect().map(_.getLong(0)).toSet
+          assert(ids === (10L until 60L).toSet,
+            s"sq=$sq: the ensure must publish the mark-honoring staging, " +
+              "never rebuild from the corpus (which serves vec_id < 10)")
+          assert(!graft.ops.Layouts.exists(spark, s"$idxDir.build"))
+          assert(!graft.ops.Layouts.exists(spark, s"$idxDir.retiring"))
+          assert(Similarity.orphanedTombstoneSlots(spark, idxDir) === 0L)
+        } finally Seq(idxDir, s"$idxDir.build", s"$idxDir.retiring",
+          s"${idxDir}_orphaned_tombstones")
+          .foreach(graft.ops.Layouts.delete(spark, _))
+    }
+  }
+
+  test("a crash inside an ensure's multi-step build is rebuilt on retry, " +
+      "never published: the retried layout carries the delta append and " +
+      "the takedown marks (both flavors)") {
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    Similarity.ensureRegistered(spark)
+    val root = java.nio.file.Files.createTempDirectory("g_ensure_crash")
+      .toString
+    val e = Tables.embeddings(spark, Sf001)
+      .select(col("vec_id"), col("embedding")).filter(col("vec_id") < 60)
+    val victims = e.filter(col("vec_id") % 7 === 0)
+    val copies = victims.select((col("vec_id") + 1000L).as("vec_id"),
+      col("embedding"))
+    val k = graft.sim.IndexParams.ivfK(60L)
+    Seq(Similarity.FloatIvf, Similarity.SqIvf).foreach { flavor =>
+      val idxDir = s"$root/layout_sq_${flavor.quantized}"
+      def base(t: String): Unit = Similarity.buildIvf(spark, flavor, e, t, k)(e)
+      // the q159 crash point (base and copies landed, originals not yet
+      // marked) leaves a staging that already passes `built`, as q146's
+      // (base landed, delta not yet appended) does
+      intercept[RuntimeException](Similarity.ensureIvf(spark, flavor, idxDir) {
+        t => base(t); Similarity.appendIvf(spark, flavor, t, copies)
+          sys.error("crash before the marks")
+      })
+      assert(!flavor.built(spark, idxDir))
+      Similarity.ensureIvf(spark, flavor, idxDir) { t =>
+        base(t)
+        Similarity.appendIvf(spark, flavor, t, copies)
+        Similarity.tombstoneIvfRows(spark, t, victims)
+      }
+      def ids(sub: String) = spark.read.parquet(s"$idxDir/$sub")
+        .select(col("vec_id")).collect().map(_.getLong(0)).toSet
+      val victimIds = (0L until 60L by 7L).toSet
+      assert(ids("assigned") === (0L until 60L).toSet ++ victimIds.map(_ + 1000L),
+        s"quantized=${flavor.quantized}: the retry must rebuild, never " +
+          "publish the crashed attempt's staging")
+      assert(ids("tombstones") === victimIds,
+        s"quantized=${flavor.quantized}: the retry must land the marks")
+      assert(!graft.ops.Layouts.exists(spark, s"$idxDir.ensure"))
+    }
+    graft.ops.Layouts.delete(spark, root)
+  }
+
   test("cross-dir retire is rename-aside too: a crash between the " +
       "publish and the drain is finished on retry — retired sidecar " +
       "re-keyed against the published layout, no rebuild, no loud fail") {
