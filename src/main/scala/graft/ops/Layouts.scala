@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
 import org.apache.spark.sql.types.StructType
 
 /** Shared fingerprinting AND filesystem plumbing for PERSISTED layouts
@@ -141,7 +143,8 @@ object Layouts {
     root
   }
 
-  /** A fresh dir under [[ownedRoot]] for one catalog table's files. Only
+  /** A fresh dir under [[ownedRoot]] for one catalog table's files —
+    * handed out by [[ensureTable]] and `Sources.compactBucketed`. Only
     * under the in-memory catalog: a persistent one (Hive) would keep the
     * table after the JVM exit reaped its files. */
   def ownedTempDir(spark: SparkSession, prefix: String): String = {
@@ -151,24 +154,39 @@ object Layouts {
     java.nio.file.Files.createTempDirectory(ownedRoot, prefix).toString
   }
 
-  /** Catalog-table twin of `Similarity.ensureIvf` — the staging-NAME +
-    * `ALTER TABLE RENAME` rule (r13, q145): when `table` is absent, run
-    * the multi-step `build` (create + appends + tombstones) against
-    * `<table>_build` — a crashed prior attempt is dropped first; these
-    * are external tables, so the drop leaves the crashed attempt's files
-    * orphaned in its own temp dir, never under the live name — and
-    * rename into place only after the LAST step. `tableExists` flips
-    * only once everything landed, so a crash mid-build can never leave a
-    * half-built table that later invocations treat as complete. */
-  def buildTableIfAbsent(spark: SparkSession, table: String)
-                        (build: String => Unit): Unit =
+  /** THE build-or-reuse of a flat catalog table — the catalog twin of
+    * `Similarity.ensureIvf`, behind every bucketed index, band index and
+    * bucketed-join table. The table is named `prefix + tag(parts)` (a pure
+    * function of the identifying parts, so re-invocations in one JVM reuse
+    * it and a data regeneration mints a fresh one). When it is absent,
+    * `build(staging, ownedDir)` runs against `<name>_build`, with a fresh
+    * [[ownedTempDir]] for the table's files: a crashed prior attempt is
+    * dropped first (these are external tables, so the drop leaves its files
+    * in their own owned dir, never under the live name), and the staging
+    * renames into place only after the LAST step (the r13 staging-NAME +
+    * `ALTER TABLE RENAME` rule). `tableExists` flips only once everything
+    * landed, so a crash mid-build never leaves a half-built table that
+    * later invocations treat as complete. Returns the table name. */
+  def ensureTable(spark: SparkSession, prefix: String, parts: String*)
+                 (build: (String, String) => Unit): String = {
+    val table = prefix + tag(parts: _*)
     if (!spark.catalog.tableExists(table)) {
       val staging = s"${table}_build"
       if (spark.catalog.tableExists(staging))
         spark.sql(s"DROP TABLE $staging")
-      build(staging)
+      build(staging, ownedTempDir(spark, prefix))
       spark.sql(s"ALTER TABLE $staging RENAME TO $table")
     }
+    table
+  }
+
+  /** A catalog table's metadata (bucket spec, partition columns,
+    * location) — the one catalog lookup behind every layout fact. */
+  def tableMeta(spark: SparkSession, table: String): CatalogTable =
+    spark.sessionState.catalog.getTableMetadata(TableIdentifier(table))
+
+  def tableLocation(spark: SparkSession, table: String): Path =
+    new Path(tableMeta(spark, table).location)
 
   /** ONE-LINE MARKER files — the crash-protocol primitive behind the
     * rebuild retire markers (`<base>_rb_retiring`, `<dir>.retiring_from`):

@@ -320,8 +320,7 @@ object Maintenance {
     }
     val flat = bucketed.map { case (layout, tbl) =>
       (layout, "compact_bucketed") -> (() => {
-        val meta = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl))
+        val meta = Layouts.tableMeta(spark, tbl)
         // the maintenance-op layout-shape rule: a mis-wired plain table
         // must fail loud, not with a bare None.get (compactBucketed's
         // own require rejects partitioned tables; the bucket spec is
@@ -376,6 +375,20 @@ object Maintenance {
         spark, table, now))
   }
 
+  /** One flat bucketed-table [[LayoutFacts]] gather (q155's `lsh_index`
+    * and `sq_index`): data files, buckets and entries from the table
+    * itself; keyspace actual is what the table was BUILT at (its own
+    * metadata), `target` the derivation for the current corpus — deriving
+    * both from the corpus would make the rederive check structurally
+    * dead. */
+  private def bucketedFacts(spark: SparkSession, layout: String,
+                            table: String, target: Long): LayoutFacts = {
+    val buckets = Layouts.tableMeta(spark, table).bucketSpec.get.numBuckets.toLong
+    LayoutFacts(layout, "bucketed_index",
+      graft.sources.Sources.countTableDataFiles(spark, table).toLong,
+      buckets, -1L, spark.table(table).count(), -1L, buckets, target)
+  }
+
   /** Outstanding deletion debt of a directory layout's tombstone sidecar
     * — scheme-aware ([[Layouts.exists]], never `java.io.File`): a wrong
     * "absent" on a non-local store would report zero debt while the live
@@ -415,16 +428,8 @@ object Maintenance {
     // per-job scheduling/planning overhead; overlapping the independent
     // fact jobs back-fills the idle cores (guide §2.6).
     val (lshTbl, planes, tables) = Similarity.ensureLshIndex(spark, dir)
-    val lshFactsF = () => {
-      val lshMeta = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(lshTbl))
-      LayoutFacts("lsh_index", "bucketed_index",
-        graft.sources.Sources.countTableDataFiles(spark, lshTbl).toLong,
-        lshMeta.bucketSpec.get.numBuckets.toLong, -1L,
-        spark.table(lshTbl).count(), -1L,
-        lshMeta.bucketSpec.get.numBuckets.toLong,
-        IndexParams.indexBuckets(n, tables).toLong)
-    }
+    val lshFactsF = () => bucketedFacts(spark, "lsh_index", lshTbl,
+      IndexParams.indexBuckets(n, tables).toLong)
 
     // ONE facts gather for both directory-IVF flavors: actual k is the
     // layout's own, target k re-derives from the current corpus
@@ -440,25 +445,17 @@ object Maintenance {
     val ivfFactsF = ivfFacts("ivf_base", Similarity.ensureIvfLayout(spark, dir))
 
     val apBuckets = IndexParams.indexBuckets(n, tables)
-    val apTbl = "g_maint_ap_idx_" + Layouts.tag(
-      Layouts.fileFp(s"$dir/embeddings.parquet"), apBuckets.toString,
-      Layouts.Version)
-    Layouts.buildTableIfAbsent(spark, apTbl) { staging =>
-      val tmp = Layouts.ownedTempDir(spark, "graft_maint_ap")
+    val apTbl = Layouts.ensureTable(spark, "g_maint_ap_idx_",
+        Layouts.fileFp(s"$dir/embeddings.parquet"), apBuckets.toString,
+        Layouts.Version) { (staging, owned) =>
       graft.streaming.Streaming.createAppendableIndex(spark, staging,
-        s"$tmp/index", apBuckets)
+        s"$owned/index", apBuckets)
       (0 until 3).foreach { b =>
         graft.streaming.Streaming.appendIndexBatch(
           eSlim.filter(col("vec_id") % 50 === b), b.toLong, staging,
           planes, tables)
       }
     }
-    // keyspace_actual from the table's OWN metadata (the layout as built),
-    // target re-derived from the current corpus — the drift the r16
-    // rederive check watches
-    def tableBuckets(tbl: String) = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(tbl))
-      .bucketSpec.get.numBuckets.toLong
     // the age fact must share the MARKS' clock — landing epochs default
     // to wall-clock seconds, and an age derived across mismatched clocks
     // (e.g. the pinned oracle RefNowEpoch, which PRECEDES every
@@ -486,13 +483,11 @@ object Maintenance {
     // the text-side appendable band index (same flavor, own keyspace)
     val d = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val bandBuckets = IndexParams.indexBuckets(d.count(), 4)
-    val bandTbl = "g_maint_band_idx_" + Layouts.tag(
-      Layouts.fileFp(s"$dir/documents.parquet"), bandBuckets.toString,
-      Layouts.Version)
-    Layouts.buildTableIfAbsent(spark, bandTbl) { staging =>
-      val tmp = Layouts.ownedTempDir(spark, "graft_maint_band")
+    val bandTbl = Layouts.ensureTable(spark, "g_maint_band_idx_",
+        Layouts.fileFp(s"$dir/documents.parquet"), bandBuckets.toString,
+        Layouts.Version) { (staging, owned) =>
       graft.streaming.Streaming.createAppendableBandIndex(spark, staging,
-        s"$tmp/index", bandBuckets)
+        s"$owned/index", bandBuckets)
       (0 until 3).foreach { b =>
         graft.streaming.Streaming.appendBandBatch(
           d.filter(col("doc_id") % 50 === b), b.toLong, staging)
@@ -508,14 +503,8 @@ object Maintenance {
     // accrue invisibly
     val sqIvfFactsF = ivfFacts("sq_ivf", Similarity.ensureSqIvfLayout(spark, dir))
 
-    // actual = what the table was BUILT at (its own metadata), target =
-    // the derivation for the current corpus — deriving both from the
-    // corpus would make the drift check structurally dead
     val sq = Similarity.ensureSqIndex(spark, dir)
-    val sqIdxFactsF = () => LayoutFacts("sq_index", "bucketed_index",
-      graft.sources.Sources.countTableDataFiles(spark, sq.table).toLong,
-      tableBuckets(sq.table), -1L, spark.table(sq.table).count(), -1L,
-      tableBuckets(sq.table),
+    val sqIdxFactsF = () => bucketedFacts(spark, "sq_index", sq.table,
       IndexParams.indexBuckets(n, sq.tables).toLong)
 
     // every layout exists by here — gather the read-only facts

@@ -543,7 +543,6 @@ object Similarity {
     * changes the fingerprint and gets a fresh build. */
   // layout fingerprinting shared across domains since q151 — see
   // graft.ops.Layouts for the contract
-  private def layoutTag(parts: String*): String = graft.ops.Layouts.tag(parts: _*)
   private val LayoutVersion = graft.ops.Layouts.Version
   private def fileFp(p: String): String = graft.ops.Layouts.fileFp(p)
 
@@ -573,16 +572,9 @@ object Similarity {
     * one bucket's I/O but never a shuffle partition; the re-score is
     * per-candidate and the [[guardedSigJoin]] refinement applies if
     * candidate volume (not I/O) ever dominates. */
-  def q142LshIndexProbe(spark: SparkSession, dir: String): DataFrame = {
-    val (idx, planes, tables) = ensureLshIndex(spark, dir)
-    val offset = 7000000L
-    val e = Tables.embeddings(spark, dir)
-    val probes = e.filter(col("vec_id") % 100 === 0)
-      .select((col("vec_id") + offset).as("qid"), col("embedding"))
-    probeIndex(spark, idx, probes, planes, tables)
-      .withColumn("hit", col("retrieved_id") === col("qid") - offset)
-      .orderBy(col("qid"))
-  }
+  def q142LshIndexProbe(spark: SparkSession, dir: String): DataFrame =
+    flatLifecycleProbe(spark, dir, LshPrefix, modulus = 100,
+      offset = 7000000L)((c, _) => lshBaseSteps(c))
 
   /** Build-or-reuse the base-corpus sig-bucketed LSH index (the q142
     * layout) — shared by the probe query and the q150 admission gate.
@@ -590,22 +582,44 @@ object Similarity {
     * corpus count (r13 convention). */
   def ensureLshIndex(spark: SparkSession, dir: String): (String, Int, Int) = {
     ensureRegistered(spark)
-    val tables = 4
-    val e = Tables.embeddings(spark, dir)
-    val n = e.count()
-    val planes = IndexParams.lshPlanes(n)
-    val idx = "g_lsh_index_" +
-      layoutTag(fileFp(s"$dir/embeddings.parquet"), planes.toString, LayoutVersion)
-    if (!spark.catalog.tableExists(idx)) {
-      val tmp = graft.ops.Layouts.ownedTempDir(spark, "graft_lsh_idx")
-      // bucket count derives from the corpus like every other parameter
-      // (64 at test SFs, ~n·tables/1M at scale — IndexParamsSpec)
-      graft.sources.Sources.writeBucketed(
-        indexedRelation(e, planes, tables), idx, s"$tmp/index", "sig",
-        IndexParams.indexBuckets(n, tables))
-    }
-    (idx, planes, tables)
+    val c = lshCorpus(spark, dir)
+    (ensureFlat(spark, dir, LshPrefix, c)(lshBaseSteps(c)), c.planes, c.tables)
   }
+
+  private val LshPrefix = "g_lsh_index_"
+  private val SqPrefix = "g_sq_index_"
+
+  /** `dir`'s corpus (vec_id, embedding), its BASE count and the LSH
+    * parameters that count derives (the r13 rule) — resolved once per
+    * flat index site ([[ensureLshIndex]], [[appendableLifecycleProbe]],
+    * [[ensureSqIndex]], [[flatLifecycleProbe]], q147). The bucket count
+    * derives from the corpus like every other parameter (64 at test SFs,
+    * ~n·tables/1M at scale — IndexParamsSpec). */
+  private[graft] final case class LshCorpus(eSlim: DataFrame, n: Long,
+                                            planes: Int, tables: Int) {
+    def buckets: Int = IndexParams.indexBuckets(n, tables)
+    def indexed(src: DataFrame): DataFrame = indexedRelation(src, planes, tables)
+  }
+
+  private[graft] def lshCorpus(spark: SparkSession, dir: String): LshCorpus = {
+    val eSlim = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
+    val n = eSlim.count()
+    LshCorpus(eSlim, n, IndexParams.lshPlanes(n), 4)
+  }
+
+  /** The flat table `prefix` over `dir`'s corpus at `c`'s planes, through
+    * THE flat ensure ([[graft.ops.Layouts.ensureTable]]): `build` gets the
+    * staging table and its owned dir. */
+  private def ensureFlat(spark: SparkSession, dir: String, prefix: String,
+                         c: LshCorpus)(build: (String, String) => Unit): String =
+    graft.ops.Layouts.ensureTable(spark, prefix,
+      fileFp(s"$dir/embeddings.parquet"), c.planes.toString, LayoutVersion)(build)
+
+  /** The base float index: the corpus's (sig, vec_id, embedding) rows,
+    * routed into `<owned>/index` (the q142 build, and q145/q148's base). */
+  private def lshBaseSteps(c: LshCorpus)(staging: String, owned: String): Unit =
+    graft.sources.Sources.writeBucketed(c.indexed(c.eSlim), staging,
+      s"$owned/index", "sig", c.buckets)
 
   /** Online near-dup ADMISSION GATE against a persisted signature index —
     * the ingest-side counterpart of q96's text-batch gate, and the batch
@@ -810,40 +824,53 @@ object Similarity {
       explode(sigTableArray(col("embedding"), planes, tables)).as("sig"))
   }
 
-  /** The serving path against a persisted signature index (the q142 probe
-    * shape, shared with [[q145IndexAppendProbe]] and the streaming
-    * maintenance spec): the batch's signatures collect driver-side
-    * (bounded: |batch|×tables longs), prune the scan to their buckets
-    * (`sig IN (...)` → SelectedBucketsCount), the probe batch broadcasts,
-    * exact cosine re-scores, and a per-probe window takes the argmax.
-    * `probes` must carry (qid, embedding).
+  /** The float scorer against a persisted signature index (the q142
+    * probe shape, shared with [[q145IndexAppendProbe]] and the streaming
+    * maintenance spec): the exact-cosine top-1 per probe (qid,
+    * retrieved_id, sim), straight from [[flatCandidates]]. `probes` must
+    * carry (qid, embedding).
     *
     * `live = true` serves the APPENDABLE index flavor with merge-on-read
     * DELETION semantics: rows carried by the `batch_id = −3` tombstone
     * partition ([[graft.streaming.Streaming.tombstoneIndexRows]]) are
-    * anti-joined out before scoring — (sig, vec_id)-keyed, both sides
-    * inside the SAME pruned bucket set, so the anti-join adds no scan
-    * and no extra pruning loss. Deleted rows stay invisible from the
+    * anti-joined out before scoring. Deleted rows stay invisible from the
     * mark's landing until the next fold physically purges them; the
     * answer is identical before and after the purge. */
   def probeIndex(spark: SparkSession, indexTable: String, probes: DataFrame,
-                 planes: Int, tables: Int, live: Boolean = false): DataFrame = {
+                 planes: Int, tables: Int, live: Boolean = false): DataFrame =
+    flatCandidates(spark, indexTable, probes, planes, tables,
+        FloatPayload.decode, topR = 1, live)._1
+      .select(col("qid"), col("cid").as("retrieved_id"),
+        Exprs.dround(col("score"), 6).as("sim"))
+
+  /** THE candidate read of every flat bucketed-table serve — the flat twin
+    * of [[ivfCandidates]]: the batch localizes once ([[localizeProbes]]:
+    * the literal sig list and the relation the join broadcasts), the scan
+    * prunes to the batch's buckets (`sig IN (...)` →
+    * SelectedBucketsCount), `live` applies THE merge-on-read view
+    * ([[liveIndexRelation]]) after pruning — both sides of its anti-join
+    * sit inside the same pruned bucket set, so it adds no scan — and the
+    * probe batch broadcasts into the sig join. Each distinct candidate
+    * scores by cosine against the layout's decoded payload (`decode`);
+    * the top `topR` per probe survive as (qid, cid, score). Returns them
+    * with the localized (qid, qe, sig) batch, which a rescore reuses. */
+  private def flatCandidates(spark: SparkSession, table: String,
+      probes: DataFrame, planes: Int, tables: Int, decode: Column, topR: Int,
+      live: Boolean): (DataFrame, DataFrame) = {
     ensureRegistered(spark)
     val (probesLocal, probeSigs) = localizeProbes(spark, probes, planes, tables)
-    val pruned = spark.table(indexTable)
+    val pruned = spark.table(table)
       .filter(col("sig").isin(probeSigs.map(Long.box): _*))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim_raw").desc, col("cid"))
-    // THE merge-on-read view, applied after pruning — both sides of its
-    // anti-join sit inside the same pruned bucket set
-    (if (live) liveIndexRelation(pruned) else pruned)
-      .select(col("sig"), col("vec_id").as("cid"), col("embedding").as("ce"))
+    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("cid"))
+    val cands = (if (live) liveIndexRelation(pruned) else pruned)
+      .withColumnRenamed("vec_id", "cid")
       .join(broadcast(probesLocal), Seq("sig"))
-      .withColumn("sim_raw", cosine(col("qe"), col("ce")))
-      .select(col("qid"), col("cid"), col("sim_raw")).distinct()
+      .withColumn("score", cosine(col("qe"), decode))
+      .select(col("qid"), col("cid"), col("score")).distinct()
       .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("qid"), col("cid").as("retrieved_id"),
-        Exprs.dround(col("sim_raw"), 6).as("sim"))
+      .filter(col("rn") <= topR)
+      .select(col("qid"), col("cid"), col("score"))
+    (cands, probesLocal)
   }
 
   /** The appendable index's partition namespace: live batches ≥ 0, the
@@ -879,8 +906,7 @@ object Similarity {
   def q157IndexDeleteProbe(spark: SparkSession, dir: String): DataFrame =
     appendableLifecycleProbe(spark, dir, "del",
         copyShift = 24000000L, offset = 25000000L, live = true) {
-      (staging, eSlim, copies, planes, tables) =>
-        plantedDeleteIngest(spark, staging, eSlim, copies, planes, tables)
+      (staging, c, copies) => plantedDeleteIngest(spark, staging, c, copies)
     }
 
   /** q162: REBUILD of the appendable index under a re-derived bucket
@@ -901,10 +927,10 @@ object Similarity {
     appendableLifecycleProbe(spark, dir, "rb",
         copyShift = 32000000L, offset = 33000000L, live = false,
         createBuckets = Some(4)) {
-      (staging, eSlim, copies, planes, tables) =>
-        plantedDeleteIngest(spark, staging, eSlim, copies, planes, tables)
+      (staging, c, copies) =>
+        plantedDeleteIngest(spark, staging, c, copies)
         graft.streaming.Streaming.rebuildAppendableIndex(spark, staging,
-          IndexParams.indexBuckets(eSlim.count(), tables))
+          c.buckets)
         ()
     }
 
@@ -923,30 +949,22 @@ object Similarity {
   private def appendableLifecycleProbe(spark: SparkSession, dir: String,
       tag: String, copyShift: Long, offset: Long, live: Boolean,
       createBuckets: Option[Int] = None)(
-      build: (String, DataFrame, DataFrame, Int, Int) => Unit)
-      : DataFrame = {
+      build: (String, LshCorpus, DataFrame) => Unit): DataFrame = {
     ensureRegistered(spark)
-    val tables = 4
-    val e = Tables.embeddings(spark, dir)
-    val n = e.count()
-    val planes = IndexParams.lshPlanes(n)
-    val eSlim = e.select(col("vec_id"), col("embedding"))
-    val copies = eSlim.filter(col("vec_id") % 7 === 0)
+    val c = lshCorpus(spark, dir)
+    val copies = c.eSlim.filter(col("vec_id") % 7 === 0)
       .select((col("vec_id") + copyShift).as("vec_id"), col("embedding"))
-    val idx = s"g_${tag}_index_" + layoutTag(
-      fileFp(s"$dir/embeddings.parquet"), s"$tag$planes", LayoutVersion)
-    graft.ops.Layouts.buildTableIfAbsent(spark, idx) { staging =>
-      val tmp = graft.ops.Layouts.ownedTempDir(spark, s"graft_${tag}_idx")
-      graft.streaming.Streaming.createAppendableIndex(spark, staging,
-        s"$tmp/index",
-        createBuckets.getOrElse(IndexParams.indexBuckets(n, tables)))
-      build(staging, eSlim, copies, planes, tables)
+    val idx = graft.ops.Layouts.ensureTable(spark, s"g_${tag}_index_",
+        fileFp(s"$dir/embeddings.parquet"), s"$tag${c.planes}", LayoutVersion) {
+      (staging, owned) =>
+        graft.streaming.Streaming.createAppendableIndex(spark, staging,
+          s"$owned/index", createBuckets.getOrElse(c.buckets))
+        build(staging, c, copies)
     }
-    val probes = eSlim.filter(col("vec_id") % 7 === 0)
+    val probes = c.eSlim.filter(col("vec_id") % 7 === 0)
       .select((col("vec_id") + offset).as("qid"), col("embedding"))
-    val served =
-      probeIndex(spark, idx, probes, planes, tables, live)
-    served.withColumn("hit",
+    probeIndex(spark, idx, probes, c.planes, c.tables, live)
+      .withColumn("hit",
         col("retrieved_id") === col("qid") - (offset - copyShift))
       .orderBy(col("qid"))
   }
@@ -954,14 +972,13 @@ object Similarity {
   /** The q157/q162 ingest sequence: corpus as batch 0, the planted
     * copies as batch 1, originals tombstoned (merge-on-read). */
   private def plantedDeleteIngest(spark: SparkSession, staging: String,
-      eSlim: DataFrame, copies: DataFrame, planes: Int, tables: Int)
-      : Unit = {
-    graft.streaming.Streaming.appendIndexBatch(eSlim, 0L, staging,
-      planes, tables)
+                                  c: LshCorpus, copies: DataFrame): Unit = {
+    graft.streaming.Streaming.appendIndexBatch(c.eSlim, 0L, staging,
+      c.planes, c.tables)
     graft.streaming.Streaming.appendIndexBatch(copies, 1L, staging,
-      planes, tables)
+      c.planes, c.tables)
     graft.streaming.Streaming.tombstoneIndexRows(spark, staging,
-      eSlim.filter(col("vec_id") % 7 === 0), planes, tables)
+      c.eSlim.filter(col("vec_id") % 7 === 0), c.planes, c.tables)
   }
 
   /** The q164/q165 ingest sequence: corpus in two leveled-folded
@@ -969,8 +986,8 @@ object Similarity {
     * tombstoned (merge-on-read) — one definition so the two probes
     * cannot drift. */
   private def leveledIngest(spark: SparkSession, staging: String,
-      eSlim: DataFrame, copies: DataFrame, planes: Int, tables: Int)
-      : Unit = {
+                            c: LshCorpus, copies: DataFrame): Unit = {
+    val LshCorpus(eSlim, _, planes, tables) = c
     graft.streaming.Streaming.appendIndexBatch(
       eSlim.filter(col("vec_id") % 2 === 0), 0L, staging, planes, tables)
     graft.streaming.Streaming.appendIndexBatch(
@@ -1001,8 +1018,7 @@ object Similarity {
   def q164LeveledFoldProbe(spark: SparkSession, dir: String): DataFrame =
     appendableLifecycleProbe(spark, dir, "lev",
         copyShift = 36000000L, offset = 37000000L, live = true) {
-      (staging, eSlim, copies, planes, tables) =>
-        leveledIngest(spark, staging, eSlim, copies, planes, tables)
+      (staging, c, copies) => leveledIngest(spark, staging, c, copies)
     }
 
   /** q165: the MARK-SCOPED physical purge made hash-observable —
@@ -1022,8 +1038,8 @@ object Similarity {
   def q165ScopedPurgeProbe(spark: SparkSession, dir: String): DataFrame =
     appendableLifecycleProbe(spark, dir, "purge",
         copyShift = 38000000L, offset = 39000000L, live = false) {
-      (staging, eSlim, copies, planes, tables) =>
-        leveledIngest(spark, staging, eSlim, copies, planes, tables)
+      (staging, c, copies) =>
+        leveledIngest(spark, staging, c, copies)
         graft.streaming.Streaming.purgeIndexTombstones(spark, staging)
         ()
     }
@@ -1052,7 +1068,8 @@ object Similarity {
   def q166ConvergingPurgeProbe(spark: SparkSession, dir: String): DataFrame =
     appendableLifecycleProbe(spark, dir, "cvg",
         copyShift = 40000000L, offset = 41000000L, live = false) {
-      (staging, eSlim, copies, planes, tables) =>
+      (staging, c, copies) =>
+        val LshCorpus(eSlim, _, planes, tables) = c
         graft.streaming.Streaming.appendIndexBatch(
           eSlim.filter(col("vec_id") % 2 === 0), 0L, staging, planes, tables)
         graft.streaming.Streaming.appendIndexBatch(
@@ -1125,8 +1142,7 @@ object Similarity {
 
   /** Write the per-dim SQ8 codebook (min/max per dimension) for `eSlim`
     * to `target` — the one stats-build every quantized layout shares
-    * (frozen beside the codes it writes, the q149 rule). mode=overwrite
-    * so the q149 rebuild-both-halves path can re-land it. */
+    * (frozen beside the codes it writes, the q149 rule). */
   private[graft] def writeSqStats(eSlim: DataFrame, target: String): Unit =
     // r22: the corpus arrives as one input split, so the posexplode +
     // partial min/max agg ran as a single 1.5-2.2 s task (guide §2.4) —
@@ -1149,54 +1165,50 @@ object Similarity {
     spark.read.parquet(statsDir).orderBy(col("dim")).collect()
       .map(r => (r.getAs[Double]("mn"), r.getAs[Double]("mx")))
 
-  /** First stage of the quantized serving path: bucket-pruned scan of the
-    * SQ8 index, approximate cosine against the dequantized codes, top-R
-    * candidates per probe. Public so specs can pin the plan shape
-    * (SelectedBucketsCount) that [[probeSqIndex]] consumes eagerly. */
-  def sqCandidates(spark: SparkSession, indexTable: String, statsDir: String,
-                   probes: DataFrame, planes: Int, tables: Int,
-                   topR: Int): DataFrame = {
-    ensureRegistered(spark)
-    val stats = sqStatsLocal(spark, statsDir)
-    val (probesLocal, sigs) = localizeProbes(spark, probes, planes, tables)
-    sqCandidateStage(spark, indexTable, stats, probesLocal, sigs, topR)
+  /** A layout's stored payload: the projection an `embedding` row is
+    * written as (`encode`) and the float vector a stored row scores with
+    * (`decode`). */
+  private[sim] final case class Payload(encode: Column, decode: Column)
+
+  private[sim] val FloatPayload = Payload(col("embedding"), col("embedding"))
+
+  /** THE SQ8 codec: tinyint `qcode` under the frozen per-dim codebook at
+    * `codebook`, read once per codec (codes are only valid with the
+    * codebook that wrote them — the q149 rule). One codec for both
+    * quantized flavors: q149's flat table passes `<owned dir>/codebook`,
+    * the SQ8 directory IVF its `<idxDir>/stats`. */
+  private[sim] def sq8Payload(spark: SparkSession, codebook: String): Payload = {
+    val stats = sqStatsLocal(spark, codebook)
+    Payload(quantizeExpr(col("embedding"), stats).as("qcode"),
+      reconExpr(col("qcode"), stats))
   }
 
-  private def sqCandidateStage(spark: SparkSession, indexTable: String,
-                               stats: Array[(Double, Double)],
-                               probesLocal: DataFrame, probeSigs: Array[Long],
-                               topR: Int): DataFrame = {
-    val w = Window.partitionBy(col("qid")).orderBy(col("approx").desc, col("cid"))
-    spark.table(indexTable)
-      .filter(col("sig").isin(probeSigs.map(Long.box): _*))
-      .select(col("sig"), col("vec_id").as("cid"), col("qcode"))
-      .join(broadcast(probesLocal), Seq("sig"))
-      .withColumn("approx", cosine(col("qe"), reconExpr(col("qcode"), stats)))
-      .select(col("qid"), col("cid"), col("approx")).distinct()
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= topR)
-      .select(col("qid"), col("cid"), col("approx"))
-  }
+  /** First stage of the quantized serving path: bucket-pruned scan of the
+    * SQ8 index, approximate cosine against the dequantized codes, top-R
+    * candidates per probe ([[flatCandidates]] under the SQ8 codec).
+    * Public so specs can pin the plan shape (SelectedBucketsCount) that
+    * [[probeSqIndex]] consumes eagerly. */
+  def sqCandidates(spark: SparkSession, indexTable: String, statsDir: String,
+                   probes: DataFrame, planes: Int, tables: Int,
+                   topR: Int): DataFrame =
+    flatCandidates(spark, indexTable, probes, planes, tables,
+        sq8Payload(spark, statsDir).decode, topR, live = false)._1
+      .withColumnRenamed("score", "approx")
 
   /** Serving path against a QUANTIZED persisted index (q149): candidate
     * generation reads only tinyint codes from the pruned buckets
-    * ([[sqCandidates]]), then the bounded candidate set (≤ |batch|·topR
-    * ids, collected) is re-scored EXACTLY against the full-precision
-    * corpus via a literal `vec_id IN (...)` — which reaches the parquet
-    * scan as a pushed filter, the point-lookup read pattern (at 100 TB the
-    * corpus side would additionally be bucketed by vec_id so the lookup
-    * prunes buckets too). The emitted similarity is the exact
+    * ([[sqCandidates]]), then the bounded candidate set is re-scored
+    * EXACTLY against the full-precision corpus ([[exactRescoreTop1]]; at
+    * 100 TB the corpus side would additionally be bucketed by vec_id so
+    * the lookup prunes buckets too). The emitted similarity is the exact
     * full-precision cosine: quantization affects WHICH candidates are
     * ranked, never the reported score. */
   def probeSqIndex(spark: SparkSession, indexTable: String, statsDir: String,
                    probes: DataFrame, planes: Int, tables: Int,
                    corpus: DataFrame, topR: Int = 8): DataFrame = {
-    ensureRegistered(spark)
-    val stats = sqStatsLocal(spark, statsDir)
-    val (probesLocal, sigs) = localizeProbes(spark, probes, planes, tables)
-    val candStage = sqCandidateStage(spark, indexTable, stats, probesLocal,
-      sigs, topR).select(col("qid"), col("cid"))
-    exactRescoreTop1(spark, corpus, candStage,
+    val (cands, probesLocal) = flatCandidates(spark, indexTable, probes,
+      planes, tables, sq8Payload(spark, statsDir).decode, topR, live = false)
+    exactRescoreTop1(spark, corpus, cands.select(col("qid"), col("cid")),
       probesLocal.select(col("qid"), col("qe")).distinct())
   }
 
@@ -1225,6 +1237,42 @@ object Similarity {
         Exprs.dround(col("sim_raw"), 6).as("sim"))
   }
 
+  /** The q149 layout coordinates for a corpus dir — (index table, codebook
+    * dir, planes, tables) — shared by the query and the specs that pin its
+    * physical claims (tinyint-only schema, size vs the float twin, bucket
+    * pruning). Parameters derive from the BASE corpus count (r13 rule). */
+  case class SqLayout(table: String, statsDir: String, planes: Int,
+                      tables: Int, n: Long)
+
+  /** [[ensureSqIndex]]: the codebook dir is the built table's own. */
+  def sqLayout(spark: SparkSession, dir: String): SqLayout =
+    ensureSqIndex(spark, dir)
+
+  /** Build-or-reuse the q149 quantized signature index (codebook +
+    * sig-bucketed tinyint-code table, one staged build) — extracted so the
+    * q155 maintenance audit sees the same layout the probe serves. */
+  def ensureSqIndex(spark: SparkSession, dir: String): SqLayout = {
+    ensureRegistered(spark)
+    val c = lshCorpus(spark, dir)
+    val idx = ensureFlat(spark, dir, SqPrefix, c)(sqSteps(spark, c))
+    SqLayout(idx, codebookDir(spark, idx), c.planes, c.tables, c.n)
+  }
+
+  /** The q149 build: the codebook lands at `<owned>/codebook`, then the
+    * (sig, vec_id, qcode) rows coded by its FROZEN copy (not the plan)
+    * land at `<owned>/index`. */
+  private def sqSteps(spark: SparkSession, c: LshCorpus)(
+      staging: String, owned: String): Unit = {
+    writeSqStats(c.eSlim, s"$owned/codebook")
+    graft.sources.Sources.writeBucketed(c.indexed(c.eSlim).select(col("sig"),
+        col("vec_id"), sq8Payload(spark, s"$owned/codebook").encode),
+      staging, s"$owned/index", "sig", c.buckets)
+  }
+
+  /** A q149 table's codebook: `codebook` beside its `index` data dir. */
+  private def codebookDir(spark: SparkSession, table: String): String =
+    graft.ops.Layouts.tableLocation(spark, table).getParent.toString + "/codebook"
+
   /** q149: SQ8-QUANTIZED persisted index with exact rescore — the storage
     * tier q108's audit priced out, wired into the q142 lifecycle: the
     * index table stores (sig, vec_id, qcode array<tinyint>) — no float
@@ -1232,10 +1280,12 @@ object Similarity {
     * two-stage: approximate cosine over dequantized codes picks top-R per
     * probe from the pruned buckets, exact full-precision rescore of the
     * collected candidate ids (pushed `vec_id IN` corpus lookup) picks the
-    * answer. The per-dim codebook is persisted BESIDE the layout and read
-    * back for both build and probe (the q143 frozen-centroid rule —
-    * appends or probes quantizing against recomputed stats could disagree
-    * with stored codes).
+    * answer. The per-dim codebook is persisted BESIDE the codes, in the
+    * table's own dir (`<owned dir>/codebook` next to `<owned dir>/index`,
+    * written inside the same staged build), and read back for both build
+    * and probe (the q143 frozen-centroid rule — appends or probes
+    * quantizing against recomputed stats could disagree with stored
+    * codes).
     *
     * The planted oracle stays EXACT through both approximations: a probe
     * is a bit-exact copy of its original, so the original is a certain
@@ -1246,61 +1296,9 @@ object Similarity {
     * emitted doubles: full-precision cosine, identical tiebreak). So the
     * output equals [[plantedRetrievalOracle]] independent of codebook
     * noise, R, and quantization error. */
-  /** The q149 layout coordinates for a corpus dir — (index table, codebook
-    * dir, planes, tables) — shared by the query and the specs that pin its
-    * physical claims (tinyint-only schema, size vs the float twin, bucket
-    * pruning). Parameters derive from the BASE corpus count (r13 rule). */
-  case class SqLayout(table: String, statsDir: String, planes: Int,
-                      tables: Int, n: Long)
-
-  def sqLayout(spark: SparkSession, dir: String): SqLayout = {
-    val n = Tables.embeddings(spark, dir).count()
-    val planes = IndexParams.lshPlanes(n)
-    val tag =
-      layoutTag(fileFp(s"$dir/embeddings.parquet"), planes.toString, LayoutVersion)
-    SqLayout(s"g_sq_index_$tag",
-      System.getProperty("java.io.tmpdir") + s"/graft_sq_stats_$tag", planes, 4, n)
-  }
-
-  /** Build-or-reuse the q149 quantized signature index (codebook +
-    * sig-bucketed tinyint-code table) — extracted so the q155 maintenance
-    * audit sees the same layout the probe serves. */
-  def ensureSqIndex(spark: SparkSession, dir: String): SqLayout = {
-    ensureRegistered(spark)
-    val lay @ SqLayout(idx, statsDir, planes, tables, n) = sqLayout(spark, dir)
-    val buckets = IndexParams.indexBuckets(n, tables)
-    val eSlim = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-    val statsBuilt = graft.ops.Layouts.committed(spark, statsDir)
-    if (!spark.catalog.tableExists(idx) || !statsBuilt) {
-      // rebuild both halves together: codes are only valid with the
-      // codebook that wrote them (stats land first; a crash before the
-      // table write leaves no table, so the next call re-enters here)
-      if (spark.catalog.tableExists(idx)) spark.sql(s"DROP TABLE $idx")
-      writeSqStats(eSlim, statsDir)
-      val stats = sqStatsLocal(spark, statsDir) // the frozen copy, not the plan
-      val tmp = graft.ops.Layouts.ownedTempDir(spark, "graft_sq_idx")
-      graft.sources.Sources.writeBucketed(
-        indexedRelation(eSlim, planes, tables)
-          .select(col("sig"), col("vec_id"),
-            quantizeExpr(col("embedding"), stats).as("qcode")),
-        idx, s"$tmp/index", "sig", buckets)
-    }
-    lay
-  }
-
-  def q149SqIndexProbe(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
-    val offset = 15000000L
-    val SqLayout(idx, statsDir, planes, tables, _) = ensureSqIndex(spark, dir)
-    val eSlim = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-    val probes = eSlim.filter(col("vec_id") % 89 === 0)
-      .select((col("vec_id") + offset).as("qid"), col("embedding"))
-    probeSqIndex(spark, idx, statsDir, probes, planes, tables, eSlim)
-      .withColumn("hit", col("retrieved_id") === col("qid") - offset)
-      .orderBy(col("qid"))
-  }
+  def q149SqIndexProbe(spark: SparkSession, dir: String): DataFrame =
+    flatLifecycleProbe(spark, dir, SqPrefix, modulus = 89,
+      offset = 15000000L, quantized = true)((c, _) => sqSteps(spark, c))
 
   /** q145: INCREMENTAL index maintenance — the append path without which a
     * persisted index ([[q142LshIndexProbe]]) is a one-shot artifact: at
@@ -1312,7 +1310,8 @@ object Similarity {
     * hash-bucket layout — so bucket pruning spans base and delta files
     * alike and a probe batch serves from both without any rebuild or
     * compaction. The layout is fingerprint-named and built+appended inside
-    * one existence check, so re-invocations reuse it (no double-append).
+    * one staged ensure, so re-invocations reuse it (no double-append) and
+    * a failure mid-append never leaves a registered base-only index.
     *
     * Probes are exact copies of every 113th vector of the UNION — the
     * modulus lands on both halves, so the oracle proves base AND delta rows
@@ -1324,41 +1323,17 @@ object Similarity {
     * reversal is bit-exact). A broken append — delta rows missing, or
     * insertInto not respecting the bucket function (pruning would then
     * skip delta files) — flips retrieved ids and breaks the driver hash. */
-  def q145IndexAppendProbe(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
-    import spark.implicits._
-    val tables = 4; val deltaShift = 9000000L; val offset = 10000000L
-    val e = Tables.embeddings(spark, dir)
-    val n = e.count()
-    val planes = IndexParams.lshPlanes(n)
-    def indexed(src: DataFrame) = indexedRelation(src, planes, tables)
-    val eSlim = e.select(col("vec_id"), col("embedding"))
-    val delta = eSlim.select((col("vec_id") + deltaShift).as("vec_id"),
-      reverse(col("embedding")).as("embedding"))
-    val idx = "g_lsh_index_inc_" +
-      layoutTag(fileFp(s"$dir/embeddings.parquet"), planes.toString, LayoutVersion)
-    // failure-atomic publish (the q146 temp+rename rule, catalog flavor):
-    // build + append under a staging NAME, rename into place only once
-    // the delta landed — a failure mid-append can never leave a
-    // registered base-only index that later invocations silently serve
-    graft.ops.Layouts.buildTableIfAbsent(spark, idx) { staging =>
-      val tmp = graft.ops.Layouts.ownedTempDir(spark, "graft_lsh_inc")
-      val buckets = IndexParams.indexBuckets(n, tables)
-      graft.sources.Sources.writeBucketed(indexed(eSlim), staging, s"$tmp/index", "sig",
-        buckets)
-      // the incremental ingest: position-based insert, bucketing preserved
-      // (repartitioned onto the bucket function — the writeBucketed r22
-      // rule — so the delta's sign+write runs buckets-wide, not as the
-      // source scan's single split, and still lands one file per bucket)
-      graft.sources.Sources.bucketRouted(indexed(delta), "sig", buckets)
-        .write.insertInto(staging)
+  def q145IndexAppendProbe(spark: SparkSession, dir: String): DataFrame =
+    flatLifecycleProbe(spark, dir, "g_lsh_index_inc_", modulus = 113,
+        offset = 10000000L, shift = 9000000L) { (c, delta) =>
+      (staging, owned) =>
+        lshBaseSteps(c)(staging, owned)
+        // the incremental ingest: routed, position-based insert, bucketing
+        // preserved — the delta's sign+write runs buckets-wide, not as the
+        // source scan's single split, and still lands one file per bucket
+        graft.sources.Sources.insertBucketed(c.indexed(delta), staging,
+          "sig", c.buckets)
     }
-    val probes = eSlim.unionByName(delta).filter(col("vec_id") % 113 === 0)
-      .select((col("vec_id") + offset).as("qid"), col("embedding"))
-    probeIndex(spark, idx, probes, planes, tables)
-      .withColumn("hit", col("retrieved_id") === col("qid") - offset)
-      .orderBy(col("qid"))
-  }
 
   /** q148: index COMPACTION — the maintenance arm that keeps the append
     * path ([[q145IndexAppendProbe]]) serviceable. Every `insertInto`
@@ -1383,42 +1358,50 @@ object Similarity {
     * hash. SimilaritySpec pins the physical claims the oracle cannot see:
     * file count collapses to ≤ buckets and SelectedBucketsCount still
     * prunes post-compaction. */
-  def q148IndexCompactProbe(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
-    val tables = 4; val deltaShift = 13000000L; val offset = 14000000L
-    val e = Tables.embeddings(spark, dir)
-    // r13 convention: parameters derive from the BASE corpus count
-    val n = e.count()
-    val planes = IndexParams.lshPlanes(n)
-    val buckets = IndexParams.indexBuckets(n, tables)
-    def indexed(src: DataFrame) = indexedRelation(src, planes, tables)
-    val eSlim = e.select(col("vec_id"), col("embedding"))
-    val delta = eSlim.select((col("vec_id") + deltaShift).as("vec_id"),
-      reverse(col("embedding")).as("embedding"))
-    val idx = "g_lsh_index_cmp_" +
-      layoutTag(fileFp(s"$dir/embeddings.parquet"), planes.toString, LayoutVersion)
-    graft.ops.Layouts.buildTableIfAbsent(spark, idx) { staging =>
-      val tmp = graft.ops.Layouts.ownedTempDir(spark, "graft_lsh_cmp")
-      graft.sources.Sources.writeBucketed(indexed(eSlim), staging,
-        s"$tmp/index", "sig", buckets)
-      // two separate ingest batches: each insertInto lands its own
-      // bucket-file generation — the small-files decay compaction repairs
-      // (bucket-function repartition per batch: parallel sign+write, same
-      // one-file-per-(batch, bucket) generations the decay story needs)
-      graft.sources.Sources.bucketRouted(
-          indexed(delta.filter(col("vec_id") % 2 === 0)), "sig", buckets)
-        .write.insertInto(staging)
-      graft.sources.Sources.bucketRouted(
-          indexed(delta.filter(col("vec_id") % 2 =!= 0)), "sig", buckets)
-        .write.insertInto(staging)
-      // compacting the staging name keeps the publish atomic: a crash
-      // mid-compact leaves no live table, and the rebuild re-enters here
-      graft.sources.Sources.compactBucketed(spark, staging, "sig", buckets)
+  def q148IndexCompactProbe(spark: SparkSession, dir: String): DataFrame =
+    flatLifecycleProbe(spark, dir, "g_lsh_index_cmp_", modulus = 97,
+        offset = 14000000L, shift = 13000000L) { (c, delta) =>
+      (staging, owned) =>
+        lshBaseSteps(c)(staging, owned)
+        // two separate ingest batches: each insert lands its own
+        // bucket-file generation — the small-files decay compaction repairs
+        Seq(delta.filter(col("vec_id") % 2 === 0),
+            delta.filter(col("vec_id") % 2 =!= 0)).foreach(batch =>
+          graft.sources.Sources.insertBucketed(c.indexed(batch), staging,
+            "sig", c.buckets))
+        // compacting the staging name keeps the publish atomic: a crash
+        // mid-compact leaves no live table, and the rebuild re-enters here
+        graft.sources.Sources.compactBucketed(spark, staging, "sig", c.buckets)
     }
-    val probes = eSlim.unionByName(delta).filter(col("vec_id") % 97 === 0)
+
+  /** The shared build-and-probe scaffold of the flat bucketed-table probes
+    * (q142/q145/q148/q149) — the flat twin of [[ivfLifecycleProbe]]. It
+    * resolves the corpus and its LSH parameters once ([[lshCorpus]]),
+    * plants a reversed-embedding delta under a nonzero `shift` (the q145
+    * append shape: genuinely new content), and ensures the `prefix` table
+    * through `steps` — given (corpus, delta), the build against (staging,
+    * owned dir). Exact copies of every `modulus`-th row of the union probe
+    * under `offset` through the float scorer ([[probeIndex]]) or, when
+    * `quantized`, the SQ8 two-stage scorer ([[probeSqIndex]], rescoring
+    * against the union). One definition so a scaffold fix cannot drift
+    * across the family — the next probe is a lambda, not another copy. */
+  private def flatLifecycleProbe(spark: SparkSession, dir: String,
+      prefix: String, modulus: Int, offset: Long, shift: Long = 0L,
+      quantized: Boolean = false)(
+      steps: (LshCorpus, DataFrame) => (String, String) => Unit): DataFrame = {
+    ensureRegistered(spark)
+    val c = lshCorpus(spark, dir)
+    val delta = c.eSlim.select((col("vec_id") + shift).as("vec_id"),
+      reverse(col("embedding")).as("embedding"))
+    val idx = ensureFlat(spark, dir, prefix, c)(steps(c, delta))
+    val union = if (shift != 0L) c.eSlim.unionByName(delta) else c.eSlim
+    val probes = union.filter(col("vec_id") % modulus === 0)
       .select((col("vec_id") + offset).as("qid"), col("embedding"))
-    probeIndex(spark, idx, probes, planes, tables)
-      .withColumn("hit", col("retrieved_id") === col("qid") - offset)
+    val served =
+      if (quantized) probeSqIndex(spark, idx, codebookDir(spark, idx), probes,
+        c.planes, c.tables, union)
+      else probeIndex(spark, idx, probes, c.planes, c.tables)
+    served.withColumn("hit", col("retrieved_id") === col("qid") - offset)
       .orderBy(col("qid"))
   }
 
@@ -1468,12 +1451,12 @@ object Similarity {
     *    frozen — the q143/q146 rule) and `assigned` (cid-partitioned
     *    rows), plus for SQ8 `stats` (the per-dim codebook, frozen beside
     *    the codes it wrote — the q149 rule);
-    *  - the payload projection at build and append time ([[encode]]):
-    *    the float `embedding`, or its tinyint `qcode` under the frozen
-    *    codebook (no float vectors, 4× less I/O per probed partition);
+    *  - the stored payload ([[payload]]): the float `embedding`, or its
+    *    tinyint `qcode` under the frozen codebook (no float vectors, 4×
+    *    less I/O per probed partition);
     *  - the candidate scorer: exact cosine top-1 ([[probeIvf]]), or
-    *    approximate cosine over the dequantized codes ([[decode]]) top-R
-    *    plus the exact full-precision rescore ([[probeSqIvf]]). */
+    *    approximate cosine over the dequantized codes top-R plus the exact
+    *    full-precision rescore ([[probeSqIvf]]). */
   final case class IvfFlavor(quantized: Boolean) {
     val subdirs: Seq[String] =
       if (quantized) Seq("centroids", "stats", "assigned")
@@ -1484,18 +1467,10 @@ object Similarity {
     def built(spark: SparkSession, idxDir: String): Boolean =
       subdirs.forall(sub => graft.ops.Layouts.committed(spark, s"$idxDir/$sub"))
 
-    /** The `assigned` payload of an `embedding` row under `idxDir`'s
-      * frozen codebook. */
-    private[sim] def encode(spark: SparkSession, idxDir: String): Column =
-      if (quantized)
-        quantizeExpr(col("embedding"), sqStatsLocal(spark, s"$idxDir/stats"))
-          .as("qcode")
-      else col("embedding")
-
-    /** The stored payload as the float vector a candidate scores with. */
-    private[sim] def decode(spark: SparkSession, idxDir: String): Column =
-      if (quantized) reconExpr(col("qcode"), sqStatsLocal(spark, s"$idxDir/stats"))
-      else col("embedding")
+    /** The `assigned` payload under `idxDir`: the float `embedding`, or
+      * THE SQ8 codec ([[sq8Payload]]) under the layout's frozen `stats`. */
+    private[sim] def payload(spark: SparkSession, idxDir: String): Payload =
+      if (quantized) sq8Payload(spark, s"$idxDir/stats") else FloatPayload
   }
 
   val FloatIvf: IvfFlavor = IvfFlavor(quantized = false)
@@ -1514,7 +1489,7 @@ object Similarity {
     * lifecycle probes' `inc`/`del`/`rb` with their `sq_` twins. */
   def ivfLayoutDir(dir: String, k: Int, role: String): String =
     System.getProperty("java.io.tmpdir") + s"/graft_ivf_${role}_" +
-      layoutTag(fileFp(s"$dir/embeddings.parquet"), k.toString, LayoutVersion)
+      graft.ops.Layouts.tag(fileFp(s"$dir/embeddings.parquet"), k.toString, LayoutVersion)
 
   def ivfBaseLayoutDir(dir: String, k: Int): String = ivfLayoutDir(dir, k, "idx")
   def sqIvfLayoutDir(dir: String, k: Int): String = ivfLayoutDir(dir, k, "sq")
@@ -1625,7 +1600,7 @@ object Similarity {
   private[graft] def appendIvf(spark: SparkSession, flavor: IvfFlavor,
                                idxDir: String, batches: DataFrame*): Unit = {
     val cd = spark.read.parquet(s"$idxDir/centroids")
-    val payload = flavor.encode(spark, idxDir)
+    val payload = flavor.payload(spark, idxDir).encode
     batches.foreach(rows =>
       assignToCentroid(rows.select(col("vec_id"), col("embedding")), cd)
         .select(col("vec_id"), payload, col("cid"))
@@ -1686,7 +1661,8 @@ object Similarity {
     val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("cid_vec"))
     alive.withColumnRenamed("vec_id", "cid_vec")
       .join(broadcast(probeClusters), "cid")
-      .withColumn("score", cosine(col("qe"), flavor.decode(spark, idxDir)))
+      .withColumn("score",
+        cosine(col("qe"), flavor.payload(spark, idxDir).decode))
       .select(col("qid"), col("cid_vec"), col("score"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= topR)
@@ -2407,11 +2383,7 @@ object Similarity {
   def q147IndexStats(spark: SparkSession, dir: String): DataFrame = {
     ensureRegistered(spark)
     implicit val s: SparkSession = spark
-    val e = Tables.embeddings(spark, dir)
-    val eSlim = e.select(col("vec_id"), col("embedding"))
-    val n = e.count()
-    val planes = IndexParams.lshPlanes(n)
-    val tables = 4
+    val c @ LshCorpus(eSlim, n, _, _) = lshCorpus(spark, dir)
     val cap = IndexParams.hotBucketCap()
     def statsOf(occ: DataFrame, family: String, unit: Column,
                 hot: Column): DataFrame =
@@ -2426,7 +2398,7 @@ object Similarity {
         expr("(2*n_entries*100 + n_keys) div (2*n_keys)").as("occ_avg_x100"),
         col("n_hot"))
     val lsh = statsOf(
-      indexedRelation(eSlim, planes, tables)
+      c.indexed(eSlim)
         .groupBy(shiftright(col("sig"), 32).cast("int").as("t"), col("sig"))
         .agg(count(lit(1)).as("occ")),
       "lsh", concat(lit("table_"), col("t")), col("occ") > cap)

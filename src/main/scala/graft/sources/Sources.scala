@@ -41,28 +41,27 @@ object Sources {
     * hash — gives each task exactly one bucket, so the write runs
     * buckets-wide and still lands ONE file per bucket (the same file
     * set a single-task write produces; layout facts and pruning are
-    * byte-for-byte unaffected). For already-bucket-aligned inputs
-    * (compactBucketed's rewrite) the explicit repartition collapses
-    * against the scan's claimed HashPartitioning, keeping that path
-    * shuffle-free. */
+    * byte-for-byte unaffected). Already-bucket-aligned inputs
+    * ([[compactBucketed]]'s rewrite) write UNROUTED: a bucket-ID routing
+    * expression would not collapse against the scan's key
+    * HashPartitioning and would re-shuffle the whole table. */
   def writeBucketed(df: DataFrame, tableName: String, path: String,
                     key: String, buckets: Int): Unit =
-    writeBucketedPrePartitioned(bucketRouted(df, key, buckets),
-      tableName, path, key, buckets)
-
-  /** [[writeBucketed]] WITHOUT the routing repartition — for inputs that
-    * are already bucket-aligned ([[compactBucketed]]'s rewrite, whose
-    * bucket-aligned scan + collapsing repartition keep it shuffle-free,
-    * the r13 rule; a bucket-ID routing expression would NOT collapse
-    * against the scan's key HashPartitioning and would re-shuffle the
-    * whole table). */
-  def writeBucketedPrePartitioned(df: DataFrame, tableName: String,
-                                  path: String, key: String,
-                                  buckets: Int): Unit =
-    df.write.mode("overwrite")
+    bucketRouted(df, key, buckets).write.mode("overwrite")
       .option("path", path)
       .bucketBy(buckets, key).sortBy(key)
       .format("parquet").saveAsTable(tableName)
+
+  /** THE routed insert into an existing bucketed table — the append twin
+    * of [[writeBucketed]] (q145/q148's delta batches, and every
+    * appendable-index write that lands rows through
+    * `Streaming.AppendableIndex.replaceOrClear`): the same bucket routing,
+    * then a positional `insertInto` (`overwrite` replaces under the
+    * session's partition-overwrite mode; otherwise the rows append). */
+  def insertBucketed(df: DataFrame, table: String, key: String, buckets: Int,
+                     overwrite: Boolean = false): Unit =
+    bucketRouted(df, key, buckets).write
+      .mode(if (overwrite) "overwrite" else "append").insertInto(table)
 
   /** Route rows onto whole buckets across `min(buckets, parallelism)`
     * write tasks: the routing key is the bucket id itself
@@ -72,8 +71,10 @@ object Sources {
     * task count stays at the core count instead of the bucket count
     * (r22: a full buckets-wide repartition put 64 near-empty write
     * tasks × parquet-writer setup on every tiny-corpus write — q148's
-    * four writes regressed 1.5→3.8 s until the cap). */
-  def bucketRouted(df: DataFrame, key: String, buckets: Int): DataFrame = {
+    * four writes regressed 1.5→3.8 s until the cap). The routing policy's
+    * one home: [[writeBucketed]] and [[insertBucketed]] are its only
+    * callers. */
+  private def bucketRouted(df: DataFrame, key: String, buckets: Int): DataFrame = {
     val n = math.max(1, math.min(buckets,
       df.sparkSession.sparkContext.defaultParallelism))
     df.repartition(n, pmod(hash(col(key)), lit(buckets)))
@@ -107,19 +108,6 @@ object Sources {
       .option("samplingRatio", sampleRatio)
       .json(jsonPath)
       .schema
-
-  /** Bucketed co-located tables (builder brief: bucketing for co-located
-    * joins). Writing both sides bucketed by the join key into the catalog
-    * lets every subsequent equi-join on that key skip its shuffle — the
-    * exchange disappears from the plan. At 100 TB this converts the
-    * fact-to-fact join (orders ⋈ lineitem) from the dominant shuffle into a
-    * local zip per bucket. */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    buckets: Int, sortCol: Option[String] = None): Unit = {
-    val w = df.write.mode("overwrite")
-      .bucketBy(buckets, bucketCol)
-    sortCol.fold(w)(c => w.sortBy(c)).saveAsTable(table)
-  }
 
   /** Small-file compaction — the maintenance pass every micro-batch landing
     * zone needs (a 30 s trigger writes ~2,880 files/day/partition-key; the
@@ -293,9 +281,7 @@ object Sources {
     // compact per partition — this flat rewrite would silently strip the
     // partition columns the replay contract depends on, and the swap's
     // row-count check cannot see that
-    require(spark.sessionState.catalog
-        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-        .partitionColumnNames.isEmpty,
+    require(graft.ops.Layouts.tableMeta(spark, table).partitionColumnNames.isEmpty,
       s"compactBucketed($table): table is partitioned; compact its " +
         "partitions individually — a flat rewrite would drop the layout")
     val before = countTableDataFiles(spark, table)
@@ -309,9 +295,13 @@ object Sources {
     val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     val autoWas = spark.conf.get(autoKey)
     spark.conf.set(autoKey, "false")
+    // UNROUTED (the r13 rule): the explicit repartition collapses against
+    // the bucket-aligned scan's own HashPartitioning
     try
-      writeBucketedPrePartitioned(src.repartition(buckets, col(key)),
-        staging, s"$tmp/data", key, buckets)
+      src.repartition(buckets, col(key)).write.mode("overwrite")
+        .option("path", s"$tmp/data")
+        .bucketBy(buckets, key).sortBy(key)
+        .format("parquet").saveAsTable(staging)
     finally spark.conf.set(autoKey, autoWas)
     val outCount = spark.table(staging).count()
     require(outCount == inCount,
@@ -324,28 +314,21 @@ object Sources {
 
   /** Total data bytes at a catalog table's location — the storage-cost
     * fact size-comparison specs pin (e.g. the SQ8 index vs its float
-    * twin). Same listing contract as [[countTableDataFiles]]. */
-  def tableDataBytes(spark: SparkSession, table: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val loc = new Path(spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .location)
-    val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(loc)
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      .map(_.getLen).sum
-  }
+    * twin). */
+  def tableDataBytes(spark: SparkSession, table: String): Long =
+    tableDataFiles(spark, table).map(_.getLen).sum
 
-  /** Data-file count at a catalog table's location (bucketed tables are
+  /** Data-file count at a catalog table's location. */
+  def countTableDataFiles(spark: SparkSession, table: String): Int =
+    tableDataFiles(spark, table).length
+
+  /** The data files at a catalog table's location (bucketed tables are
     * flat directories; `part-*` excludes markers like _SUCCESS). */
-  def countTableDataFiles(spark: SparkSession, table: String): Int = {
-    import org.apache.hadoop.fs.Path
-    val loc = new Path(spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .location)
-    val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(loc)
-      .count(s => s.isFile && s.getPath.getName.startsWith("part-"))
+  private def tableDataFiles(spark: SparkSession, table: String)
+      : Seq[org.apache.hadoop.fs.FileStatus] = {
+    val loc = graft.ops.Layouts.tableLocation(spark, table)
+    loc.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(loc)
+      .filter(s => s.isFile && s.getPath.getName.startsWith("part-")).toSeq
   }
 
   /** S7 + P3: register all test tables as temp views plus the reference's

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.sim.Similarity.TombstoneBatchId
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.CatalogTable
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -570,13 +569,22 @@ object Streaming {
                                           routed: Boolean = false): Unit = {
       if (staged.parts.nonEmpty) withDynamicOverwrite(spark) {
         val out = staged.rows.select(tableCols: _*)
-        (if (routed) graft.sources.Sources.bucketRouted(out, bucketCol,
-          numBuckets) else out).write.mode("overwrite").insertInto(table)
+        if (routed) graft.sources.Sources.insertBucketed(out, table,
+          bucketCol, numBuckets, overwrite = true)
+        else out.write.mode("overwrite").insertInto(table)
       }
-      owned.filterNot(staged.parts).foreach { id =>
+      val cleared = owned.filterNot(staged.parts)
+      cleared.foreach { id =>
         val dir = child(s"batch_id=$id")
         if (fs.exists(dir)) fs.delete(dir, true)
       }
+      // a cleared partition leaves the catalog too: the table tracks its
+      // partitions there (saveAsTable + partitionBy), and a listed
+      // partition whose dir is gone warns on every later scan. One
+      // catalog call for all of them; the refresh below re-reads it
+      spark.sessionState.catalog.dropPartitions(meta.identifier,
+        cleared.map(id => Map("batch_id" -> id.toString)),
+        ignoreIfNotExists = true, purge = false, retainData = true)
       spark.catalog.refreshTable(table)
     }
 
@@ -589,7 +597,7 @@ object Streaming {
   private[graft] object AppendableIndex {
     def apply(spark: SparkSession, table: String,
               site: String): AppendableIndex = {
-      val meta = catalogTable(spark, table)
+      val meta = graft.ops.Layouts.tableMeta(spark, table)
       require(meta.partitionColumnNames == Seq("batch_id") &&
           meta.bucketSpec.isDefined,
         s"$site: expected the appendable-index layout (batch_id " +
@@ -608,13 +616,6 @@ object Streaming {
   private def partitionIds(rows: DataFrame): Seq[Long] =
     rows.select(col("batch_id")).distinct().collect().map(_.getLong(0))
       .sorted.toSeq
-
-  /** The one catalog lookup behind every appendable-index op. */
-  private def catalogTable(spark: SparkSession, table: String): CatalogTable =
-    spark.sessionState.catalog.getTableMetadata(TableIdentifier(table))
-
-  private def locationOf(spark: SparkSession, table: String): Path =
-    new Path(catalogTable(spark, table).location)
 
   /** THE merge-on-read live view of an appendable index relation: the
     * tombstone partition's marks anti-join their rows out on `keys`
@@ -1006,7 +1007,7 @@ object Streaming {
     if (!spark.catalog.tableExists(table)) {
       require(spark.catalog.tableExists(staging),
         s"rebuildAppendableIndex: neither $table nor $staging exists")
-      val resumedLoc = locationOf(spark, staging)
+      val resumedLoc = graft.ops.Layouts.tableLocation(spark, staging)
       spark.sql(s"ALTER TABLE $staging RENAME TO $table")
       // the crashed attempt may have left its retiring-location marker
       // standing (crash between the swap and the retired-location rename)
@@ -1131,12 +1132,12 @@ object Streaming {
     // protecting both locations from enumeration
     val parent =
       if (spark.catalog.tableExists(table)) {
-        val l = locationOf(spark, table); keep += l.getName
+        val l = graft.ops.Layouts.tableLocation(spark, table); keep += l.getName
         if (spark.catalog.tableExists(stagingTbl))
-          keep += locationOf(spark, stagingTbl).getName
+          keep += graft.ops.Layouts.tableLocation(spark, stagingTbl).getName
         l.getParent
       } else if (spark.catalog.tableExists(stagingTbl)) {
-        val l = locationOf(spark, stagingTbl); keep += l.getName
+        val l = graft.ops.Layouts.tableLocation(spark, stagingTbl); keep += l.getName
         l.getParent
       } else sys.error(s"oldRebuildGenerations($table): neither the " +
         s"table nor its $stagingTbl staging exists — a mistyped/stale " +
@@ -1171,7 +1172,7 @@ object Streaming {
     // now, or renamed by a finished rebuild that crashed before the
     // marker delete) is spent — retire it so nothing stale accrues
     if (spark.catalog.tableExists(table)) {
-      val parent = locationOf(spark, table).getParent
+      val parent = graft.ops.Layouts.tableLocation(spark, table).getParent
       val fs = parent.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val base = rbBase(table)
       readRetiringMarker(spark, parent, base).foreach { n =>

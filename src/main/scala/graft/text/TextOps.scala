@@ -751,16 +751,13 @@ object TextOps {
     * rule). */
   def ensureBandIndex(spark: SparkSession, dir: String): String = {
     val d = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val idx = "g_band_index_" + graft.ops.Layouts.tag(
-      graft.ops.Layouts.fileFp(s"$dir/documents.parquet"), "mh16b4r4",
-      graft.ops.Layouts.Version)
-    if (!spark.catalog.tableExists(idx)) {
-      val tmp = graft.ops.Layouts.ownedTempDir(spark, "graft_band_idx")
-      graft.sources.Sources.writeBucketed(bandedSignatures(d), idx,
-        s"$tmp/index", "key",
+    graft.ops.Layouts.ensureTable(spark, "g_band_index_",
+        graft.ops.Layouts.fileFp(s"$dir/documents.parquet"), "mh16b4r4",
+        graft.ops.Layouts.Version) { (staging, owned) =>
+      graft.sources.Sources.writeBucketed(bandedSignatures(d), staging,
+        s"$owned/index", "key",
         graft.sim.IndexParams.indexBuckets(d.count(), 4))
     }
-    idx
   }
 
   /** Text-side exact-content admission gate against the persisted band
@@ -884,15 +881,13 @@ object TextOps {
   def q158TextDeleteGate(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val buckets = graft.sim.IndexParams.indexBuckets(d.count(), 4)
-    val idx = "g_band_del_idx_" + graft.ops.Layouts.tag(
-      graft.ops.Layouts.fileFp(s"$dir/documents.parquet"), s"del$buckets",
-      graft.ops.Layouts.Version)
-    // staging-NAME atomicity (the q145 rule): tableExists flips only
-    // after the tombstones landed — never serve a half-built deletion
-    graft.ops.Layouts.buildTableIfAbsent(spark, idx) { staging =>
-      val tmp = graft.ops.Layouts.ownedTempDir(spark, "graft_band_del")
+    // staged ensure (the q145 rule): the table publishes only after the
+    // tombstones landed — never serve a half-built deletion
+    val idx = graft.ops.Layouts.ensureTable(spark, "g_band_del_idx_",
+        graft.ops.Layouts.fileFp(s"$dir/documents.parquet"), s"del$buckets",
+        graft.ops.Layouts.Version) { (staging, owned) =>
       graft.streaming.Streaming.createAppendableBandIndex(spark, staging,
-        s"$tmp/index", buckets)
+        s"$owned/index", buckets)
       graft.streaming.Streaming.appendBandBatch(d, 0L, staging)
       graft.streaming.Streaming.tombstoneBandRows(spark, staging,
         d.filter(col("doc_id") % 13 === 0))

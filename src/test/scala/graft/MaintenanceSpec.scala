@@ -943,4 +943,65 @@ class MaintenanceSpec extends SparkSpecBase {
     assert(left.filter(col("batch_id") >= 0).count() === 2L * tables)
     assert(spark.read.parquet(s"$idxDir/assigned").count() === 35L)
   }
+
+  test("an appendable write that clears a partition drops it from the " +
+      "catalog too: scans after a fold and a purge log no `was not " +
+      "found` warning") {
+    import graft.streaming.Streaming
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    graft.sim.Similarity.ensureRegistered(spark)
+    val planes = 5; val tables = 2
+    val tbl = "g_cleared_parts_idx"
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    val tmp = java.nio.file.Files.createTempDirectory("g_cleared").toString
+    Streaming.createAppendableIndex(spark, tbl, s"$tmp/idx", buckets = 4)
+    val eSlim = Tables.embeddings(spark, Sf0001)
+      .select(col("vec_id"), col("embedding")).filter(col("vec_id") < 40)
+    (0 until 3).foreach { b =>
+      Streaming.appendIndexBatch(
+        eSlim.filter(col("vec_id") % 3 === b), b.toLong, tbl, planes, tables)
+    }
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("g_cleared_capture", null, null, true,
+        Array.empty) {
+      override def append(e: LogEvent): Unit =
+        warned.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, null, null)
+    ctx.updateLoggers()
+    try {
+      // the fold empties batch partitions 0 and 1; every victim then sits
+      // in the folded generation, so the purge retires every mark and
+      // empties the tombstone partition
+      Streaming.foldIndexLeveled(spark, tbl, uptoBatch = 1L)
+      Streaming.tombstoneIndexRows(spark, tbl,
+        eSlim.filter(col("vec_id") % 3 =!= 2 && col("vec_id") < 10),
+        planes, tables)
+      Streaming.purgeIndexTombstones(spark, tbl)
+      assert(spark.table(tbl).count() ===
+        (40L - eSlim.filter(col("vec_id") % 3 =!= 2 && col("vec_id") < 10)
+          .count()) * tables)
+    } finally {
+      root.removeAppender("g_cleared_capture")
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    val msgs = warned.toArray.map(_.toString).toSeq
+    assert(!msgs.exists(_.contains("was not found")),
+      msgs.filter(_.contains("was not found")).mkString("\n"))
+    // the catalog lists exactly the partitions that still have a dir
+    val listed = spark.sql(s"SHOW PARTITIONS $tbl").collect()
+      .map(_.getString(0)).toSet
+    val onDisk = new java.io.File(s"$tmp/idx").list()
+      .filter(_.startsWith("batch_id=")).toSet
+    assert(listed === onDisk)
+    assert(!listed.contains("batch_id=0") && !listed.contains("batch_id=1") &&
+      !listed.contains(s"batch_id=${graft.sim.Similarity.TombstoneBatchId}"),
+      listed.mkString(", "))
+  }
 }

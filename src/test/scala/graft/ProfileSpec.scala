@@ -51,4 +51,27 @@ class ProfileSpec extends SparkSpecBase {
       .map(_.getFileName.toString.stripSuffix(".scala")).toSet
     assert(sites === Set("Layouts", "EtlBench"))
   }
+
+  test("the flat-table layout has one home per step: bucket routing in " +
+      "Sources, owned table dirs from ensureTable and compactBucketed, " +
+      "no buildTableIfAbsent") {
+    val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(f => Paths.get("src/main/scala").relativize(f).toString ->
+        Files.readString(f)).toMap
+    val code = files.map { case (f, text) => f -> text.linesIterator
+      .filterNot(_.trim.matches("(\\*|/\\*|//).*")).mkString("\n") }
+    assert(code.filter(_._2.contains("bucketRouted")).keySet ===
+      Set("graft/sources/Sources.scala"))
+    assert(!files.values.exists(_.contains("buildTableIfAbsent")))
+    // every ownedTempDir call, by the def whose body holds it
+    val callers = code.toSeq.flatMap { case (f, text) =>
+      "ownedTempDir\\(".r.findAllMatchIn(text).map(_.start)
+        .filterNot(i => text.lastIndexOf("def ownedTempDir", i) == i - 4)
+        .map(i => f -> "def (\\w+)".r.findAllMatchIn(text.take(i)).toSeq.last.group(1))
+    }
+    assert(callers.sorted === Seq(
+      "graft/ops/Layouts.scala" -> "ensureTable",
+      "graft/sources/Sources.scala" -> "compactBucketed"))
+  }
 }

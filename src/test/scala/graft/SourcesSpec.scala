@@ -72,13 +72,15 @@ class SourcesSpec extends SparkSpecBase {
   }
 
   test("bucketed tables join without a shuffle on the bucketed key") {
-    Sources.writeBucketed(Tables.orders(spark, Sf0001), "orders_b", "o_orderkey", 8)
+    val tmp = Files.createTempDirectory("bjoin").toString
+    Sources.writeBucketed(Tables.orders(spark, Sf0001), "orders_b",
+      s"$tmp/orders_b", "o_orderkey", 8)
     Sources.writeBucketed(
       Tables.lineitem(spark, Sf0001).withColumnRenamed("l_orderkey", "o_orderkey"),
-      "lineitem_b", "o_orderkey", 8)
+      "lineitem_b", s"$tmp/lineitem_b", "o_orderkey", 8)
     // sorted variant: bucket files pre-sorted by the join key
-    Sources.writeBucketed(Tables.orders(spark, Sf0001), "orders_bs", "o_orderkey", 8,
-      sortCol = Some("o_orderkey"))
+    Sources.writeBucketed(Tables.orders(spark, Sf0001), "orders_bs",
+      s"$tmp/orders_bs", "o_orderkey", 8)
     assert(spark.table("orders_bs").count() === Tables.orders(spark, Sf0001).count())
     val joined = spark.table("orders_b").join(spark.table("lineitem_b"), "o_orderkey")
     joined.collect()
@@ -192,6 +194,38 @@ class SourcesSpec extends SparkSpecBase {
     assert(!spark.catalog.tableExists("bcomp_r_compacting"))
     assert(stats.rows === n)
     assert(spark.table("bcomp_r").count() === n)
+  }
+
+  test("Layouts.ensureTable: a crash inside the staged build publishes " +
+      "nothing, and the retry publishes the complete table") {
+    val e = Tables.events(spark, Sf0001).select(col("event_id").as("k"), col("value"))
+    val n = e.count()
+    val delta = e.select((col("k") + 1000000L).as("k"), col("value"))
+    val parts = Seq("ensure_crash", graft.ops.Layouts.Version)
+    val name = "g_crash_" + graft.ops.Layouts.tag(parts: _*)
+    // the q145 shape: the base lands, then the append
+    def build(crash: Boolean)(staging: String, owned: String): Unit = {
+      Sources.writeBucketed(e, staging, s"$owned/index", "k", 8)
+      if (crash) throw new IllegalStateException("crash after the base write")
+      Sources.insertBucketed(delta, staging, "k", 8)
+    }
+    val ex = intercept[IllegalStateException] {
+      graft.ops.Layouts.ensureTable(spark, "g_crash_", parts: _*)(build(crash = true))
+    }
+    assert(ex.getMessage === "crash after the base write")
+    // the base-only attempt sits under the staging name, never the live one
+    assert(!spark.catalog.tableExists(name))
+    assert(spark.catalog.tableExists(s"${name}_build"))
+    assert(graft.ops.Layouts.ensureTable(spark, "g_crash_", parts: _*)(
+      build(crash = false)) === name)
+    assert(!spark.catalog.tableExists(s"${name}_build"))
+    assert(spark.table(name).count() === 2 * n)
+    val spec = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(name)).bucketSpec
+    assert(spec.map(b => (b.numBuckets, b.bucketColumnNames)) === Some((8, Seq("k"))))
+    // a published table is reused: the build never runs again
+    assert(graft.ops.Layouts.ensureTable(spark, "g_crash_", parts: _*)(
+      (_, _) => fail("ensureTable rebuilt a published table")) === name)
   }
 
   test("registerViews exposes tables and pruned views; pruned view reads narrow schema") {
