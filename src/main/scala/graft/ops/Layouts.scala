@@ -132,6 +132,67 @@ object Layouts {
     }
   }
 
+  /** Write `rows` partitioned by `partCols` to `dir`, replacing whatever a
+    * crashed attempt left there, and return the leaf partitions it holds as
+    * relative paths (`a=1/b=2`) — a directory listing, not a job. */
+  def stagePartitions(rows: DataFrame, dir: String,
+                      partCols: Seq[String]): Seq[String] = {
+    rows.write.mode("overwrite").partitionBy(partCols: _*).parquet(dir)
+    partCols.foldLeft(Seq("")) { (prefixes, _) =>
+      prefixes.flatMap(p => listChildren(rows.sparkSession, s"$dir/$p")
+        .filter(n => !hidden(n) && n.contains("=")).map(n => s"$p$n/"))
+    }.map(_.stripSuffix("/"))
+  }
+
+  /** The staging dir of [[replacePartitions]] under its root: `_`-prefixed
+    * and free of `=`, so partition discovery skips it. */
+  val ReplaceStaging = "_replace_staging"
+
+  /** THE partition-replace step of every directory writer (the ingest
+    * good, quarantine and `_metrics` sinks, the gate decisions sink, the
+    * IVF purge) and its one crash contract:
+    *  (1) STAGE `rows` by `partCols` to [[ReplaceStaging]] under `root`
+    *      ([[stagePartitions]]): readers skip it, and a crashed attempt's
+    *      leftover is overwritten;
+    *  (2) PUBLISH each staged leaf by rename over its target (parent dirs
+    *      created, the old leaf deleted first) — the commit Spark's
+    *      dynamic partition overwrite performs internally, without its
+    *      session-global conf;
+    *  (3) CLEAR every partition matched by the `owned` globs (relative to
+    *      `root`) that the staged set does not contain — an empty frame
+    *      publishes nothing (the r8 empty-frame rule), so a replay that
+    *      now yields fewer partitions must delete the ones it no longer
+    *      writes, or a crashed attempt's rows keep serving;
+    *  (4) SEED: with nothing staged and the `seed` partition absent, write
+    *      one typed zero-row file there (no partition columns) so the
+    *      sink reads with its schema before its first row lands.
+    * The staging is deleted in `finally`. A crash before (2) leaves the
+    * published partitions as they were; a crash inside (2)–(4) leaves a
+    * mix of old and new leaves that the replay of the same write
+    * converges. Single writer per `root`. */
+  def replacePartitions(rows: DataFrame, root: String, partCols: Seq[String],
+                        owned: Seq[String], seed: Option[String] = None): Unit = {
+    val rootP = new Path(root)
+    val fs = fsOf(rows.sparkSession, rootP)
+    val staging = new Path(rootP, ReplaceStaging)
+    try {
+      val staged = stagePartitions(rows, staging.toString, partCols)
+      staged.foreach { leaf =>
+        val target = new Path(rootP, leaf)
+        fs.mkdirs(target.getParent)
+        fs.delete(target, true)
+        renameOrFail(rows.sparkSession, new Path(staging, leaf).toString,
+          target.toString, s"could not publish $leaf under $root")
+      }
+      val keep = staged.map(l => fs.makeQualified(new Path(rootP, l))).toSet
+      owned.flatMap(g => Option(fs.globStatus(new Path(rootP, g))).toSeq.flatten)
+        .map(_.getPath).filterNot(keep).foreach(fs.delete(_, true))
+      seed.map(new Path(rootP, _)).filter(p => staged.isEmpty && !fs.exists(p))
+        .foreach(p => rows.drop(partCols: _*).limit(0).coalesce(1)
+          .write.mode("overwrite").parquet(p.toString))
+    } finally fs.delete(staging, true)
+  }
+
   /** The ONE JVM-owned root for catalog-table data dirs (index tables,
     * bucketed copies, compaction outputs): created on first use, deleted
     * when the JVM exits. The in-memory catalog that names those tables dies

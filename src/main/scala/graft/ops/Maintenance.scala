@@ -419,9 +419,10 @@ object Maintenance {
       .select(col("vec_id"), col("embedding"))
 
     // r21 structure: every layout is ENSURED/BUILT sequentially first —
-    // builds flip session confs through the save/set/restore helpers
-    // (withDynamicOverwrite), which are session-global and must never
-    // overlap across threads — and only then do the per-layout FACT
+    // the catalog-table builds flip the session-global dynamic-overwrite
+    // conf (withDynamicOverwrite, behind the appendable index's catalog
+    // publish), and two overlapping flips clobber each other's restore
+    // into a full-table overwrite — and only then do the per-layout FACT
     // gathers (read-only: counts, occupancy aggregations, sidecar reads,
     // file listings) run concurrently from a small pool. Measured: the
     // warm path was 50 sequential jobs of 10-140 ms wall each — pure

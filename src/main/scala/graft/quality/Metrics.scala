@@ -1,6 +1,7 @@
 package graft.quality
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 import graft.ops.Exprs
@@ -82,26 +83,20 @@ object Metrics {
       checkResults.as("check_results"))
   }
 
-  /** Append one run's metrics row to the `_metrics` ledger.
-    *
-    * Replay-idempotent the same way `Streaming.writeBatch` is: the row lands
-    * under its own `run_id=` partition with dynamic partition overwrite, so
-    * a re-run (streaming batch replayed after a crash between sink commit
-    * and checkpoint commit, or a batch job retried) replaces its own row
-    * instead of double-appending it. */
+  /** Append one run's metrics row to the `_metrics` ledger under its own
+    * `run_id=` partition through [[graft.ops.Layouts.replacePartitions]]
+    * (owned: that partition; no seed), so a re-run (a streaming batch
+    * replayed after a crash between sink commit and checkpoint commit, or
+    * a batch job retried) replaces its own row instead of double-appending
+    * it. */
   def writeMetrics(check: DataFrame, metricsDir: String, runId: String,
                    validationTimeS: Double,
                    threshold: Double = DefaultQualityThreshold,
-                   checks: Seq[(String, Double)] = Nil): Unit = {
-    // set/restore, never a bare set (the r13 leak rule): this runs on
-    // batch callers' own sessions, where a leaked dynamic mode turns
-    // every later full-overwrite partitioned write partial and strips
-    // root _SUCCESS markers (breaking Layouts.committed downstream)
-    graft.streaming.Streaming.withDynamicOverwrite(check.sparkSession) {
-      metricsRow(check, runId, validationTimeS, threshold, checks)
-        .write.mode("overwrite").partitionBy("run_id").parquet(metricsDir)
-    }
-  }
+                   checks: Seq[(String, Double)] = Nil): Unit =
+    graft.ops.Layouts.replacePartitions(
+      metricsRow(check, runId, validationTimeS, threshold, checks),
+      metricsDir, Seq("run_id"),
+      owned = Seq(ExternalCatalogUtils.getPartitionPathString("run_id", runId)))
 
   def readMetrics(spark: SparkSession, metricsDir: String): DataFrame =
     spark.read.parquet(metricsDir)

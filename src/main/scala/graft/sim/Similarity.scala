@@ -1997,63 +1997,36 @@ object Similarity {
         .select(col("cid"), col("vec_id")))
     else None
 
-  private val CidDir = """cid=(-?\d+)""".r
-
   /** Physically purge an IVF layout's tombstoned rows — PARTITION-SCOPED:
-    * only the cids carrying marks are read and rewritten (dynamic
-    * overwrite touches just those partition dirs), partitions left EMPTY
-    * are deleted explicitly (a dynamic overwrite of zero rows is a no-op
-    * — the r8 stale-partition rule, directory flavor), and the marks
-    * retire LAST so a crash anywhere in the window leaves
-    * [[probeIvf]]'s live view correct and a re-purge idempotent.
-    * Survivors stage through a `_`-prefixed dir (never
-    * read-your-own-partition inside an overwrite). Returns (partitions
-    * touched, rows purged). */
+    * only the cids carrying marks are read, and their survivors replace
+    * them through [[graft.ops.Layouts.replacePartitions]] (owned: the
+    * affected cids, so a cid left EMPTY is cleared rather than kept — the
+    * r8 stale-partition rule, directory flavor); the marks retire LAST, so
+    * a crash anywhere in the window leaves [[probeIvf]]'s live view
+    * correct and a re-purge idempotent. Returns (partitions touched, rows
+    * purged). */
   def purgeIvfTombstones(spark: SparkSession, idxDir: String): (Long, Long) = {
-    val hc = spark.sparkContext.hadoopConfiguration
-    val tombPath = new org.apache.hadoop.fs.Path(s"$idxDir/tombstones")
-    val fs = tombPath.getFileSystem(hc)
-    // a schema-less (_SUCCESS-only) legacy sidecar carries zero debt:
-    // retire it instead of wedging on the read (the r17 reader guard)
-    if (!graft.ops.Layouts.hasParquetData(spark, tombPath.toString)) {
-      if (fs.exists(tombPath)) fs.delete(tombPath, true)
-      return (0L, 0L)
-    }
-    val marks = spark.read.parquet(s"$idxDir/tombstones")
-      .select(col("cid"), col("vec_id")).distinct()
-    val affected = marks.select(col("cid")).distinct()
-      .collect().map(_.getAs[Number](0).intValue).sorted
-    if (affected.isEmpty) { fs.delete(tombPath, true); return (0L, 0L) }
+    val tombDir = s"$idxDir/tombstones"
+    val marks = ivfTombstones(spark, idxDir).map(_.distinct())
+    val affected = marks.toSeq.flatMap(_.select(col("cid")).distinct()
+      .collect().map(_.getAs[Number](0).intValue)).sorted
+    // no marks, or a schema-less (_SUCCESS-only) legacy sidecar: zero debt,
+    // so retire it instead of wedging on the read (the r17 reader guard)
+    if (affected.isEmpty) { graft.ops.Layouts.delete(spark, tombDir); return (0L, 0L) }
     val scoped = spark.read.parquet(s"$idxDir/assigned")
       .filter(col("cid").isin(affected.map(Int.box): _*))
     // payload-agnostic (the foldIndexBase metadata rule): column order
     // comes from the layout's own schema, so one purge serves the float
     // (embedding) AND quantized (qcode) directory flavors alike
-    val orderCols = scoped.schema.fieldNames.toSeq
-    val survivors = scoped.join(marks, Seq("cid", "vec_id"), "left_anti")
+    val survivors = scoped.join(marks.get, Seq("cid", "vec_id"), "left_anti")
       // using-columns joins hoist keys to the front (the r15 rule) —
       // restore the layout's column order before the partitioned write
-      .select(orderCols.map(col): _*)
-    val staging = s"$idxDir/_purge_staging"
-    try {
-      // staged partitioned by cid (the AppendableIndex.stage rule): the
-      // cids that kept rows are a directory listing, not a job
-      survivors.write.mode("overwrite").partitionBy("cid").parquet(staging)
-      val staged = graft.ops.Layouts.readHidden(spark, staging, Some(scoped.schema))
-      val survivedCids = graft.ops.Layouts.listChildren(spark, staging)
-        .collect { case CidDir(cid) => cid.toInt }.toSet
-      val purged = scoped.count() - staged.count() // both read pre-rewrite files
-      if (survivedCids.nonEmpty)
-        graft.streaming.Streaming.withDynamicOverwrite(spark) {
-          staged.write.mode("overwrite").partitionBy("cid")
-            .parquet(s"$idxDir/assigned")
-        }
-      affected.filterNot(survivedCids).foreach { cid =>
-        graft.ops.Layouts.delete(spark, s"$idxDir/assigned/cid=$cid")
-      }
-      fs.delete(tombPath, true) // marks retire LAST
-      (affected.length.toLong, purged)
-    } finally graft.ops.Layouts.delete(spark, staging)
+      .select(scoped.schema.fieldNames.map(col): _*)
+    val purged = scoped.count() - survivors.count() // both pre-rewrite
+    graft.ops.Layouts.replacePartitions(survivors, s"$idxDir/assigned",
+      Seq("cid"), owned = affected.map(cid => s"cid=$cid"))
+    graft.ops.Layouts.delete(spark, tombDir) // marks retire LAST
+    (affected.length.toLong, purged)
   }
 
   /** Outstanding `_orphaned_tombstones` slots beside a directory layout —

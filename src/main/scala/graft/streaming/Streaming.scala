@@ -521,7 +521,8 @@ object Streaming {
       *      a driver-local temp dir would not exist for a cluster's
       *      executors) and read back from there — never read-your-own-
       *      partition inside an overwrite.
-      *  (2) REPLACE-OR-CLEAR ([[replaceOrClear]]): dynamic-overwrite the
+      *  (2) REPLACE-OR-CLEAR ([[replaceOrClear]], the catalog flavor of
+      *      [[graft.ops.Layouts.replacePartitions]]): dynamic-overwrite the
       *      staged partitions, then delete every partition the write owns
       *      that the staged set leaves EMPTY — an empty frame under dynamic
       *      overwrite is a no-op (the r8 empty-frame rule), so its old rows
@@ -536,15 +537,14 @@ object Streaming {
       * Scratch stagings are deleted in `finally` ([[scratch]]); the leveled
       * fold's `_leveled_staging_t<level>_u<upto>` is its crash-resume PLAN
       * and survives a failure. Single-writer: one fold, purge or landing
-      * per table at a time. The staging is partitioned by batch_id, so the
-      * partitions it carries are a directory listing, not a job. */
+      * per table at a time. The staging is partitioned by batch_id
+      * ([[graft.ops.Layouts.stagePartitions]]), so the partitions it
+      * carries are a directory listing, not a job. */
     private[streaming] def stage(name: String, rows: DataFrame): Staged = {
       val dir = child(name)
-      rows.select(tableCols: _*).write.mode("overwrite")
-        .partitionBy("batch_id").parquet(dir.toString)
-      Staged(readStaged(dir),
-        graft.ops.Layouts.listChildren(spark, dir.toString)
-          .collect { case PartitionDir(id) => id.toLong }.toSet)
+      val parts = graft.ops.Layouts.stagePartitions(rows.select(tableCols: _*),
+        dir.toString, Seq("batch_id"))
+      Staged(readStaged(dir), parts.map(_.stripPrefix("batch_id=").toLong).toSet)
     }
 
     /** Staged rows under the table's own schema (no inference job),
@@ -559,8 +559,8 @@ object Streaming {
       * input split and the write would run serial; routing by the bucket
       * placement hash keeps one file per (partition, bucket)).
       *
-      * r22 REJECTED WITH NUMBERS (don't retry): the per-write
-      * `option("partitionOverwriteMode", "dynamic")` is not honored by
+      * r22 REJECTED WITH NUMBERS (don't retry): the per-write dynamic
+      * partition-overwrite writer option is not honored by
       * catalog insertInto on this engine — replayed batches DUPLICATED
       * their rows (19 StreamingSpec/soak failures). The session-scoped
       * [[withDynamicOverwrite]] stays, and so does the rule that builds
@@ -574,10 +574,7 @@ object Streaming {
         else out.write.mode("overwrite").insertInto(table)
       }
       val cleared = owned.filterNot(staged.parts)
-      cleared.foreach { id =>
-        val dir = child(s"batch_id=$id")
-        if (fs.exists(dir)) fs.delete(dir, true)
-      }
+      cleared.foreach(id => fs.delete(child(s"batch_id=$id"), true))
       // a cleared partition leaves the catalog too: the table tracks its
       // partitions there (saveAsTable + partitionBy), and a listed
       // partition whose dir is gone warns on every later scan. One
@@ -609,8 +606,6 @@ object Streaming {
 
   /** Staged rows and the partitions they carry. */
   private[streaming] final case class Staged(rows: DataFrame, parts: Set[Long])
-
-  private val PartitionDir = """batch_id=(-?\d+)""".r
 
   /** The distinct batch_ids of `rows`, ascending. */
   private def partitionIds(rows: DataFrame): Seq[Long] =
@@ -1183,6 +1178,14 @@ object Streaming {
     old.length.toLong
   }
 
+  /** Run `body` with dynamic partition overwrite on, restoring the
+    * session's mode afterwards — never a bare set (the r13 leak rule). The
+    * catalog publish of [[AppendableIndex.replaceOrClear]] is its one
+    * caller: `insertInto` must keep the bucket-numbered file names and the
+    * catalog's partition entries, which a rename publish would not.
+    * Directory writers use [[graft.ops.Layouts.replacePartitions]]. The
+    * conf is session-global, so two overlapping calls on one session
+    * clobber each other's restore. */
   private[graft] def withDynamicOverwrite[A](spark: SparkSession)(body: => A): A = {
     val key = "spark.sql.sources.partitionOverwriteMode"
     val was = spark.conf.get(key)
@@ -1647,27 +1650,24 @@ object Streaming {
         appendIndexBatch(df, bid, indexTable, planes, tables))
 
   /** ONE gate-body contract for both modalities (a replay-semantics fix
-    * must not have to land in two places): empty batches clear-and-seed
-    * the decisions sink and clear the index partition; non-empty batches
-    * gate against the index AS OF the previous batch (own partition
-    * excluded → post-append replays recompute identical decisions), land
-    * decisions under their batch_id partition, and append only the
-    * `acceptStatus` rows. */
+    * must not have to land in two places): a batch gates against the
+    * index AS OF the previous batch (own partition excluded → post-append
+    * replays recompute identical decisions), lands its decisions under its
+    * batch_id partition through [[graft.ops.Layouts.replacePartitions]]
+    * (which clears that partition and seeds `batch_id=-1` when an empty
+    * batch yields none), and appends only the `acceptStatus` rows; an
+    * empty batch appends nothing, which clears its index partition. */
   private def gateBody(batch: DataFrame, batchId: Long, indexTable: String,
                        decisionsDir: String, keyCol: String,
                        acceptStatus: String,
                        gate: (SparkSession, DataFrame, DataFrame) => DataFrame,
                        append: (DataFrame, Long) => Unit): Unit = {
     val spark = batch.sparkSession
-    val root = new Path(decisionsDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def land(decisions: DataFrame): Unit = graft.ops.Layouts.replacePartitions(
+      decisions.withColumn("batch_id", lit(batchId)), decisionsDir,
+      Seq("batch_id"), owned = Seq(s"batch_id=$batchId"), seed = Some("batch_id=-1"))
     if (batch.isEmpty) {
-      val stale = new Path(root, s"batch_id=$batchId")
-      if (fs.exists(stale)) fs.delete(stale, true)
-      val seed = new Path(root, "batch_id=-1")
-      if (!fs.exists(seed))
-        gate(spark, spark.table(indexTable), batch.limit(0))
-          .limit(0).coalesce(1).write.mode("overwrite").parquet(seed.toString)
+      land(gate(spark, spark.table(indexTable).limit(0), batch.limit(0)))
       append(batch, batchId)
       return
     }
@@ -1676,11 +1676,7 @@ object Streaming {
       val index = spark.table(indexTable)
         .filter(col("batch_id") =!= lit(batchId))
       val decisions = gate(spark, index, b).persist()
-      withDynamicOverwrite(spark) {
-        decisions.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").partitionBy("batch_id")
-          .parquet(decisionsDir)
-      }
+      land(decisions)
       val accepted = b.join(
         decisions.filter(col("status") === acceptStatus).select(keyCol),
         Seq(keyCol))
@@ -1743,11 +1739,9 @@ object Streaming {
       append = (df, bid) => appendBandBatch(df, bid, indexTable))
 
   /** Hour-partitioned parquet sink via foreachBatch (the reference's S5 key
-    * template year=/month=/day=/hour=). Replay-idempotent: each micro-batch
-    * writes under its own `batch_id=` partition with dynamic partition
-    * overwrite, so a batch re-run after a failure between sink commit and
-    * checkpoint commit replaces its own output instead of appending
-    * duplicates. Readers prune `batch_id` away like any partition column. */
+    * template year=/month=/day=/hour=). Replay-idempotent through
+    * [[writeBatch]]. Readers prune `batch_id` away like any partition
+    * column. */
   def writePartitioned(events: DataFrame, outDir: String,
                        checkpointDir: String): StreamingQuery =
     events.writeStream
@@ -1757,50 +1751,23 @@ object Streaming {
       }
       .start()
 
-  /** The foreachBatch body, exposed for direct testing: exactly-once under
-    * replay because `batch_id` is part of the partitioning and dynamic
-    * partition overwrite replaces exactly the partitions the batch touches
-    * — re-running a batch after a crash-before-checkpoint rewrites its own
-    * output instead of appending duplicates. */
-  def writeBatch(batch: DataFrame, batchId: Long, outDir: String): Unit = {
-    if (batch.isEmpty) {
-      // symmetric to the quarantine sink's clear-and-seed: an empty frame
-      // under dynamic overwrite is a no-op, so a replay that now yields
-      // ZERO rows (e.g. everything newly quarantined) would leave a
-      // crashed attempt's stale batch partitions serving ghost rows
-      // downstream, and an initially-empty stream would leave the sink
-      // unreadable (no footer). batch_id is the innermost partition level
-      // here, so stale dirs are globbed under every hour.
-      val hconf = batch.sparkSession.sparkContext.hadoopConfiguration
-      val root = new Path(outDir)
-      val fs = root.getFileSystem(hconf)
-      val stale = fs.globStatus(new Path(root,
-        s"year=*/month=*/day=*/hour=*/batch_id=$batchId"))
-      if (stale != null) stale.foreach(s => fs.delete(s.getPath, true))
-      val seed = new Path(root,
-        "year=0/month=0/day=0/hour=0/batch_id=-1")
-      if (!fs.exists(seed))
-        batch.limit(0).coalesce(1).write.mode("overwrite")
-          .parquet(seed.toString)
-      return
-    }
-    // set/restore, never a bare set (the r13 leak rule, applied to this
-    // legacy site in r18): these bodies also run DIRECTLY on a caller's
-    // session (batch jobs, specs), where a leaked dynamic mode turns
-    // every later full-overwrite partitioned write into a partial one
-    // AND strips root _SUCCESS markers (breaking Layouts.committed)
-    withDynamicOverwrite(batch.sparkSession) {
-      batch
-        .withColumn("year", year(col("ts")))
-        .withColumn("month", month(col("ts")))
-        .withColumn("day", dayofmonth(col("ts")))
-        .withColumn("hour", hour(col("ts")))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .partitionBy("year", "month", "day", "hour", "batch_id")
-        .parquet(outDir)
-    }
-  }
+  /** The foreachBatch body, exposed for direct testing: the batch's rows
+    * land under `year=/month=/day=/hour=/batch_id=<batchId>` through
+    * [[graft.ops.Layouts.replacePartitions]], which owns every
+    * `batch_id=<batchId>` leaf under any hour — a replay replaces its own
+    * output, and deletes the hours it no longer writes (all of them when
+    * it yields zero rows), instead of appending duplicates or leaving
+    * ghost rows. The `year=0/…/batch_id=-1` seed keeps an initially-empty
+    * sink readable. Scale shape: the owned glob runs on every trigger and
+    * costs one stat per hour dir. */
+  def writeBatch(batch: DataFrame, batchId: Long, outDir: String): Unit =
+    graft.ops.Layouts.replacePartitions(
+      batch.withColumn("year", year(col("ts"))).withColumn("month", month(col("ts")))
+        .withColumn("day", dayofmonth(col("ts"))).withColumn("hour", hour(col("ts")))
+        .withColumn("batch_id", lit(batchId)),
+      outDir, Seq("year", "month", "day", "hour", "batch_id"),
+      owned = Seq(s"year=*/month=*/day=*/hour=*/batch_id=$batchId"),
+      seed = Some("year=0/month=0/day=0/hour=0/batch_id=-1"))
 
   /** [[writePartitioned]] + the metrics side-sink: each micro-batch lands
     * its data AND appends its own quality-metrics row (the reference
@@ -1821,14 +1788,21 @@ object Streaming {
       .start()
 
   /** The foreachBatch body of [[writePartitionedWithMetrics]], exposed for
-    * direct testing. The batch is cached across the two sinks so the data
-    * write and the metrics aggregation share one source read. */
+    * direct testing. */
   def writeBatchWithMetrics(batch: DataFrame, batchId: Long, outDir: String,
-                            metricsDir: String): Unit = {
+                            metricsDir: String): Unit =
+    withBatchMetrics(batch, batchId, metricsDir)(writeBatch(batch, batchId, outDir))
+
+  /** Run a micro-batch's data `sinks`, then append its `_metrics` row
+    * (run id `batch_<batchId>`, timed over the sinks), with the batch
+    * cached so the data writes and the metrics aggregation share one
+    * source read. */
+  private def withBatchMetrics(batch: DataFrame, batchId: Long,
+                               metricsDir: String)(sinks: => Unit): Unit = {
     batch.persist()
     try {
       val t0 = System.nanoTime()
-      writeBatch(batch, batchId, outDir)
+      sinks
       graft.quality.Metrics.writeMetrics(
         graft.quality.Metrics.batchQualityCheck(batch), metricsDir,
         runId = s"batch_$batchId",
@@ -1855,50 +1829,25 @@ object Streaming {
     * ([[writeBatch]]); quarantined rows land under the quarantine dir with
     * their reason and a `quarantined` status (ledger-compatible, so the
     * batch-side [[graft.quality.Quarantine]] lifecycle picks them up);
-    * the batch's metrics row is appended either way. All three writes are
-    * replay-idempotent under their own batch/run id. One cache, one source
-    * read, three sinks. */
+    * the batch's metrics row is appended either way. All three sinks go
+    * through [[graft.ops.Layouts.replacePartitions]] under their own
+    * batch/run id, so each is replay-idempotent; the quarantine sink owns
+    * `batch_id=<batchId>` and seeds `batch_id=-1`, so an all-clean stream
+    * still reads with its schema. One cache, one source read, three
+    * sinks. */
   def writeValidatedBatch(batch: DataFrame, batchId: Long, outDir: String,
-                          quarantineDir: String, metricsDir: String): Unit = {
-    batch.persist()
-    try {
-      val t0 = System.nanoTime()
+                          quarantineDir: String, metricsDir: String): Unit =
+    withBatchMetrics(batch, batchId, metricsDir) {
       val bad = quarantinePredicate
       writeBatch(batch.filter(!bad), batchId, outDir)
-      val badRows = batch.filter(bad)
-        .withColumn("reason", lit("critical_issue"))
-        .withColumn("status", lit("quarantined"))
-      if (badRows.isEmpty) {
-        // an empty frame under DYNAMIC partition overwrite is a no-op: no
-        // footer lands (readers of an all-clean stream then fail schema
-        // inference) and a stale batch_id partition left by a crashed
-        // prior attempt is never cleared (dynamic mode only touches
-        // partitions present in the data). Clear-and-seed explicitly:
-        val hconf = batch.sparkSession.sparkContext.hadoopConfiguration
-        val qPath = new Path(quarantineDir)
-        val fs = qPath.getFileSystem(hconf)
-        val stale = new Path(qPath, s"batch_id=$batchId")
-        if (fs.exists(stale)) fs.delete(stale, true)
-        // one typed zero-row file inside a synthetic partition (-1 never
-        // collides with a real batch id) establishes the sink's schema;
-        // a non-partitioned empty write DOES emit a footer
-        val seed = new Path(qPath, "batch_id=-1")
-        if (!fs.exists(seed))
-          badRows.limit(0).coalesce(1).write.mode("overwrite")
-            .parquet(seed.toString)
-      } else withDynamicOverwrite(batch.sparkSession) {
-        badRows
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").partitionBy("batch_id")
-          .parquet(quarantineDir)
-      }
-      graft.quality.Metrics.writeMetrics(
-        graft.quality.Metrics.batchQualityCheck(batch), metricsDir,
-        runId = s"batch_$batchId",
-        validationTimeS = (System.nanoTime() - t0) / 1e9,
-        checks = graft.quality.Metrics.StreamingChecks)
-    } finally batch.unpersist()
-  }
+      graft.ops.Layouts.replacePartitions(
+        batch.filter(bad)
+          .withColumn("reason", lit("critical_issue"))
+          .withColumn("status", lit("quarantined"))
+          .withColumn("batch_id", lit(batchId)),
+        quarantineDir, Seq("batch_id"), owned = Seq(s"batch_id=$batchId"),
+        seed = Some("batch_id=-1"))
+    }
 
   /** [[writeValidatedBatch]] as a streaming sink. */
   def writeValidatedPartitioned(events: DataFrame, outDir: String,

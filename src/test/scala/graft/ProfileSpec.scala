@@ -74,4 +74,34 @@ class ProfileSpec extends SparkSpecBase {
       "graft/ops/Layouts.scala" -> "ensureTable",
       "graft/sources/Sources.scala" -> "compactBucketed"))
   }
+
+  test("directory writers replace partitions only through " +
+      "Layouts.replacePartitions; dynamic overwrite is the catalog " +
+      "publish's alone") {
+    val code = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(f => Paths.get("src/main/scala").relativize(f).toString ->
+        Files.readString(f).linesIterator
+          .filterNot(_.trim.matches("(\\*|/\\*|//).*")).mkString("\n"))
+      .toMap
+    def sites(token: String) = code.toSeq.flatMap { case (f, text) =>
+      token.r.findAllMatchIn(text).map(m => f -> m.start) }
+    // the def whose body holds offset `i` of `text`
+    def enclosingDef(text: String, i: Int) =
+      "def (\\w+)".r.findAllMatchIn(text.take(i)).toSeq.last.group(1)
+    // inside the argument list of a replacePartitions call
+    def inCallArgs(text: String, i: Int) = {
+      val open = text.lastIndexOf("replacePartitions(", i)
+      open >= 0 && { val s = text.substring(open, i); s.count(_ == '(') > s.count(_ == ')') }
+    }
+    val dyn = sites("withDynamicOverwrite\\(")
+      .filterNot { case (f, i) => code(f).lastIndexOf("def withDynamicOverwrite", i) == i - 4 }
+    assert(dyn.map(_._1) === Seq("graft/streaming/Streaming.scala"), dyn)
+    assert(sites("globStatus").map { case (f, i) => f -> enclosingDef(code(f), i) } ===
+      Seq("graft/ops/Layouts.scala" -> "replacePartitions"))
+    val seeds = sites("batch_id=-1")
+    assert(seeds.nonEmpty)
+    seeds.foreach { case (f, i) => assert(inCallArgs(code(f), i), s"$f at $i") }
+    assert(sites("partitionOverwriteMode").size === 1)
+  }
 }

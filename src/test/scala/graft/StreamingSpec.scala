@@ -1622,6 +1622,71 @@ class StreamingSpec extends SparkSpecBase {
     assert(spark.read.parquet(out).count() === 0)
   }
 
+  test("writeBatch: a replay that lands fewer hours clears the hours it " +
+      "no longer writes") {
+    val out = Files.createTempDirectory("partial_hours").toString
+    val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
+    Streaming.writeBatch(Seq(
+      (1L, ts("2024-01-01 10:05:00"), 1L, "click", 1.0),
+      (2L, ts("2024-01-01 11:05:00"), 2L, "view", 2.0)).toDF(cols: _*), 1L, out)
+    assert(spark.read.parquet(out).filter(col("batch_id") === 1).count() === 2)
+    // the crash-replay of batch 1 now carries only the hour-10 row: the
+    // hour-11 partition of batch 1 is a ghost and must not keep serving
+    Streaming.writeBatch(Seq(
+      (1L, ts("2024-01-01 10:05:00"), 1L, "click", 1.0)).toDF(cols: _*), 1L, out)
+    val back = spark.read.parquet(out).filter(col("batch_id") === 1)
+    assert(back.count() === 1)
+    assert(back.select("hour").collect().map(_.getInt(0)).toSeq === Seq(10))
+  }
+
+  test("a staging left by a crash between stage and publish is invisible " +
+      "to readers, and the replay publishes only its own rows") {
+    val out = Files.createTempDirectory("stale_stage_out").toString
+    val qDir = Files.createTempDirectory("stale_stage_q").toString
+    val mDir = Files.createTempDirectory("stale_stage_m").toString
+    val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
+    val staging = graft.ops.Layouts.ReplaceStaging
+    // a fresh sink holding nothing but a crashed attempt's staging
+    val fresh = Files.createTempDirectory("stale_stage_fresh").toString
+    Seq((9L, ts("2024-01-01 09:00:00"), 9L, "click", 9.0)).toDF(cols: _*)
+      .withColumn("batch_id", lit(0L))
+      .write.partitionBy("batch_id").parquet(s"$fresh/$staging")
+    assert(!graft.ops.Layouts.hasParquetData(spark, fresh))
+    // batch 0 publishes, then the crashed attempt of batch 1 leaves
+    // different rows staged under both sinks
+    Streaming.writeValidatedBatch(Seq(
+      (1L, ts("2024-01-01 10:05:00"), 1L, "click", 1.0),
+      (2L, ts("2024-01-01 10:06:00"), 2L, "bogus", 2.0)).toDF(cols: _*),
+      0L, out, qDir, mDir)
+    Seq((100L, ts("2024-01-01 12:00:00"), 7L, "view", 3.0),
+      (101L, ts("2024-01-01 13:00:00"), 7L, "view", 4.0)).toDF(cols: _*)
+      .withColumn("year", year(col("ts"))).withColumn("month", month(col("ts")))
+      .withColumn("day", dayofmonth(col("ts"))).withColumn("hour", hour(col("ts")))
+      .withColumn("batch_id", lit(1L))
+      .write.partitionBy("year", "month", "day", "hour", "batch_id")
+      .parquet(s"$out/$staging")
+    Seq((102L, ts("2024-01-01 12:00:00"), 7L, "bogus", 5.0)).toDF(cols: _*)
+      .withColumn("reason", lit("critical_issue"))
+      .withColumn("status", lit("quarantined")).withColumn("batch_id", lit(1L))
+      .write.partitionBy("batch_id").parquet(s"$qDir/$staging")
+    assert(spark.read.parquet(out).select("event_id").collect()
+      .map(_.getLong(0)).toSeq === Seq(1L))
+    assert(spark.read.parquet(qDir).select("event_id").collect()
+      .map(_.getLong(0)).toSeq === Seq(2L))
+    // the replay of batch 1 overwrites the leftover and publishes its own
+    Streaming.writeValidatedBatch(Seq(
+      (3L, ts("2024-01-01 10:07:00"), 3L, "view", 3.0),
+      (4L, ts("2024-01-01 10:08:00"), 4L, "view", 5000.0)).toDF(cols: _*),
+      1L, out, qDir, mDir)
+    assert(spark.read.parquet(out).select("event_id").collect()
+      .map(_.getLong(0)).sorted.toSeq === Seq(1L, 3L))
+    assert(spark.read.parquet(qDir).select("event_id").collect()
+      .map(_.getLong(0)).sorted.toSeq === Seq(2L, 4L))
+    Seq(out, qDir, mDir).foreach(d =>
+      assert(!graft.ops.Layouts.exists(spark, s"$d/$staging"), d))
+    assert(graft.quality.Metrics.readMetrics(spark, mDir).count() === 2)
+  }
+
   test("writeBatch is idempotent under micro-batch replay") {
     val out = Files.createTempDirectory("replay_out").toString
     val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
