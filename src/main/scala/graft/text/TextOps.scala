@@ -383,14 +383,15 @@ object TextOps {
     * The pick is ONE `max_by` aggregation over the labeled docs — the q110
     * two-struct trick, no window, so the exchange carries |cluster| keys
     * and two small structs, never a row_number sort over the corpus. At
-    * 100 TB: labels are the converged loop output (|dup docs| rows ≪
-    * corpus), the token count joins in from a corpus projection, and the
-    * single shuffle is on cluster_id. Another [[sharedPairs]] consumer. */
+    * 100 TB: labels are the [[components]] output (|dup docs| rows ≪
+    * corpus, broadcast while they fit), the token count joins in from a
+    * corpus projection, and the single shuffle is on cluster_id. Another
+    * [[sharedPairs]] consumer. */
   def survivorshipFrom(docs: DataFrame, pairs: DataFrame): DataFrame = {
     val labels = clusterLabels(pairs)
     val toks = docs.select(col("doc_id"),
       size(tokens(col("text"))).cast("long").as("n_tokens"))
-    broadcastIfSmall(labels).join(toks, "doc_id")
+    labels.join(toks, "doc_id")
       .groupBy(col("label").as("cluster_id"))
       .agg(
         max_by(struct(col("doc_id"), col("n_tokens")),
@@ -444,7 +445,7 @@ object TextOps {
     val labels = clusterLabels(pairs)
     val base = docs.select(col("doc_id"), col("source"),
         size(tokens(col("text"))).cast("long").as("n_tokens"))
-      .join(broadcastIfSmall(labels), Seq("doc_id"), "left")
+      .join(labels, Seq("doc_id"), "left")
       .withColumn("rep", coalesce(col("label"), col("doc_id")))
       .withColumn("split_doc", hashSplit(col("doc_id")))
       .withColumn("split_cluster", hashSplit(col("rep")))
@@ -498,7 +499,7 @@ object TextOps {
   /** Curation export (q117 body): the composed doc-level decision a
     * training run actually consumes — q114's survivorship keep flag and
     * q115's cluster-safe split assignment in ONE pass over one set of
-    * converged labels, rolled up per (source, split). Per doc: kept =
+    * component labels, rolled up per (source, split). Per doc: kept =
     * unclustered OR the cluster's keeper (longest, tie → lowest doc_id);
     * split = hash of the component representative, so dropped near-dups
     * and their keeper land on the same side by construction.
@@ -518,7 +519,7 @@ object TextOps {
     val best = max(ord).over(Window.partitionBy(col("rep")))
     docs.select(col("doc_id"), col("source"),
         size(tokens(col("text"))).cast("long").as("n_tokens"))
-      .join(broadcastIfSmall(labels), Seq("doc_id"), "left")
+      .join(labels, Seq("doc_id"), "left")
       .withColumn("rep", coalesce(col("label"), col("doc_id")))
       .withColumn("kept", col("label").isNull || ord === best)
       .withColumn("split", hashSplit(col("rep")))
@@ -538,16 +539,15 @@ object TextOps {
   }
 
   /** Incremental cluster maintenance (q118 body): at corpus scale you do
-    * NOT re-cluster per ingest batch — you seed the converged old labels
-    * and propagate only the new frontier. Sound because the min-label
-    * fixpoint is history-independent: a seed is the min doc_id of the
-    * doc's OLD component, which is a member of its (only grown) new
-    * component, so seeded propagation converges to the same per-component
-    * min as a from-scratch run — which is exactly what the oracle
-    * recomputes. Convergence cost drops from component-diameter rounds to
-    * frontier-diameter rounds: pre-collapsed old components relay a
-    * bridging new doc's min in one hop ([[propagateToFixpoint]] returns
-    * the round count; the spec asserts the cut on a chain).
+    * NOT re-cluster the whole pair graph per ingest batch — you keep the
+    * old labels and merge in only the new frontier. The old labels enter
+    * as stars, one `(label, doc_id)` edge per labeled doc other than its
+    * label, and [[components]] runs over those stars plus the frontier
+    * pairs (`d2 ≥ splitId`, so at least one endpoint is new). The stars
+    * connect exactly the old components, so the result is the
+    * from-scratch per-component min, history-independent — which is
+    * exactly what the oracle recomputes — while the edge set shrinks from
+    * every old pair to one edge per old labeled doc.
     *
     * Old state here derives from the SAME pair relation restricted to
     * old×old (a real pipeline passes its materialized label table; the
@@ -555,24 +555,20 @@ object TextOps {
     * drops depend on corpus-wide frequencies). Output: q59's rollup plus
     * how many docs of each component arrived in the new batch. */
   def incrementalClustersFrom(allPairs: DataFrame, splitId: Long): DataFrame = {
-    // NOTE: deliberately NOT persisted across the two loops — the old×old
-    // closure's `d2 < splitId` filter pushes through the pair aggregation
-    // into the b-side shingle relation, so the old-labels pass computes a
-    // much SMALLER pair join than the full relation; a persist would
-    // force one full-relation materialization first and cost more
-    // cold-start than the partial recomputation it saves (measured: cold
-    // 6s -> 9s at sf0.1). A pipeline holding an already-persisted
-    // sharedPairs can still pass it in and gets reuse for free.
+    // NOTE: deliberately NOT persisted across the two passes — each
+    // side's `d2` filter pushes through the pair aggregation into the
+    // b-side shingle relation, so each pass computes a much SMALLER pair
+    // join than the full relation; a persist would force one
+    // full-relation materialization first and cost more cold-start than
+    // the partial recomputation it saves (measured: cold 6s -> 9s at
+    // sf0.1). A pipeline holding an already-persisted sharedPairs can
+    // still pass it in and gets reuse for free.
     // d1 < d2 always, so "d2 old" ⇒ both endpoints old
-    val oldLabels = clusterLabels(allPairs.filter(col("d2") < lit(splitId)))
-    val edges = propagationEdges(allPairs)
-    val init = checkpointKeepPartitioning(
-      edges.select(col("src").as("doc_id")).distinct()
-        .join(oldLabels.withColumnRenamed("label", "old_label"),
-          Seq("doc_id"), "left"))
-      .select(col("doc_id"),
-        coalesce(col("old_label"), col("doc_id")).as("label"))
-    propagateToFixpoint(edges, init)._1
+    val oldStars = clusterLabels(allPairs.filter(col("d2") < lit(splitId)))
+      .filter(col("doc_id") =!= col("label"))
+      .select(col("label").as("d1"), col("doc_id").as("d2"))
+    val frontier = nearDupEdges(allPairs.filter(col("d2") >= lit(splitId)))
+    components(oldStars.unionByName(frontier))
       .groupBy(col("label").as("cluster_id")).agg(
         count(lit(1)).as("sz"),
         concat_ws(",", array_sort(collect_list(col("doc_id")))
@@ -581,7 +577,7 @@ object TextOps {
       .orderBy(col("cluster_id"))
   }
 
-  /** q118: seeded incremental clustering over the q96 batch boundary. */
+  /** q118: incremental clustering over the q96 batch boundary. */
   def q118IncrementalClusters(spark: SparkSession, dir: String): DataFrame =
     incrementalClustersFrom(jaccardPairs(Tables.documents(spark, dir), 3), 400L)
 
@@ -605,7 +601,7 @@ object TextOps {
     val kept = ord === max(ord).over(Window.partitionBy(col("rep")))
     val bySrc = docs.select(col("doc_id"), col("source"),
         size(tokens(col("text"))).cast("long").as("n_tokens"))
-      .join(broadcastIfSmall(labels), Seq("doc_id"), "left")
+      .join(labels, Seq("doc_id"), "left")
       .withColumn("rep", coalesce(col("label"), col("doc_id")))
       .withColumn("kept", kept)
       .groupBy(col("source")).agg(
@@ -1294,171 +1290,86 @@ object TextOps {
   /** q59: near-dup cluster assignment + canonical selection — the last mile
     * of corpus dedup: pair detection (q24/q25/q38) only yields edges; the
     * pipeline needs each doc's connected component so ONE canonical doc per
-    * component survives. Components via iterative min-label propagation:
-    * every round each doc takes the min label in its neighborhood; fixpoint
-    * = components labeled by their min doc_id. Each round is one keyed join
-    * + one min-aggregation (both hash-partitioned, no global state), with
-    * `localCheckpoint` truncating the growing lineage — the same
-    * driver-orchestrated iteration contract as k-means (q43). At 100-TB
-    * scale the round count is bounded by component diameter; for web-scale
-    * graphs swap in the large-star/small-star alternation (same per-round
-    * plan shape, O(log n) rounds) — components here are tiny (≤3).
+    * component survives. Components via [[components]]: driver union-find
+    * while the edge set fits the broadcast threshold, star contraction
+    * above it; either way each component is labeled by its min doc_id.
     *
     * Oracle: transitive closure via WITH RECURSIVE + min per doc —
     * identical component labels, independently derived. */
   def q59DupClusters(spark: SparkSession, dir: String): DataFrame =
     dupClustersFrom(jaccardPairs(Tables.documents(spark, dir), 3))
 
-  /** localCheckpoint that RETAINS the plan's hash partitioning. Under AQE,
-    * `AdaptiveSparkPlanExec` reports UnknownPartitioning when the
-    * checkpoint captures the plan, so every checkpointed relation forgot
-    * its co-partitioning and downstream joins re-shuffled it — measured on
-    * q59, whose loop-invariant edge relation re-exchanged EVERY round
-    * despite the one-time repartition (the round-5 "edges shuffle once"
-    * claim was wrong until this fix). Planning this one materialization
-    * with AQE off records `hashpartitioning(...)` in the LogicalRDD; the
-    * session flag is restored immediately.
-    *
-    * Caveat: `df` must be freshly built — QueryExecution is cached on
-    * first access, so a DataFrame whose plan was already forced under AQE
-    * (an action, `.explain`, `.queryExecution.executedPlan`) will NOT
-    * replan here and the partitioning is lost anyway. */
-  def checkpointKeepPartitioning(df: DataFrame): DataFrame = {
-    val conf = df.sparkSession.conf
-    val prev = conf.get("spark.sql.adaptive.enabled", "true")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    try df.localCheckpoint()
-    finally conf.set("spark.sql.adaptive.enabled", prev)
-  }
-
-  /** One min-label-propagation round (the q59 loop body, exposed so the
-    * plan spec can pin its shape): each doc takes the min label over its
-    * neighborhood. The edge relation arrives pre-partitioned on `dst`
-    * (q59's one-time repartition + partitioning-keeping checkpoint), so
-    * the round's plan shuffles ONLY the label relation into the join and
-    * the min-agg — the loop-invariant edges never re-exchange. */
-  def labelPropRound(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val lbl = labels.select(col("doc_id").as("ldoc"), col("label"))
-    val nbrMin = edges.join(lbl, col("dst") === col("ldoc"))
-      .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
-    // output carries (doc_id, label, changed) — NOT the old label as a
-    // second alias of the same attribute: the checkpoint stores ONE
-    // partitioning expression chosen among value-equivalent aliases, and
-    // only `doc_id` (the attribute the next round clusters on) must be a
-    // candidate, or rounds ≥ 2 re-shuffle both label-side joins
-    labels.join(nbrMin, labels("doc_id") === nbrMin("src"), "left")
-      .select(labels("doc_id"),
-        least(labels("label"), coalesce(col("nbr_min"), labels("label")))
-          .as("label"),
-        (coalesce(col("nbr_min"), labels("label")) < labels("label"))
-          .as("changed"))
-  }
-
   /** q59 body over a (possibly [[sharedPairs]]-persisted) pair relation. */
   def dupClustersFrom(allPairs: DataFrame): DataFrame =
     clusterRollup(clusterLabels(allPairs))
 
-  /** Component labels for the near-dup graph at Jaccard ≥ 0.4 — the
-    * (doc_id, label) relation underneath q59's rollup, exposed so the
-    * survivorship pick (q114) and the cluster-safe split (q115) can reuse
-    * the same converged labels without re-deriving the loop. Only docs
-    * that appear in at least one edge are labeled (every label names a
-    * component of size ≥ 2). */
-  def clusterLabels(allPairs: DataFrame): DataFrame = {
-    val edges = propagationEdges(allPairs)
-    // r21: seed with the 1-hop neighborhood minimum instead of the
-    // identity. least(self, min(neighbors)) is EXACTLY what round 1 of the
-    // loop computes from an identity seed, so the fixpoint is bit-identical
-    // (a seed names a member of its own component and is ≤ doc_id — the
-    // q118 validity rule) while the loop converges one round earlier —
-    // for the shallow components of real dup graphs that is 2 rounds → 1,
-    // i.e. one checkpoint job + one count action saved per clustering
-    // query. Same single exchange as the old distinct: the min-agg rides
-    // the identical hashpartitioning(doc_id).
-    val init = checkpointKeepPartitioning(
-      edges.select(col("src").as("doc_id"), col("dst"))
-        .groupBy(col("doc_id")).agg(min(col("dst")).as("nmin")))
-      .select(col("doc_id"), least(col("doc_id"), col("nmin")).as("label"))
-    propagateToFixpoint(edges, init)._1
-  }
+  /** The near-dup graph's edges: pairs at Jaccard ≥ 0.4, as `(d1, d2)`. */
+  private def nearDupEdges(allPairs: DataFrame): DataFrame =
+    allPairs.filter(col("jaccard") >= 0.4).select(col("d1"), col("d2"))
 
-  /** Symmetrized edge relation of the Jaccard ≥ 0.4 graph, prepared for
-    * the propagation loop: hash-partitioned on the probe key ONCE, with a
-    * partitioning-KEEPING checkpoint (a plain localCheckpoint under AQE
-    * forgets outputPartitioning and re-shuffled the loop-invariant edges
-    * every round), so each round's join shuffles only the label relation. */
-  def propagationEdges(allPairs: DataFrame): DataFrame = {
-    // r21: materialize the θ-filtered edge list FIRST, with AQE on. The
-    // union below references `pairs` twice, and the partitioning-keeping
-    // checkpoint plans with AQE OFF — without this cut the whole upstream
-    // pair join ran TWICE inside that non-adaptive materialization (AQE
-    // stage reuse is what dedupes the two references; the static
-    // ReuseExchange rule only covers the subtree below the final pair
-    // aggregation). The edge list is |edges|-sized (tiny vs the pair
-    // relation), so this checkpoint is the cheapest point to cut.
-    val pairs = allPairs
-      .filter(col("jaccard") >= 0.4)
-      .select(col("d1"), col("d2"))
-      .localCheckpoint()
-    checkpointKeepPartitioning(
-      pairs.select(col("d1").as("src"), col("d2").as("dst"))
-        .unionByName(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-        .repartition(col("dst")))
-  }
+  /** Component labels for the near-dup graph — the (doc_id, label)
+    * relation underneath q59's rollup, shared by the survivorship pick
+    * (q114), the cluster-safe split (q115), the curation export (q117) and
+    * the mixture audit (q122). Only docs that appear in at least one edge
+    * are labeled (every label names a component of size ≥ 2). */
+  def clusterLabels(allPairs: DataFrame): DataFrame =
+    components(nearDupEdges(allPairs))
 
-  /** Min-label propagation to fixpoint from an arbitrary initial labeling
-    * (labels ≤ doc_id, each naming SOME doc in the same component — both
-    * the identity seed and converged old labels qualify). Returns the
-    * converged (doc_id, label) relation and the round count, so callers
-    * can assert seeding actually cut rounds. `init` must arrive
-    * checkpointed with doc_id partitioning (the distinct/loop output both
-    * do; checkpoint BEFORE aliasing so the stored partitioning names
-    * doc_id, the attribute the round's joins cluster on). */
-  def propagateToFixpoint(edges: DataFrame, init: DataFrame,
-                          maxIter: Int = 20): (DataFrame, Int) = {
-    var labels = init
-    var changed = 1L
-    var iter = 0
-    // r21 note: a count-FIRST variant (count the un-checkpointed round,
-    // checkpoint only when changed) was tried and REVERTED — under AQE
-    // the un-checkpointed count materializes as 2-3 stage jobs, so it
-    // costs MORE scheduling than checkpoint-then-count for changing
-    // rounds and breaks even on the confirming round. The loop's real
-    // saving this round is the 1-hop seed in [[clusterLabels]] (one
-    // whole round gone).
-    while (changed > 0 && iter < maxIter) {
-      val next = checkpointKeepPartitioning(labelPropRound(edges, labels))
-      changed = next.filter(col("changed")).count()
-      labels = next.select(col("doc_id"), col("label"))
-      iter += 1
+  /** Bytes per edge or label row in the broadcast size rule. */
+  private val BytesPerRow = 32L
+
+  /** Connected components of an edge relation `(d1, d2)`: one
+    * `(doc_id, label)` row per node, labeled by its component's min id.
+    * The canonical `(least, greatest)` edge set is checkpointed once and
+    * sized against the session's `autoBroadcastJoinThreshold` at
+    * [[BytesPerRow]] a row:
+    *
+    *   - at most `threshold / 32` edges: they are collected and unioned on
+    *     the driver ([[unionFind]]). The labels come back as a
+    *     broadcast-hinted local relation: Catalyst knows its size, so the
+    *     corpus ⋈ labels joins broadcast without a sizing job;
+    *   - above it: [[starComponents]] over the checkpointed set, O(log n)
+    *     distributed rounds; its labels (a plan over checkpointed RDDs,
+    *     which carry no size statistics) broadcast when their counted rows
+    *     fit the same rule.
+    *
+    * Local work while the edge set is bounded, a distributed merge above
+    * the bound — REPOSE's pattern (ICDE 2021). */
+  def components(edges: DataFrame): DataFrame = {
+    val canon = edges.select(least(col("d1"), col("d2")).as("d1"),
+      greatest(col("d1"), col("d2")).as("d2")).distinct().localCheckpoint()
+    val thr = edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val cap = thr / BytesPerRow
+    Option.when(thr > 0)(canon.limit(math.min(cap + 1, Int.MaxValue).toInt).collect())
+      .filter(_.length <= cap) match {
+      case Some(local) =>
+        broadcast(edges.sparkSession.createDataFrame(
+          unionFind(local.map(r => (r.getLong(0), r.getLong(1))))).toDF("doc_id", "label"))
+      case None =>
+        val labels = starComponents(canon)
+        if (thr > 0 && labels.count() <= cap) broadcast(labels) else labels
     }
-    // an unconverged exit would silently mis-label every component wider
-    // than the round budget — fail loudly and name the O(log n) path
-    require(changed == 0L,
-      s"label propagation did not converge in $iter rounds ($changed labels " +
-        "still changing): component diameter exceeds the round budget — " +
-        "use starComponents (O(log n) rounds) for chain-heavy graphs")
-    (labels, iter)
   }
 
-  /** Broadcast a checkpointed relation when its measured size clears the
-    * session broadcast threshold (r21). Checkpointed LogicalRDDs carry NO
-    * size statistics, so Catalyst can never auto-broadcast them: every
-    * corpus ⋈ labels join in the q114/q115/q117/q122 family planned
-    * sort-merge, exchanging + sorting the CORPUS scan to meet a
-    * |dup docs|-sized side. The row count is one cheap job over the
-    * already-checkpointed blocks; this is the statistics decision the
-    * planner would make itself if the stats existed — and above the
-    * threshold the join legitimately stays sort-merge (labels can outgrow
-    * broadcast at corpus scale), so the choice remains size-driven, not a
-    * local-mode constant. */
-  def broadcastIfSmall(rel: DataFrame, bytesPerRow: Long = 32L): DataFrame = {
-    val thr =
-      rel.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    if (thr > 0 && rel.count() * bytesPerRow <= thr) broadcast(rel) else rel
+  /** `(node, component min)` for every node of `edges`: the smaller root
+    * becomes the root of each union, so every root is its component's min.
+    * Iterative find with path halving — union-by-min can build chains as
+    * deep as the component, too deep for a recursive find. */
+  private def unionFind(edges: Array[(Long, Long)]): Seq[(Long, Long)] = {
+    val root = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (root.getOrElse(r, r) != r) { root(r) = root(root(r)); r = root(r) }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      root(ra) = ra min rb; root(rb) = ra min rb
+    }
+    root.keys.toSeq.map(k => k -> find(k))
   }
 
-  /** Per-component rollup shared by the two clustering paths (q59/q104):
+  /** Per-component rollup shared by q59 and q104:
     * (doc_id, label) → (cluster_id, size, member list, dup count). */
   def clusterRollup(labels: DataFrame): DataFrame =
     labels.groupBy(col("label").as("cluster_id")).agg(
@@ -1469,13 +1380,12 @@ object TextOps {
       .orderBy(col("cluster_id"))
 
   /** Connected components via alternating large-star / small-star edge
-    * contraction — the web-scale path [[dupClustersFrom]]'s scaladoc
-    * promises (public algorithm: Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", SoCC'14). Min-label propagation needs
-    * O(component diameter) rounds; star contraction converges in
-    * O(log n) rounds on ANY topology, which is what survives a web-scale
-    * dedup graph whose chains (A~B~C~... drift chains) can be thousands
-    * of hops long.
+    * contraction — [[components]]' branch for edge sets above the
+    * broadcast threshold (public algorithm: Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC'14). Star contraction
+    * converges in O(log n) rounds on ANY topology, which is what survives
+    * a web-scale dedup graph whose chains (A~B~C~... drift chains) can be
+    * thousands of hops long.
     *
     *   - large-star: every node points its larger-id neighbors at the
     *     minimum of its closed neighborhood (strictly decreases larger-id
@@ -1484,7 +1394,7 @@ object TextOps {
     *     onto that minimum.
     *
     * Fixpoint = star forests rooted at each component's min id — the same
-    * labels propagation converges to, so the two paths are
+    * labels the driver union-find returns, so the two branches are
     * result-interchangeable (spec-asserted) and q104 shares q59's oracle.
     *
     * Plan shape per round: each star op is ONE window-min over the
@@ -1502,7 +1412,8 @@ object TextOps {
     * cancellation needs a hash collision anyway); a colliding non-equal
     * round pair would only cost one early stop, and the oracle/specs
     * pin end-state correctness. */
-  def starComponents(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
+  def starComponents(pairs: DataFrame): DataFrame = {
+    val maxIter = 30
     def signature(e: DataFrame): (Long, Long) = {
       val r = e.agg(count(lit(1)), bit_xor(xxhash64(col("a"), col("b")))).head()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
@@ -1556,11 +1467,10 @@ object TextOps {
       sig = sig2
       iter += 1
     }
-    // same loud-failure contract as the propagation loop: a silent
-    // unconverged exit would extract labels off a non-star edge set
+    // a silent unconverged exit would extract labels off a non-star edge set
     require(converged || sig._1 == 0L,
-      s"star contraction did not converge in $iter rounds — raise maxIter " +
-        "(round count is log-bounded, so this indicates a bug, not scale)")
+      s"star contraction did not converge in $iter rounds (round count is " +
+        "log-bounded, so this indicates a bug, not scale)")
     // fixpoint is a star forest rooted at component minima: every non-root
     // carries exactly (root, v); roots label themselves
     nodes.join(edges.select(col("b").as("doc_id"), col("a").as("root")),
@@ -1568,16 +1478,14 @@ object TextOps {
       .select(col("doc_id"), coalesce(col("root"), col("doc_id")).as("label"))
   }
 
-  /** q104: q59's clustering through the O(log n)-round star-contraction
-    * path — identical output (shared oracle), different iteration
-    * algebra; the entry that driver-verifies the web-scale component
-    * algorithm end-to-end, the way q100 driver-verifies the LSH path. */
-  def q104DupClustersStar(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = jaccardPairs(Tables.documents(spark, dir), 3)
-      .filter(col("jaccard") >= 0.4)
-      .select(col("d1"), col("d2"))
-    clusterRollup(starComponents(pairs))
-  }
+  /** q104: q59's clustering forced through the star-contraction branch
+    * of [[components]] whatever the edge count — identical output (shared
+    * oracle), distributed iteration; the entry that driver-verifies the
+    * web-scale component algorithm end-to-end, the way q100
+    * driver-verifies the LSH path. */
+  def q104DupClustersStar(spark: SparkSession, dir: String): DataFrame =
+    clusterRollup(starComponents(
+      nearDupEdges(jaccardPairs(Tables.documents(spark, dir), 3))))
 
   /** q96: incremental-batch dedup gate — the admission check a continuous
     * ingestion pipeline runs on each incoming batch (here: doc_id ≥ split)
@@ -1979,9 +1887,9 @@ object TextOps {
   }
 
   /** Transitive closure via WITH RECURSIVE + min per doc — independently
-    * derived component labels; shared by q59 (min-label propagation) and
-    * q104 (star contraction), which compute the same clustering through
-    * different iteration algebras. */
+    * derived component labels; shared by q59 ([[components]], driver
+    * union-find at this scale) and q104 (star contraction), which compute
+    * the same clustering through different algorithms. */
   /** Shared CTE prefix ending at `labels` (doc_id → min-reachable
     * cluster_id): the transitive closure of the Jaccard ≥ 0.4 graph,
     * consumed by the q59/q104 rollup oracle and the label-derived q114
@@ -2120,8 +2028,9 @@ object TextOps {
       |FROM fin GROUP BY source, split ORDER BY source, split""".stripMargin
 
   /** q118 oracle: the from-scratch transitive closure — valid for the
-    * seeded incremental path because the min-label fixpoint is
-    * history-independent (see [[incrementalClustersFrom]]). */
+    * incremental path because the old label stars span exactly the old
+    * components, so its component minima are history-independent (see
+    * [[incrementalClustersFrom]]). */
   private val IncrementalClustersOracle: String =
     DupClusterLabelCtes + "\n" +
     """SELECT cluster_id, count(*) AS sz,

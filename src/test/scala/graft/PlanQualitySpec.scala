@@ -259,40 +259,12 @@ class PlanQualitySpec extends SparkSpecBase {
       p.take(3000))
   }
 
-  test("q59 label-propagation round shuffles ONLY the min-aggregation: " +
-      "checkpointed edges and labels keep their hash partitioning") {
-    import graft.text.TextOps
-    import spark.implicits._
-    val conf = spark.conf
-    val prevB = conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAB = conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-    conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", -1)
-    try {
-      val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("d1", "d2")
-      val edges = TextOps.checkpointKeepPartitioning(
-        pairs.select(col("d1").as("src"), col("d2").as("dst"))
-          .unionByName(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-          .repartition(col("dst")))
-      var labels = TextOps.checkpointKeepPartitioning(
-        edges.select(col("src").as("doc_id")).distinct())
-        .withColumn("label", col("doc_id"))
-      // round 1, and round 2 through the loop's checkpoint — partitioning
-      // must survive the round boundary, not just the initial build
-      val next = TextOps.checkpointKeepPartitioning(
-        TextOps.labelPropRound(edges, labels))
-      labels = next.select(col("doc_id"), col("label"))
-      for ((round, df) <- Seq(
-          "round2" -> TextOps.labelPropRound(edges, labels))) {
-        val p = plan(df)
-        val n = "Exchange".r.findAllIn(p).size
-        assert(n === 1,
-          s"$round: expected exactly 1 Exchange (the min-agg), got $n:\n$p")
-      }
-    } finally {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
-      conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", prevAB)
-    }
+  test("q114's component labels reach the corpus join as a broadcast " +
+      "LocalTableScan, not a scan of a checkpointed RDD") {
+    val p = plan(graft.text.TextOps.q114DedupSurvivorship(spark, Sf001))
+    assert("BroadcastExchange[^\n]*\n[^\n]*LocalTableScan".r.findFirstIn(p).nonEmpty,
+      s"labels must broadcast as a local relation:\n$p")
+    assert(!p.contains("Scan ExistingRDD"), p)
   }
 
   test("q101 takes the salted path: two aggregation stages with the salt " +

@@ -104,4 +104,24 @@ class ProfileSpec extends SparkSpecBase {
     seeds.foreach { case (f, i) => assert(inCallArgs(code(f), i), s"$f at $i") }
     assert(sites("partitionOverwriteMode").size === 1)
   }
+
+  test("one connected-components entry: starComponents is called only from " +
+      "components and q104, and no code flips AQE") {
+    val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(f => Paths.get("src/main/scala").relativize(f).toString ->
+        Files.readString(f)).toMap
+    assert(!files.values.exists(_.contains("spark.sql.adaptive.enabled")))
+    val code = files.map { case (f, text) => f -> text.linesIterator
+      .filterNot(_.trim.matches("(\\*|/\\*|//).*")).mkString("\n") }
+    // every starComponents call, by the def whose body holds it
+    val callers = code.toSeq.flatMap { case (f, text) =>
+      "starComponents\\(".r.findAllMatchIn(text).map(_.start)
+        .filterNot(i => text.lastIndexOf("def starComponents", i) == i - 4)
+        .map(i => f -> "def (\\w+)".r.findAllMatchIn(text.take(i)).toSeq.last.group(1))
+    }
+    assert(callers.sorted === Seq(
+      "graft/text/TextOps.scala" -> "components",
+      "graft/text/TextOps.scala" -> "q104DupClustersStar"))
+  }
 }

@@ -385,45 +385,53 @@ class TextOpsSpec extends SparkSpecBase {
     } finally pairs.unpersist()
   }
 
-  test("starComponents: agrees with min-label propagation on mixed topologies " +
-      "and converges on chains far beyond the propagation round cap") {
+  test("components: the driver union-find and the forced star branch give " +
+      "identical min-id labels on every topology, a 200-node chain included") {
     import spark.implicits._
-    // path 0..15 (diameter within the propagation loop's 20-round cap),
-    // clique {200..204}, isolated pair (300,301) — edges in shuffled order
+    // path 0..15, clique {200..204}, isolated pair (300,301) — edges in
+    // shuffled order
     val path = (0L until 15L).map(i => (i, i + 1))
     val clique = for (a <- 200L to 204L; b <- (a + 1) to 204L) yield (a, b)
     val pairEdge = Seq((300L, 301L))
-    val edges = scala.util.Random.shuffle(path ++ clique ++ pairEdge)
-      // feed some edges reversed: the contraction must not assume d1 < d2
+    val mixed = scala.util.Random.shuffle(path ++ clique ++ pairEdge)
+      // feed some edges reversed: neither branch may assume d1 < d2
       .map { case (a, b) => if ((a + b) % 3 == 0) (b, a) else (a, b) }
-    val pairs = edges.toDF("d1", "d2")
-    val star = graft.text.TextOps.starComponents(pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val prop = graft.text.TextOps
-      .dupClustersFrom(pairs.withColumn("jaccard", lit(1.0)))
-      .collect()
-      .flatMap(r => r.getAs[String]("members").split(",")
-        .map(m => m.toLong -> r.getAs[Long]("cluster_id"))).toMap
-    assert(star === prop, "star contraction and propagation disagree")
-    assert((0L to 15L).forall(star(_) == 0L))
-    assert((200L to 204L).forall(star(_) == 200L))
-    assert(star(301L) === 300L)
-    // a 200-node chain: diameter 199 ≫ the propagation cap (20 rounds) and
-    // ≫ starComponents' own maxIter (30) — only an O(log n)-round
-    // algorithm labels it correctly within the iteration budget
-    val chain = (0L until 199L).map(i => (i, i + 1)).toDF("d1", "d2")
-    val chainLabels = graft.text.TextOps.starComponents(chain)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(chainLabels.length === 200)
-    assert(chainLabels.forall(_._2 == 0L),
-      s"chain not fully contracted: ${chainLabels.filter(_._2 != 0L).take(5).toSeq}")
-    // the propagation loop must REFUSE the same graph rather than emit
-    // silently-unconverged labels (its round budget < the chain diameter)
-    val ex = intercept[IllegalArgumentException] {
-      graft.text.TextOps
-        .dupClustersFrom(chain.withColumn("jaccard", lit(1.0))).collect()
+    // diameter 199 ≫ starComponents' round budget (30): only O(log n)
+    // rounds label it within budget
+    val chain = (0L until 199L).map(i => (i, i + 1))
+    val inputs = Seq(
+      "mixed" -> mixed,
+      "chain" -> chain,
+      "no edges" -> Seq.empty[(Long, Long)],
+      "one edge" -> Seq((7L, 3L)),
+      "duplicated and reversed" -> Seq((1L, 2L), (2L, 1L), (1L, 2L), (3L, 2L), (2L, 3L)))
+    def run(): Seq[(String, Map[Long, Long], String)] = inputs.map { case (name, es) =>
+      val labels = TextOps.components(es.toDF("d1", "d2"))
+      (name, labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap,
+        labels.queryExecution.optimizedPlan.toString)
     }
-    assert(ex.getMessage.contains("starComponents"), ex.getMessage)
+    val conf = spark.conf
+    val prev = conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val driver = run()
+    val star =
+      try { conf.set("spark.sql.autoBroadcastJoinThreshold", -1); run() }
+      finally conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    // the default threshold takes the driver branch, -1 the star branch
+    assert(driver.head._3.contains("LocalRelation"), driver.head._3)
+    assert(!star.head._3.contains("LocalRelation"), star.head._3)
+    assert(driver.map(d => d._1 -> d._2) === star.map(s => s._1 -> s._2),
+      "driver union-find and star contraction disagree")
+    val m = driver.map(d => d._1 -> d._2).toMap
+    assert((0L to 15L).forall(m("mixed")(_) == 0L))
+    assert((200L to 204L).forall(m("mixed")(_) == 200L))
+    assert(m("mixed")(301L) === 300L)
+    assert(m("mixed").size === 16 + 5 + 2)
+    assert(m("chain").size === 200)
+    assert(m("chain").values.forall(_ == 0L),
+      s"chain not fully contracted: ${m("chain").filter(_._2 != 0L).take(5)}")
+    assert(m("no edges").isEmpty)
+    assert(m("one edge") === Map(3L -> 3L, 7L -> 3L))
+    assert(m("duplicated and reversed") === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
 
   test("sourceOverlapFrom: cross- and within-source dup pairs land on the " +
@@ -529,9 +537,8 @@ class TextOpsSpec extends SparkSpecBase {
   }
 
   test("incremental clustering: a bridging new doc merges old components " +
-      "into the from-scratch fixpoint, and seeding cuts rounds") {
+      "into the from-scratch components") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
     // old corpus (< 400): chain 0-1-…-8 (diameter 8) and pair {100,101};
     // new batch doc 400 bridges 8 and 100 — all three merge under min 0
     val pairs = ((0L until 8L).map(i => (i, i + 1)) ++
@@ -542,23 +549,6 @@ class TextOpsSpec extends SparkSpecBase {
         r.getAs[String]("members"), r.getAs[Long]("n_new")))
     assert(out.toSeq === Seq(
       (0L, 12L, "0,1,2,3,4,5,6,7,8,100,101,400", 1L)))
-    // the seeding claim is measurable: from-scratch pays ~diameter rounds
-    // on the old chain; seeded starts from its converged labels and only
-    // relays the bridge
-    val edges = graft.text.TextOps.propagationEdges(pairs)
-    val scratchInit = graft.text.TextOps.checkpointKeepPartitioning(
-        edges.select(col("src").as("doc_id")).distinct())
-      .withColumn("label", col("doc_id"))
-    val old = graft.text.TextOps.clusterLabels(pairs.filter(col("d2") < 400L))
-    val seededInit = graft.text.TextOps.checkpointKeepPartitioning(
-        edges.select(col("src").as("doc_id")).distinct()
-          .join(old.withColumnRenamed("label", "old_label"), Seq("doc_id"), "left"))
-      .select(col("doc_id"),
-        coalesce(col("old_label"), col("doc_id")).as("label"))
-    val (_, roundsScratch) = graft.text.TextOps.propagateToFixpoint(edges, scratchInit)
-    val (_, roundsSeeded) = graft.text.TextOps.propagateToFixpoint(edges, seededInit)
-    assert(roundsSeeded < roundsScratch,
-      s"seeded $roundsSeeded !< scratch $roundsScratch")
   }
 
   test("curation export: keeper survives, dropped near-dups follow it into " +
